@@ -2,17 +2,23 @@
 
 The reference processes one page per goroutine (engine.go:306-402,
 pipeline.go:225-304); here a whole crawl round's pages are one DataFrame and
-extraction is a single `mapInPandas` pass: each Arrow batch is parsed and
-extracted in one Python call (input_hint: vectorized pandas/Arrow UDFs, no
-per-row Python crossings).
+extraction is a single `mapInArrow` pass: each Arrow batch is parsed,
+extracted and run through its Python transform chains in one Python call,
+Arrow in and Arrow out (input_hint: vectorized Arrow UDFs, no per-row
+Python crossings, no pandas layer on either side).
 
 Scale notes:
 - `html` is the fat column. Catalyst prunes it everywhere except this one
   projection, and the UDF drops it on output unless asked to keep it —
   downstream stages (dedup, scheduling) never shuffle page bodies.
+  Passthrough columns go from the input batch to the output batch as Arrow
+  arrays; only one a transform chain targets is converted to Python.
 - The UDF is schema-stable: output StructType is derived from the field
   config at plan time (config-declared schema, like the reference's YAML
   fields list — config.go:35 — but statically typed).
+- Transform chains that have no Catalyst form (functions/transforms.py) run
+  here, on the batch's columns after extraction, instead of as a second
+  Python crossing per chain.
 """
 
 from __future__ import annotations
@@ -20,11 +26,14 @@ from __future__ import annotations
 import json as _json
 from typing import Any, Iterator
 
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_type
 
+from ..functions.transforms import chain_or_null, validate_rules
 from ..html import parse_html
 from .config import FieldConfig
 from .fields import extract_all, get_default_value
@@ -130,26 +139,39 @@ def extract_fields_df(
     html_col: str = "html",
     continue_on_error: bool = True,
     keep_html: bool = False,
+    chains: dict[str, list[dict]] | None = None,
 ) -> DataFrame:
     """Run config-driven extraction over `df[html_col]` (binary or string).
 
     Adds one typed column per field plus `_errors` / `_success`; drops the
-    html column by default so downstream shuffles stay narrow.
+    html column by default so downstream shuffles stay narrow. `chains`
+    maps a string column (an extracted field or a passthrough input column)
+    to a transform chain that runs on the batch after extraction, with the
+    Python port's semantics: NULL stays NULL and a failing chain gives NULL.
     """
     for cfg in fields:
         cfg.validate()
+    chains = chains or {}
     out_schema = extraction_output_schema(df.schema, fields, keep_html, html_col)
-    out_names = [f.name for f in out_schema.fields]
+    for col, rules in chains.items():
+        validate_rules(rules)
+        if col not in out_schema.names:
+            raise ValueError(f"transform chain on unknown column {col!r}")
+        if out_schema[col].dataType != T.StringType():
+            raise ValueError(
+                f"transform chain on non-string column {col!r} "
+                f"({out_schema[col].dataType.simpleString()})")
+    arrow_types = {f.name: to_arrow_type(f.dataType) for f in out_schema.fields}
+    out_names = out_schema.names
     fields_local = fields  # close over plain dataclasses (picklable)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            n = len(pdf)
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            n = batch.num_rows
             cols: dict[str, list] = {cfg.name: [None] * n for cfg in fields_local}
             errs, succ = [None] * n, [True] * n
-            htmls = pdf[html_col]
-            for i in range(n):
-                doc = parse_html(htmls.iloc[i] or "")
+            for i, html in enumerate(batch.column(html_col).to_pylist()):
+                doc = parse_html(html or "")
                 data, errors, success = extract_all(
                     doc, fields_local, continue_on_error
                 )
@@ -163,19 +185,29 @@ def extract_fields_df(
                     for e in errors
                 ]
                 succ[i] = success
-            out = {}
+            cols["_errors"], cols["_success"] = errs, succ
+            for col, rules in chains.items():
+                vals = cols[col] if col in cols else \
+                    batch.column(col).to_pylist()
+                cols[col] = [chain_or_null(rules, v) for v in vals]
+            arrays = []
             for name in out_names:
                 if name in cols:
-                    out[name] = cols[name]
-                elif name == "_errors":
-                    out[name] = errs
-                elif name == "_success":
-                    out[name] = succ
+                    arrays.append(pa.array(cols[name], arrow_types[name],
+                                           from_pandas=True))
                 else:
-                    out[name] = pdf[name]
-            yield pd.DataFrame(out, columns=out_names)
+                    arrays.append(_nan_to_null(batch.column(name)))
+            yield pa.RecordBatch.from_arrays(arrays, names=out_names)
 
-    return df.mapInPandas(run, schema=out_schema)
+    return df.mapInArrow(run, schema=out_schema)
+
+
+def _nan_to_null(arr: pa.Array) -> pa.Array:
+    """NaN -> NULL in a floating passthrough column, as `from_pandas=True`
+    does for the extracted number cells."""
+    if not pa.types.is_floating(arr.type) or not pc.any(pc.is_nan(arr)).as_py():
+        return arr
+    return pc.if_else(pc.is_nan(arr), pa.scalar(None, arr.type), arr)
 
 
 def extraction_metrics(results: DataFrame,

@@ -16,7 +16,9 @@ Two surfaces, one source of truth:
     rule in the chain is Catalyst-expressible with exact parity, it emits a
     native expression chain (whole-stage codegen, no Python at all). One
     non-native rule anywhere makes the whole chain a single Arrow-batched
-    pandas UDF (still no per-row Python).
+    pandas UDF (still no per-row Python). `native_chain` exposes the split:
+    the pipeline runs chains without a native form inside the extraction
+    batch (extract/engine.py) rather than through the UDF.
 
 Error semantics: Go aborts the chain with an error -> the field extraction
 fails. Spark surface maps "chain failed" to NULL (errors are tracked
@@ -410,32 +412,48 @@ def _re2_java_safe(pattern: str) -> bool:
     return not re.search(r"\\[pP]\{[^}]*\}|\(\?[^:=!<]", pattern)
 
 
+def native_chain(rules: list[dict]) -> Callable[[Column], Column] | None:
+    """The chain as pure Catalyst expressions (whole-stage codegen), or
+    None when any rule needs the exact Python port."""
+    validate_rules(rules)
+    native = [_native_rule(r) for r in rules]
+    if any(fn is None for fn in native):
+        return None
+
+    def col_fn(c: Column) -> Column:
+        for fn in native:
+            c = fn(c)
+        return c
+    return col_fn
+
+
+def chain_or_null(rules: list[dict], v: str | None) -> str | None:
+    """`apply_chain` with the Spark surface's error mapping: NULL in gives
+    NULL out, and a chain error gives NULL."""
+    if v is None:
+        return None
+    try:
+        return apply_chain(rules, v)
+    except TransformError:
+        return None
+
+
 def compile_chain(rules: list[dict]) -> Callable[[Column], Column]:
     """Compile a transform chain to a Column function.
 
-    All-native chain -> pure Catalyst expressions (whole-stage codegen).
+    All-native chain -> pure Catalyst expressions (`native_chain`).
     Otherwise -> ONE Arrow-batched pandas UDF running the exact Python port
-    (chain error -> NULL)."""
-    validate_rules(rules)
-    native = [_native_rule(r) for r in rules]
-    if all(fn is not None for fn in native):
-        def col_fn(c: Column) -> Column:
-            for fn in native:
-                c = fn(c)
-            return c
+    (chain error -> NULL). The UDF is the path for chains applied on their
+    own; after extraction, `extract_fields_df(..., chains=...)` runs them
+    inside the extraction batch instead, with no second Python crossing."""
+    col_fn = native_chain(rules)
+    if col_fn is not None:
         return col_fn
 
     frozen = [dict(r) for r in rules]
 
     @pandas_udf("string")
     def chain_udf(s: pd.Series) -> pd.Series:
-        def run(v):
-            if v is None:
-                return None
-            try:
-                return apply_chain(frozen, v)
-            except TransformError:
-                return None
-        return s.map(run)
+        return s.map(lambda v: chain_or_null(frozen, v))
 
     return lambda c: chain_udf(c)

@@ -17,6 +17,12 @@ Grammar:
 
 Matching returns elements in document order, deduplicated (goquery
 semantics for Find on multiple roots).
+
+On a document root (a parentless Node) the first compound of each
+sequence takes its candidates from the document's cached tag buckets
+(dom.DocIndex) rather than a walk of the whole tree, and the document-order
+sort reuses the cached positions. Selecting under a subtree root walks
+that subtree.
 """
 
 from __future__ import annotations
@@ -157,7 +163,13 @@ def _match_seq(root: Node, seq: list[tuple[str, Compound]]) -> list[Node]:
     """Match one combinator sequence under `root` (root excluded)."""
     # current candidate set starts as all descendants matching seq[0]
     _, first = seq[0]
-    current = [n for n in root.iter_elements() if first.matches(n)]
+    if root.parent is None:
+        index = root.doc_index()
+        pool = (index.elements if first.tag in (None, "*")
+                else index.by_tag.get(first.tag, ()))
+    else:
+        pool = root.iter_elements()
+    current = [n for n in pool if first.matches(n)]
     for combinator, compound in seq[1:]:
         nxt: list[Node] = []
         seen = set()
@@ -174,10 +186,6 @@ def _match_seq(root: Node, seq: list[tuple[str, Compound]]) -> list[Node]:
     return current
 
 
-def _doc_order(root: Node) -> dict[int, int]:
-    return {id(n): i for i, n in enumerate(root.iter_elements())}
-
-
 def select(root: Node, selector: str) -> list[Node]:
     """All elements under `root` matching `selector`, in document order."""
     groups = parse_selector(selector)
@@ -188,12 +196,12 @@ def select(root: Node, selector: str) -> list[Node]:
             if id(n) not in seen:
                 seen.add(id(n))
                 out.append(n)
-    # a single one-compound group emits in iter_elements (= document) order
-    # already; only multi-group / multi-step results need the re-walk sort
+    # a single one-compound group emits in document order (walk or bucket)
+    # already; only multi-group / multi-step results need the position sort
     needs_sort = len(groups) > 1 or any(len(seq) > 1 for seq in groups)
     if needs_sort and len(out) > 1:
-        order = _doc_order(_topmost(root))
-        out.sort(key=lambda n: order.get(id(n), 1 << 30))
+        order = _topmost(root).doc_index().pos
+        out.sort(key=lambda n: order[id(n)])
     return out
 
 

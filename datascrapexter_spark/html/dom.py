@@ -17,6 +17,11 @@ engine.go:512-517 parses with goquery.NewDocumentFromReader):
 - `.text()` concatenates all descendant text verbatim (goquery .Text());
 - `.inner_html()` re-serializes children with net/html's escaping
   (&amp; &#39; &lt; &gt; &#34; in text; same set in attribute values).
+
+A parsed document does not change after `parse_html` returns: nothing in
+the package appends to, removes from or re-parents a parsed tree. The
+selector engine relies on this: a parentless root caches its `DocIndex`
+(document order + tag buckets) on first use and never rebuilds it.
 """
 
 from __future__ import annotations
@@ -45,7 +50,7 @@ _AUTO_CLOSE = {
 
 
 class Node:
-    __slots__ = ("tag", "attrs", "children", "parent", "text_data")
+    __slots__ = ("tag", "attrs", "children", "parent", "text_data", "_index")
 
     def __init__(self, tag: str | None, attrs: dict | None = None,
                  text_data: str | None = None):
@@ -54,6 +59,7 @@ class Node:
         self.children: list[Node] = []
         self.parent: Node | None = None
         self.text_data = text_data
+        self._index: DocIndex | None = None
 
     @property
     def is_text(self) -> bool:
@@ -93,6 +99,13 @@ class Node:
                 yield n
                 stack.extend(reversed(n.children))
 
+    def doc_index(self) -> "DocIndex":
+        """The element index of this document; built on first use and
+        cached, so only valid on a parentless root of a finished tree."""
+        if self._index is None:
+            self._index = DocIndex(self)
+        return self._index
+
     def element_children(self) -> list["Node"]:
         return [c for c in self.children if not c.is_text]
 
@@ -106,6 +119,28 @@ class Node:
         if self.is_text:
             return f"Text({self.text_data!r})"
         return f"<{self.tag} {self.attrs}>"
+
+
+class DocIndex:
+    """A document's elements in document order, tag -> elements (document
+    order within a tag), and each element's position by id (built on the
+    first document-order sort)."""
+
+    __slots__ = ("elements", "by_tag", "_pos")
+
+    def __init__(self, root: Node):
+        self.elements = list(root.iter_elements())
+        by_tag: dict[str, list[Node]] = {}
+        for n in self.elements:
+            by_tag.setdefault(n.tag, []).append(n)
+        self.by_tag = by_tag
+        self._pos: dict[int, int] | None = None
+
+    @property
+    def pos(self) -> dict[int, int]:
+        if self._pos is None:
+            self._pos = {id(n): i for i, n in enumerate(self.elements)}
+        return self._pos
 
 
 def _escape_text(s: str) -> str:

@@ -18,9 +18,11 @@ into shared whole-stage-codegen spans, so per-stage timing is not an
 observable quantity in this execution model.
 
 Scale: the composition adds nothing on top of its parts — extraction is
-the one Arrow crossing, transforms are codegen (or one pandas UDF per
-non-native chain), validation is pure codegen, dedup is the digest-keyed
-shuffle, enrichment is a (broadcastable) keyed join. Observations are
+the one Arrow crossing per page batch, and transform chains with no
+Catalyst form run inside it (extract/engine.py); the rest of the
+transforms are codegen, validation is pure codegen, dedup is the
+digest-keyed shuffle, enrichment is a (broadcastable) keyed join. Without
+extraction, a non-native chain is one pandas UDF. Observations are
 driver-side accumulator merges, O(stages), independent of data size.
 """
 
@@ -34,7 +36,7 @@ from pyspark.sql import functions as F
 from ..extract.engine import extract_fields_df
 from ..extract.fields import FieldConfig
 from ..extract.validation import ValidationRule, validate_df
-from ..functions.transforms import compile_chain
+from ..functions.transforms import compile_chain, native_chain
 from .dedup import exact_dedup
 from .enrich import enrich
 
@@ -84,18 +86,27 @@ def process_pipeline(df: DataFrame, cfg: PipelineConfig) -> PipelineRun:
     run = PipelineRun(df=df)
 
     def observed(stage: str, d: DataFrame, *extra: Column) -> DataFrame:
-        o = Observation(stage)
+        # unnamed (UUID) observation: Spark registers an observation under
+        # (name, Dataset) once, so a stage-named one on an input shared with
+        # an earlier, never-executed pipeline would never receive metrics
+        o = Observation()
         run.observations[stage] = o
         return d.observe(o, F.count(F.lit(1)).alias("rows"), *extra)
 
+    transforms = cfg.transforms or {}
+    # chains with no Catalyst form run inside the extraction batch
+    in_batch = ({col: rules for col, rules in transforms.items()
+                 if native_chain(rules) is None} if cfg.fields else {})
     out = observed("input", df)
     if cfg.fields:
         out = observed("extraction",
                        extract_fields_df(out, cfg.fields,
-                                         html_col=cfg.html_col))
-    if cfg.transforms:
-        for col, rules in sorted(cfg.transforms.items()):
-            out = out.withColumn(col, compile_chain(rules)(F.col(col)))
+                                         html_col=cfg.html_col,
+                                         chains=in_batch))
+    if transforms:
+        for col, rules in sorted(transforms.items()):
+            if col not in in_batch:
+                out = out.withColumn(col, compile_chain(rules)(F.col(col)))
         out = observed("transformation", out)
     if cfg.validation_rules:
         out = observed(

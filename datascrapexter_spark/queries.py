@@ -88,8 +88,8 @@ def loadw(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     dominates. Queries that are one cheap scan + keyed agg/window use
     plain `load`: for them the spread's extra exchange costs more than
     single-task decode of a bench-sized file (measured: q01 0.54->1.08 s
-    when spread unconditionally, q10 4.02->1.18 s with it where it
-    belongs)."""
+    when spread unconditionally; q99's shingle collapse 5.35->2.19 s with
+    it, where it belongs)."""
     return _spread(load(spark, sf_dir, table), spark)
 
 
@@ -320,7 +320,7 @@ def _doc_html_col() -> Column:
 
 def q12_field_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Config-driven CSS field extraction (the reference's core query):
-    one mapInPandas pass, schema derived from the field config at plan time."""
+    one mapInArrow pass, schema derived from the field config at plan time."""
     docs = loadw(spark, sf_dir, "documents")
     pages = docs.select("doc_id", _doc_html_col().alias("html"))
     fields = [
@@ -1359,7 +1359,7 @@ def q78_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q79_outline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Heading-outline extraction (`type: outline`, the 26th field type):
     h1-h6 collected in document order as (level, text) rows — TOC /
-    section-chunking structure signal; one mapInPandas crossing, then a
+    section-chunking structure signal; one mapInArrow crossing, then a
     posexplode back to relational rows."""
     docs = loadw(spark, sf_dir, "documents").select("doc_id")
     d = F.col("doc_id")

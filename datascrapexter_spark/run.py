@@ -5,7 +5,7 @@ Reference flow (cmd/datascrapexter/main.go:28-158 → scraper.Engine.Scrape):
 load config → validate → build engine → fetch+extract per URL → output.
 Here: config compiles to (seed frontier + politeness config + extraction
 plan); the fetch is the pages-table join inside CrawlEngine rounds; the
-extraction is one mapInPandas pass over everything fetched; output goes
+extraction is one mapInArrow pass over everything fetched; output goes
 through the sink dispatch. DOM-free pagination (offset/pages/url_pattern)
 expands into the seed list up front; next_button pagination follows its
 selector as the crawl's link selector (the round loop generalizes the
@@ -130,7 +130,7 @@ def run_scrape_job(
         fetched, cfg.fields, continue_on_error=cfg.continue_on_error
     )
     # the metrics write, the output write, and the returned DataFrame all
-    # consume `results` — persist so the mapInPandas HTML-extraction stage
+    # consume `results` — persist so the mapInArrow HTML-extraction stage
     # (the job's most expensive) materializes exactly once
     results = results.persist()
     # per-field success/error counters persisted next to the crawl's

@@ -344,3 +344,21 @@ def test_outline_field_type(spark):
         pages, [FieldConfig(name="toc", selector="div h3", type="outline")])
     srows = {r["doc_id"]: r["toc"] for r in scoped.collect()}
     assert [(h["level"], h["text"]) for h in srows[1]] == [("3", "Deep")]
+
+
+def test_passthrough_columns_keep_values_nan_becomes_null(spark):
+    """Input columns other than html pass through the extraction batch
+    unchanged, except that a floating NaN comes out NULL, as the number
+    cells do."""
+    from datascrapexter_spark.extract.config import FieldConfig
+    from datascrapexter_spark.extract.engine import extract_fields_df
+
+    pages = spark.createDataFrame(
+        [(1, float("nan"), ["a"], "<p>x</p>"), (2, 1.5, None, "<p>y</p>"),
+         (3, None, [], None)],
+        "doc_id long, score double, tags array<string>, html string")
+    out = extract_fields_df(pages, [FieldConfig(name="p", selector="p")])
+    assert out.columns == ["doc_id", "score", "tags", "p", "_errors",
+                           "_success"]
+    rows = sorted(tuple(r)[:4] for r in out.collect())
+    assert rows == [(1, None, ["a"], "x"), (2, 1.5, None, "y"), (3, None, [], "")]

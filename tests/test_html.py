@@ -106,3 +106,103 @@ def test_class_multi():
     assert len(select(doc, ".b")) == 1
     assert len(select(doc, "div.a.c")) == 1
     assert select(doc, "div")[0].has_class("b")
+
+
+# -- indexed select vs a plain walk ------------------------------------------
+
+PARITY_HTML = """
+<html><head><title>T</title><base href="/b/"></head>
+<body id="main">
+  <div class="a c"><p>one</p><div class="b"><p class="x">two</p>
+    <span data-k="abc">s</span></div><p>three</p></div>
+  <ul class="outer"><li>a</li><li class="x">b<ul><li>b1</li><li>b2</li>
+    </ul></li><li>c</li></ul>
+  <table class="t1"><tr><th>h1</th><th>h2</th></tr>
+    <tr><td>1</td><td>2</td></tr><tr><td>3</td><td>4</td></tr></table>
+  <table class="t2"><thead><tr><th>k</th></tr></thead>
+    <tbody><tr><td>v</td></tr></tbody>
+    <tr><td>stray</td></tr></table>
+  <a href="/x" rel="nofollow">A</a><a href="/y">B</a><a>no href</a>
+  <div><div><p>deep</p></div></div>
+</body></html>
+"""
+
+PARITY_SELECTORS = [
+    "p", "li", "td", "a", "*", "nosuch",
+    ".x", ".b", "div.a.c", "[href]", "a[href]", "a[rel='nofollow']",
+    "[data-k^=ab]", "#main", "#main p",
+    "div p", "ul li", "ul.outer li", "ul li ul li", "div > p",
+    "ul > li", "body > div > p", "div div p", "table tr td", "div nosuch",
+    "td, th", "h1, .x, li", "p, div p", "thead tr th, tbody tr:first-child "
+    "th, tr:first-child th", "tbody tr, tr",
+    "li:first-child", "tr:first-child th", "li:nth-child(2)",
+    "ul li:nth-child(3)", "tr:last-child td",
+    "tbody", "tbody tr", "table > tbody > tr", "tbody tr td",
+]
+
+
+def _walk_matches(node, seq, root) -> bool:
+    """Right-to-left match of one combinator sequence, every ancestor
+    strictly inside `root`."""
+    combinator, compound = seq[-1]
+    if not compound.matches(node):
+        return False
+    if len(seq) == 1:
+        return True
+    parent = node.parent
+    if combinator == "child":
+        return (parent is not None and parent is not root
+                and _walk_matches(parent, seq[:-1], root))
+    while parent is not None and parent is not root:
+        if _walk_matches(parent, seq[:-1], root):
+            return True
+        parent = parent.parent
+    return False
+
+
+def _walk_select(root, selector):
+    """Oracle: a plain document-order walk of `root`'s subtree, no index."""
+    from datascrapexter_spark.html.css import parse_selector
+
+    groups = parse_selector(selector)
+    return [n for n in root.iter_elements()
+            if any(_walk_matches(n, seq, root) for seq in groups)]
+
+
+def _parity_docs():
+    from tests.webgen import make_web
+
+    pages, _, _ = make_web(n_hosts=2, pages_per_host=4)
+    return [PARITY_HTML, BASIC_HTML] + [html for _, _, html, _, _ in pages]
+
+
+def test_indexed_select_matches_walk_on_document_and_subtree_roots():
+    for html in _parity_docs():
+        doc = parse_html(html)
+        subtrees = [n for n in doc.iter_elements()
+                    if n.tag in ("html", "body", "div", "ul", "table", "tr")]
+        for sel in PARITY_SELECTORS:
+            for root in [doc] + subtrees:
+                got = select(root, sel)
+                assert [id(n) for n in got] == \
+                    [id(n) for n in _walk_select(root, sel)], (sel, root)
+        assert doc.doc_index() is doc.doc_index()   # built once, cached
+    # implied tbody: one for the bare rows of t1, a second for t2's stray row
+    doc = parse_html(PARITY_HTML)
+    assert [n.text() for n in select(doc, "table.t1 > tbody > tr > td")] \
+        == ["1", "2", "3", "4"]
+    assert len(select(doc, "table.t2 > tbody")) == 2
+
+
+def test_extract_links_df_matches_walk_select(spark, monkeypatch):
+    from datascrapexter_spark.frontier import links
+    from tests.webgen import make_web
+
+    pages, _, _ = make_web(n_hosts=3, pages_per_host=6)
+    df = spark.createDataFrame([(u, h) for u, _, h, _, _ in pages],
+                               "url_canon string, html binary")
+    got = sorted((r[0], r[1]) for r in links.extract_links_df(df).collect())
+    monkeypatch.setattr(links, "select", _walk_select)
+    want = sorted((u, o) for u, _, h, _, _ in pages
+                  for o in links.extract_links_py(h, u))
+    assert got == want and got

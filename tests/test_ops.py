@@ -758,6 +758,154 @@ def test_process_pipeline_stages_and_observed_metrics(spark):
     assert set(run3.metrics()) == {"input", "extraction"}
 
 
+def _product_pages():
+    """(doc_id, url, html) pages covering text/number/list/count/table
+    fields, a missing price, an unparsable price and an implied tbody."""
+    def page(i, name, brand, price, feats, reviews, specs):
+        price_html = f"<span class='price'>{price}</span>" if price else ""
+        return (i, f" https://shop.example.com/p/{i} ",
+                f"<html><body><h1 class='n'>  {name} </h1>"
+                f"<div class='brand'> {brand} </div>{price_html}"
+                "<ul class='features'>"
+                + "".join(f"<li>{f}</li>" for f in feats) + "</ul>"
+                + "".join(f"<div class='review'>{r}</div>" for r in reviews)
+                + f"<table class='specs'>{specs}</table></body></html>")
+
+    return [
+        page(1, "alpha one", "acme  corp", "$3.50", ["red", "big"], ["ok"],
+             "<thead><tr><th>k</th><th>v</th></tr></thead>"
+             "<tbody><tr><td>w</td><td>1</td></tr></tbody>"),
+        page(2, "beta two", "globex", "N/A", [], ["a", "b", "c"],
+             "<tr><td>h</td><td>2</td></tr><tr><td>d</td><td>3</td></tr>"),
+        page(3, "gamma", "initech ltd", None, ["x"], [], ""),
+    ]
+
+
+def _batch_cfg():
+    from datascrapexter_spark.extract.fields import FieldConfig
+
+    fields = [
+        FieldConfig(name="name", selector="h1.n"),
+        FieldConfig(name="brand", selector="div.brand"),
+        FieldConfig(name="price_text", selector="span.price"),
+        FieldConfig(name="price", selector="span.price", type="number"),
+        FieldConfig(name="features", selector="ul.features li", type="list"),
+        FieldConfig(name="n_reviews", selector="div.review", type="count"),
+        FieldConfig(name="specs", selector="table.specs", type="table"),
+    ]
+    transforms = {
+        "name": [{"type": "trim"}, {"type": "uppercase"}],          # native
+        "brand": [{"type": "normalize_spaces"},
+                  {"type": "title_case"}],                           # Python
+        # Python, on a passthrough column
+        "url": [{"type": "trim"}, {"type": "title_case"}],
+        # Python; parse_float fails on "N/A"
+        "price_text": [{"type": "title_case"}, {"type": "parse_float"}],
+    }
+    return fields, transforms
+
+
+def test_pipeline_python_chains_match_rowwise_port(spark):
+    """Python chains applied inside the extraction batch give the cells of
+    row-wise parse_html + extract_all + apply_chain, on extracted fields
+    and on a passthrough column, with NULL for a failing chain; native
+    chains stay Catalyst expressions."""
+    from datascrapexter_spark.extract.fields import (extract_all,
+                                                     get_default_value)
+    from datascrapexter_spark.functions.transforms import (TransformError,
+                                                           apply_chain)
+    from datascrapexter_spark.html import parse_html
+    from datascrapexter_spark.ops.pipeline import (PipelineConfig,
+                                                   process_pipeline)
+
+    rows = _product_pages()
+    fields, transforms = _batch_cfg()
+    df = spark.createDataFrame(rows, "doc_id long, url string, html string")
+    run = process_pipeline(df, PipelineConfig(fields=fields,
+                                              transforms=transforms))
+    got = {r["doc_id"]: r.asDict(recursive=True) for r in run.df.collect()}
+
+    want = {}
+    for doc_id, url, html in rows:
+        data, errors, success = extract_all(parse_html(html), fields, True)
+        rec = {"doc_id": doc_id, "url": url}
+        for c in fields:
+            rec[c.name] = data[c.name] if c.name in data \
+                else get_default_value(c)
+        for col, rules in transforms.items():
+            try:
+                rec[col] = apply_chain(rules, rec[col])
+            except TransformError:
+                rec[col] = None
+        rec["_errors"] = [{"field": e.field_name, "message": e.message,
+                           "code": e.code, "severity": e.severity}
+                          for e in errors]
+        rec["_success"] = success
+        want[doc_id] = rec
+    assert got == want
+    assert got[1]["price_text"] == "3.50" and got[2]["price_text"] is None
+    assert got[1]["url"] == "Https://Shop.Example.Com/P/1"
+    assert got[2]["specs"]["count"] == 2 and got[2]["n_reviews"] == 3
+    assert run.metrics()["transformation"]["rows"] == 3
+
+
+def test_pipeline_python_chain_single_python_node(spark):
+    """A pipeline with fields and a Python chain crosses into Python once:
+    the extraction MapInArrow, with no pandas/Python UDF evaluation."""
+    import re
+
+    from datascrapexter_spark.ops.pipeline import (PipelineConfig,
+                                                   process_pipeline)
+
+    fields, transforms = _batch_cfg()
+    df = spark.createDataFrame(_product_pages(),
+                               "doc_id long, url string, html string")
+    run = process_pipeline(df, PipelineConfig(
+        fields=fields, transforms=transforms, dedup_cols=["name"]))
+    plan = run.df._jdf.queryExecution().executedPlan().toString()
+    python_nodes = re.findall(
+        r"\b(?:Python)?MapIn(?:Arrow|Pandas)\b|ArrowEvalPython|"
+        r"BatchEvalPython", plan)
+    assert python_nodes == ["MapInArrow"], plan
+
+
+def test_pipeline_chain_on_non_string_column_rejected(spark):
+    from datascrapexter_spark.ops.pipeline import (PipelineConfig,
+                                                   process_pipeline)
+
+    fields, _ = _batch_cfg()
+    df = spark.createDataFrame(_product_pages(),
+                               "doc_id long, url string, html string")
+    with pytest.raises(ValueError, match="non-string column 'price'"):
+        process_pipeline(df, PipelineConfig(
+            fields=fields, transforms={"price": [{"type": "title_case"}]}))
+
+
+def test_pipeline_metrics_after_unexecuted_pipeline_on_same_input(spark):
+    """A pipeline built but never run must not starve a later pipeline over
+    the same input DataFrame of its stage observations."""
+    import threading
+
+    from datascrapexter_spark.ops.pipeline import (PipelineConfig,
+                                                   process_pipeline)
+
+    fields, transforms = _batch_cfg()
+    df = spark.createDataFrame(_product_pages(),
+                               "doc_id long, url string, html string")
+    cfg = PipelineConfig(fields=fields, transforms=transforms)
+    process_pipeline(df, cfg)                 # built, never executed
+    run = process_pipeline(df, cfg)
+    run.df.collect()
+    got = {}
+    t = threading.Thread(target=lambda: got.update(run.metrics()),
+                         daemon=True)
+    t.start()
+    t.join(60)
+    assert not t.is_alive(), "PipelineRun.metrics() blocked"
+    assert {k: v["rows"] for k, v in got.items()} == {
+        "input": 3, "extraction": 3, "transformation": 3}
+
+
 def test_gopher_filter_rules(spark):
     # 60 distinct letter-only words + stopwords: passes every band
     good = ("the " + " ".join(f"word{a}{b}" for a in "abcdef"
