@@ -1,6 +1,6 @@
 """Partitioned Bloom URL-seen prefilter, built/probed in vectorized numpy
-inside Arrow-batched UDFs (north_rule: "partitioned Bloom/cuckoo URL-seen
-filter built in vectorized Arrow UDFs").
+inside Arrow-batched UDFs — the north_rule's partitioned URL-seen filter,
+and the only filter family the crawl engine uses.
 
 Role at scale: the exact seen-set lives in the `url_seen` table (bucketed
 by url_hash); correctness is ALWAYS settled by an exact left_anti join
@@ -11,12 +11,18 @@ shrink that anti-join's probe side: candidates whose shard bitset says
 
 Sharding: shard_id = pmod(url_hash, n_shards) (non-negative, matching Spark
 `F.pmod` in every probe path, including negative hashes), so each shard covers a
-hash-disjoint slice and shards can be built/merged per Spark partition and
-OR-merged across rounds. Shard bitsets are persisted in the `bloom_shards`
-snapshot table (binary column) and broadcast for probing — n_shards *
-m_bits/8 bytes; size for the target frontier (e.g. 4096 shards x 16 MiB =
-64 GiB total at 10^10 URLs ~ 9.6 bits/key; in the sandbox defaults are
-tiny). Probing broadcasts only the shards, never the seen table.
+hash-disjoint slice and shards can be built/merged per Spark partition.
+
+State invariant: the `bloom_shards` snapshot table holds ONE row
+(shard_id, round, bitset) per shard that has any member — never more than
+n_shards rows and never more than n_shards * m_bits/8 bytes. Each crawl
+round folds its new hashes into the committed blobs (OR-merge per shard,
+CrawlEngine._fold_bloom) and overwrites the table; `round` is the last
+round that changed the shard. So the driver-broadcast probe collects at
+most the filter's own size, and the distributed probe reads one blob per
+shard. Size for the target frontier (e.g. 4096 shards x 16 MiB = 64 GiB
+total at 10^10 URLs ~ 9.6 bits/key; the defaults are test-sized, 16 x
+128 KiB). Probing broadcasts only the shards, never the seen table.
 
 The reference's dedup is a pass-through stub (internal/pipeline/
 components.go:173-263 `RecordDeduplicator`) + an MD5 helper
@@ -128,8 +134,8 @@ class BloomShards:
     @classmethod
     def from_rows(cls, rows, n_shards: int = DEFAULT_N_SHARDS,
                   m_bits: int = DEFAULT_M_BITS, k: int = DEFAULT_K) -> "BloomShards":
-        """Rows may contain multiple rounds per shard: OR-merge, keeping the
-        union (append-only shard history in the snapshot table)."""
+        """Handle over persisted (shard_id, round, bitset) rows; rows that
+        share a shard are OR-merged."""
         shards: dict[int, bytes] = {}
         for shard_id, _round, bitset in rows:
             cur = shards.get(shard_id)
@@ -146,8 +152,8 @@ def probe_maybe_seen_df(candidates: DataFrame, shards_df: DataFrame,
     This is the 10^10-scale path: the full filter (n_shards * m_bits/8
     bytes, e.g. 64 GiB) cannot be collected+broadcast, but each hash needs
     exactly one shard, so candidates shuffle by shard_id = pmod(hash,
-    n_shards) and each task OR-merges only its shard's per-round bitsets
-    (a few MiB) before a vectorized numpy probe. Output = candidates +
+    n_shards) and each task reads only its shard's blob (a few MiB) for a
+    vectorized numpy probe. Output = candidates +
     `maybe_seen` boolean. The small-filter fast path (driver broadcast, no
     shuffle) lives in the scheduler and is chosen by total filter size.
     """

@@ -66,10 +66,7 @@ from ..functions.urlnorm import (
     registered_domain,
 )
 from ..functions.urlnorm import host_col
-from .bloom import BloomShards, build_bitset, probe_maybe_seen_df
-from .cuckoo import CuckooShards
-from .cuckoo import build_shard_blob as cuckoo_build_blob
-from .cuckoo import probe_maybe_seen_cuckoo_df
+from .bloom import BloomShards, build_bitset, merge_bitsets, probe_maybe_seen_df
 from .links import extract_links_df
 from .pagination import PaginationSpec, extract_next_urls_df
 from .politeness import (
@@ -129,18 +126,13 @@ class CrawlConfig:
     pagination_spec: PaginationSpec | None = None
     restrict_to_seed_hosts: bool = True
     default_priority: int = 5          # JobPriority normal (pkg/types/types.go:47)
-    # URL-seen prefilter family (north_rule: "partitioned Bloom/cuckoo
-    # URL-seen filter"): "bloom" (OR-mergeable bitsets, densest) or
-    # "cuckoo" (fingerprint table — supports deletion for recrawl
-    # deployments, two bucket reads per probe). Both are prefilters only;
-    # the exact anti-join always settles correctness, so the two configs
-    # produce bit-identical crawls (test_cuckoo).
-    seen_filter: str = "bloom"
+    # partitioned Bloom URL-seen prefilter (bloom.py): bloom_n_shards
+    # shards of bloom_m_bits bits, k probes each. A prefilter only — the
+    # exact url_seen check settles every maybe-seen candidate, so the
+    # sizing moves cost, never the crawl
     bloom_n_shards: int = 16
     bloom_m_bits: int = 1 << 20
     bloom_k: int = 7
-    cuckoo_n_buckets: int = 1 << 15   # per shard; *4 slots = 128Ki entries
-    cuckoo_slots: int = 4
     # above this total filter size the probe switches from driver-broadcast
     # (zero shuffle) to the distributed cogroup probe (shards never leave
     # executors) — at 10^10 URLs the filter is tens of GiB
@@ -335,8 +327,7 @@ class CrawlEngine:
         sids["url_seen"] = self.store.url_seen.overwrite_all(
             self.spark, seen, round_no=0)
         sids["bloom_shards"] = self.store["bloom_shards"].overwrite(
-            self._bloom_partials(seen, 0)
-        )
+            self._fold_bloom(seen, 0, prev=None))
         empty_state = self.spark.createDataFrame(
             [], "domain string, err_rate double, consec_err int, "
                 "breaker_failures int, quarantined_until int, "
@@ -432,60 +423,46 @@ class CrawlEngine:
         return pending.unionByName(archive)
 
     # ------------------------------------------------------------------
-    # seen-filter helpers (bloom or cuckoo shards — cfg.seen_filter; both
-    # persist per-round partial blobs in the `bloom_shards` snapshot
-    # table and merge reader-side: OR for bloom, fingerprint re-insert
-    # for cuckoo)
+    # Bloom prefilter state (`bloom_shards`: one blob per shard, bloom.py)
     # ------------------------------------------------------------------
 
     def _filter_total_bytes(self) -> int:
+        return self.cfg.bloom_n_shards * self.cfg.bloom_m_bits // 8
+
+    def _fold_bloom(self, hashes: DataFrame, round_no: int,
+                    prev: DataFrame | None) -> DataFrame:
+        """Next `bloom_shards` snapshot: cogroup the new hashes by shard
+        with the `prev` blobs and emit OR(prev, build_bitset(new)) per
+        shard; shards with no new hash pass through unchanged."""
         cfg = self.cfg
-        if cfg.seen_filter == "cuckoo":
-            return cfg.bloom_n_shards * (
-                16 + cfg.cuckoo_n_buckets * cfg.cuckoo_slots * 2)
-        return cfg.bloom_n_shards * cfg.bloom_m_bits // 8
+        m_bits, k = cfg.bloom_m_bits, cfg.bloom_k
+        schema = "shard_id int, round int, bitset binary"
+        if prev is None:
+            prev = self.spark.createDataFrame([], schema)
 
-    def _bloom_partials(self, hashes: DataFrame, round_no: int) -> DataFrame:
-        """Executor-side shard build: group new hashes by shard, one
-        serialized filter blob per shard per round (append-only)."""
-        cfg = self.cfg
-        n_shards = cfg.bloom_n_shards
-        out_schema = "shard_id int, round int, bitset binary"
-        if cfg.seen_filter == "cuckoo":
-            n_buckets, slots = cfg.cuckoo_n_buckets, cfg.cuckoo_slots
+        def fold(new: pd.DataFrame, old: pd.DataFrame) -> pd.DataFrame:
+            if new.empty:
+                return old[["shard_id", "round", "bitset"]]
+            bs = build_bitset(new["url_hash"].to_numpy(), m_bits, k)
+            for blob in old["bitset"]:
+                bs = merge_bitsets(bs, bytes(blob))
+            return pd.DataFrame({"shard_id": [int(new["shard_id"].iloc[0])],
+                                 "round": [round_no], "bitset": [bs]})
 
-            def build(pdf: pd.DataFrame) -> pd.DataFrame:
-                shard = int(pdf["shard_id"].iloc[0])
-                bs = cuckoo_build_blob(pdf["url_hash"].to_numpy(),
-                                       n_buckets, slots)
-                return pd.DataFrame(
-                    {"shard_id": [shard], "round": [round_no], "bitset": [bs]})
-        else:
-            m_bits, k = cfg.bloom_m_bits, cfg.bloom_k
+        new = hashes.withColumn(
+            "shard_id",
+            F.pmod(F.col("url_hash"), F.lit(cfg.bloom_n_shards)).cast("int"))
+        return (new.groupBy("shard_id")
+                .cogroup(prev.groupBy("shard_id"))
+                .applyInPandas(fold, schema))
 
-            def build(pdf: pd.DataFrame) -> pd.DataFrame:
-                shard = int(pdf["shard_id"].iloc[0])
-                bs = build_bitset(pdf["url_hash"].to_numpy(), m_bits, k)
-                return pd.DataFrame(
-                    {"shard_id": [shard], "round": [round_no], "bitset": [bs]})
-
-        return (
-            hashes.withColumn("shard_id",
-                              F.pmod(F.col("url_hash"), F.lit(n_shards)).cast("int"))
-            .groupBy("shard_id").applyInPandas(build, out_schema)
-        )
-
-    def _load_bloom(self):
-        """Merged driver-side filter handle (BloomShards or CuckooShards —
-        both expose maybe_seen for the broadcast probe UDF)."""
+    def _load_bloom(self) -> BloomShards:
+        """The committed filter on the driver: at most bloom_n_shards
+        blobs, so the collect is bounded by _filter_total_bytes()."""
         df = self._read("bloom_shards")
         rows = [] if df is None else [
             (r["shard_id"], r["round"], r["bitset"]) for r in df.collect()
         ]
-        if self.cfg.seen_filter == "cuckoo":
-            return CuckooShards.from_rows(
-                rows, self.cfg.bloom_n_shards, self.cfg.cuckoo_n_buckets,
-                self.cfg.cuckoo_slots)
         return BloomShards.from_rows(
             rows, self.cfg.bloom_n_shards, self.cfg.bloom_m_bits, self.cfg.bloom_k)
 
@@ -523,16 +500,6 @@ class CrawlEngine:
         # --- budgets (pure Column recurrence over previous-round state) ---
         delays = self._domain_delays_df()
         prev_state = self._read("domain_state")
-        if "breaker_failures" not in prev_state.columns:  # pre-breaker state
-            prev_state = (
-                prev_state.withColumn("breaker_failures", F.lit(0))
-                .withColumn("quarantined_until", F.lit(None).cast("int")))
-        if "rate_mult" not in prev_state.columns:  # pre-strategy state
-            prev_state = prev_state.withColumn("rate_mult", F.lit(1.0))
-        if "n_fetch_total" not in prev_state.columns:  # pre-reputation state
-            prev_state = (
-                prev_state.withColumn("n_fetch_total", F.lit(0).cast("long"))
-                .withColumn("n_err_total", F.lit(0).cast("long")))
 
         # --- circuit breaker gate: open domains are skipped entirely ---
         if cfg.quarantine_max_failures > 0:
@@ -680,13 +647,11 @@ class CrawlEngine:
             candidates = candidates.filter(score < cfg.trap_threshold)
         candidates = candidates.withColumn("url_hash", F.xxhash64("url_canon"))
 
-        # --- dedup: bloom/cuckoo prefilter, then exact anti-join for
-        # maybe-seen (cfg.seen_filter picks the family; identical contract:
-        # no false negatives, exact check settles) ---
+        # --- dedup: Bloom prefilter (no false negatives), then the exact
+        # url_seen check for the maybe-seen candidates only ---
         if self._filter_total_bytes() <= cfg.bloom_broadcast_max_bytes:
             # small filter: collect+broadcast, probe with zero extra shuffle
-            filt = self._load_bloom()
-            bbc = self.spark.sparkContext.broadcast(filt)
+            bbc = self.spark.sparkContext.broadcast(self._load_bloom())
 
             @F.pandas_udf(T.BooleanType())
             def maybe_seen_udf(h: pd.Series) -> pd.Series:
@@ -694,9 +659,6 @@ class CrawlEngine:
 
             flagged = candidates.withColumn(
                 "maybe_seen", maybe_seen_udf("url_hash"))
-        elif cfg.seen_filter == "cuckoo":
-            flagged = probe_maybe_seen_cuckoo_df(
-                candidates, self._read("bloom_shards"), cfg.bloom_n_shards)
         else:
             # cluster-scale filter: distributed cogroup probe — shards stay
             # on executors, candidates shuffle once by shard_id
@@ -874,9 +836,11 @@ class CrawlEngine:
                                                 archive_rows)
         sids["url_seen"] = self.store.url_seen.append_round(
             self.spark, new_rows.select("url_hash"), round_no)
-        new_hashes = new_rows.select("url_hash")
-        sids["bloom_shards"] = self._append(
-            "bloom_shards", self._bloom_partials(new_hashes, round_no))
+        # one blob per shard (bloom.py invariant): the next round's
+        # broadcast collect stays bounded by _filter_total_bytes()
+        sids["bloom_shards"] = self.store["bloom_shards"].overwrite(
+            self._fold_bloom(new_rows.select("url_hash"), round_no,
+                             prev=self._read("bloom_shards")))
         sids["domain_state"] = self.store["domain_state"].overwrite(new_domain_state)
         if new_pag_state is not None:
             sids["pagination_state"] = self.store["pagination_state"].overwrite(

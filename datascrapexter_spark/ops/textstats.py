@@ -414,11 +414,13 @@ def char_lm_surprisal(docs: DataFrame, id_col: str = "doc_id",
     OCCURRENCE (Σ bits over occurrences ≡ Σ tf·bits — identical
     integers), so no corpus-width (doc, gram) aggregate exists at all:
     the model rollup collapses to gram-width map-side, and the per-doc
-    groupBy ships only doc-width partials. The (id, gram) occurrence
-    table is persisted because two consumers (model training + scoring
-    join) would otherwise each rescan the corpus — the q43 lesson. The
-    model side of the scoring join is gram-keyed and aggregate-width;
-    the one-row bits(T) total joins on a constant key (broadcast).
+    groupBy ships only doc-width partials. When the model is self-trained
+    the (id, gram) occurrence table is persisted, because two consumers
+    (model training + scoring join) would otherwise each rescan the
+    corpus — the q43 lesson; a supplied model leaves one consumer and
+    no persist. The model side of the scoring join is gram-keyed and
+    aggregate-width; the one-row bits(T) total joins on a constant key
+    (broadcast).
     Documents shorter than n chars score 0 by contract.
 
     Returns (id, n_grams, sum_bits, avg_millibits) — avg_millibits =
@@ -440,10 +442,9 @@ def char_lm_surprisal(docs: DataFrame, id_col: str = "doc_id",
     # corpus-width (doc, gram) tf aggregate and its exchange are gone
     # entirely: the only exchanges left are the gram-width model rollup
     # and the doc-width partials of the per-doc groupBy (both collapse
-    # map-side). grams is persisted for its two consumers (model
-    # training + scoring) — narrow (id, gram) rows.
-    grams = grams.persist()
+    # map-side). Persisted only for a self-trained model (see docstring).
     if model is None:
+        grams = grams.persist()
         model = grams.groupBy("gram").agg(F.count(F.lit(1)).alias("cnt"))
     model_bits = model.select(
         "gram", F.length(F.bin(F.col("cnt"))).cast("int").alias("bits"))

@@ -156,6 +156,30 @@ def test_resume_after_interrupt(spark, tmp_path, web):
     assert seen2 == sim.seen
 
 
+def test_bloom_shards_one_blob_per_shard(crawled):
+    """The committed Bloom state is one blob per shard, however many
+    rounds ran: the broadcast probe's collect is bounded by
+    _filter_total_bytes(), and the folded blobs equal a filter built in
+    one pass from the committed url_seen set."""
+    import numpy as np
+
+    from datascrapexter_spark.frontier.bloom import BloomShards
+
+    engine, stats, cfg = crawled
+    assert len(stats) > 1
+    rows = engine._read("bloom_shards").collect()
+    shard_ids = [r["shard_id"] for r in rows]
+    assert len(rows) <= cfg.bloom_n_shards
+    assert len(set(shard_ids)) == len(shard_ids)
+    assert sum(len(r["bitset"]) for r in rows) <= engine._filter_total_bytes()
+
+    seen = np.array([r["url_hash"] for r in engine.seen_hashes().collect()],
+                    dtype=np.int64)
+    fresh = BloomShards(cfg.bloom_n_shards, cfg.bloom_m_bits, cfg.bloom_k)
+    fresh.add_hashes(seen)
+    assert {r["shard_id"]: bytes(r["bitset"]) for r in rows} == fresh.shards
+
+
 def test_request_metrics_match_log(crawled):
     """request_metrics (per-round per-host per-status counters — the
     RecordRequest/RecordPageScraped families rendered round-wise) agree

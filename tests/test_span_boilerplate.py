@@ -157,6 +157,19 @@ def test_lm_surprisal_external_model_unseen_gram_max(spark):
     assert out["avg_millibits"] == (1000 * 10) // 4
 
 
+def test_lm_surprisal_supplied_model_persists_nothing(spark):
+    """With a supplied model the occurrence table has one consumer, so
+    scoring leaves no cached RDD behind in the caller's session."""
+    from datascrapexter_spark.ops import textstats
+    model = spark.createDataFrame([("abc", 2)], "gram string, cnt long")
+    docs = spark.createDataFrame([(7, "abcabd")], "doc_id long, text string")
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    out = textstats.char_lm_surprisal(docs, model=model).collect()
+    assert [r["n_grams"] for r in out] == [4]
+    assert jsc.getPersistentRDDs().size() == before
+
+
 # ---------------------------------------------------------------------------
 # fit_vocabulary / oov_stats
 # ---------------------------------------------------------------------------

@@ -79,10 +79,11 @@ def make_web(n_dead_per_host: int = 0):
 def inject_dead_history(spark, engine, n_dead: int,
                         on_seed_hosts: bool = False) -> None:
     """Pre-load the store with n_dead terminal URLs (archive rows +
-    url_seen hashes + bloom partials) — the footprint of a long-running
-    crawl. Default: an untouched dead.ex host (candidates never probe
-    them). --heavy: spread across the SEED hosts as /dead/<i> so the
-    crawl's own links re-discover a constant sample of them per round."""
+    url_seen hashes, folded into the Bloom shards) — the footprint of a
+    long-running crawl. Default: an untouched dead.ex host (candidates
+    never probe them). --heavy: spread across the SEED hosts as /dead/<i>
+    so the crawl's own links re-discover a constant sample of them per
+    round."""
     if on_seed_hosts:
         from datascrapexter_spark.functions.urlnorm import normalize_url_udf
 
@@ -113,8 +114,9 @@ def inject_dead_history(spark, engine, n_dead: int,
         spark, dead.select("url_hash"), round_no=0, idempotent=False)
     sids["frontier_archive"] = engine.store["frontier_archive"].append(
         dead_rows)
-    sids["bloom_shards"] = engine.store["bloom_shards"].append(
-        engine._bloom_partials(dead.select("url_hash"), 0))
+    sids["bloom_shards"] = engine.store["bloom_shards"].overwrite(
+        engine._fold_bloom(dead.select("url_hash"), 0,
+                           prev=engine._read("bloom_shards")))
     engine.store.commit_round(0, sids)
     engine._snapshot_ids = sids
 
