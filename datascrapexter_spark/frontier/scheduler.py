@@ -4,8 +4,8 @@ checkpoint, generalized from the reference's strictly-sequential page loop
 frontier at cluster scale (north_rule).
 
 Round r (all DataFrame ops; the only Python crossings are the Arrow-batched
-UDFs for robots prefix-match, URL canonicalization, HTML link extraction,
-and Bloom probe):
+UDFs for URL canonicalization, HTML link extraction and the Bloom probe —
+the robots gate is a codegen prefix match):
 
  1. pending frontier rows, robots-filtered (broadcast rules; denied ->
     'blocked' — compliance_test.go:226-238 semantics);
@@ -21,8 +21,9 @@ and Bloom probe):
     the exact check) -> exact check vs the bucketed-at-rest url_seen
     (seen ⋉ probe semi, then probe ▷ dupes anti — the seen set is
     scanned, never exchanged or hash-built) -> append frontier;
- 6. checkpoint everything to snapshot tables + commit the round journal
-    (crash mid-round resumes from the last committed round).
+ 6. checkpoint to snapshot tables, then commit the round's one journal
+    record (snapshot ids + stats observed on the crawl_log, frontier and
+    frontier_updates writes); a crash mid-round resumes from the last one.
 
 Identity for dedup is xxhash64(url_canon) per north_rule; the sequential
 oracle simulator (tests/crawl_oracle.py) reproduces every step bit-for-bit,
@@ -38,15 +39,17 @@ would dominate every other cost):
   * `frontier_updates` append-only state-transition deltas
                        (url_hash, state, attempts, round); readers keep
                        the latest delta per url_hash (max round wins);
-  * `frontier_archive` terminal rows (done/failed/blocked*), appended once
-                       at transition time and never touched again.
+  * `frontier_archive` terminal rows (done/failed/blocked*), archived at
+                       compaction (their one write); until then their
+                       delta masks them in the base.
 
 Reading the pending set = base ⟕ latest-deltas (the deltas span at most
 `frontier_compact_every` rounds of scheduled work — a key-width join far
 below frontier size; AQE broadcasts it when small), filtered to 'pending'.
-Every `frontier_compact_every` rounds the reconciled pending set is folded
-back into the base and the deltas truncate, bounding reconcile depth. The
-full frontier (fixtures, resume) = reconciled-pending ∪ archive.
+Every `frontier_compact_every` rounds (0 = never) the committed base and
+deltas plus the round's own are reconciled once: pending rows overwrite
+the base, terminal rows go to the archive, the deltas truncate. The full
+frontier (fixtures, resume) = reconciled base ∪ archive.
 """
 
 from __future__ import annotations
@@ -56,7 +59,7 @@ from dataclasses import dataclass, field as dc_field
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -107,6 +110,13 @@ CRAWL_LOG_SCHEMA = T.StructType([
     T.StructField("priority", T.IntegerType()),
     T.StructField("status", T.StringType()),
 ])
+
+
+def _observed(df: DataFrame, **counts: Column) -> tuple[DataFrame, Observation]:
+    """`df` carrying an unnamed Observation of `counts`, filled by the
+    write that consumes it (unnamed for the reason ops/pipeline.py gives)."""
+    obs = Observation()
+    return df.observe(obs, *[c.alias(k) for k, c in counts.items()]), obs
 
 
 @dataclass
@@ -218,9 +228,12 @@ class CrawlEngine:
         # read at that scale; the gate is unchanged)
         self.robots_rules = rules_array_df(
             self.robots.rules_df(spark), self.cfg.user_agent).cache()
+        self.domain_delays = self._domain_delays_df()
         self.pages = self._prepare_pages(pages).cache()
         self.allowed_hosts: set[str] | None = None
         self._snapshot_ids: dict[str, int | None] = {}
+        self._pending = 0  # pending-view size at the last committed round
+        self._round_cache: list[DataFrame] = []
 
     # ------------------------------------------------------------------
     # preparation
@@ -317,7 +330,8 @@ class CrawlEngine:
             self.allowed_hosts = set(hosts)
 
         sids = {}
-        sids["frontier"] = self.store["frontier"].overwrite(frontier)
+        seeded, seeded_obs = _observed(frontier, n=F.count(F.lit(1)))
+        sids["frontier"] = self.store["frontier"].overwrite(seeded)
         sids["frontier_updates"] = self.store["frontier_updates"].overwrite(
             self.spark.createDataFrame([], FRONTIER_UPDATES_SCHEMA))
         sids["frontier_archive"] = self.store["frontier_archive"].overwrite(
@@ -349,12 +363,9 @@ class CrawlEngine:
                      "round int, host string, status string, n long"
         sids["request_metrics"] = self.store["request_metrics"].overwrite(
             self.spark.createDataFrame([], req_schema))
-        sids["round_metrics"] = self.store["round_metrics"].overwrite(
-            self.spark.createDataFrame(
-                [], "round int, scheduled long, fetched long, new_urls long, "
-                    "pending long, wall_ms long"))
-        self.store.commit_round(0, sids)
-        self._snapshot_ids = sids
+        n_seeds = seeded_obs.get["n"]
+        self.store.commit_round(0, sids, {"pending": n_seeds})
+        self._snapshot_ids, self._pending = sids, n_seeds
 
     def resume(self) -> int:
         """Roll state back to the last committed round; returns that round.
@@ -364,6 +375,7 @@ class CrawlEngine:
         if last is None:
             raise RuntimeError("no committed rounds to resume from")
         self._snapshot_ids = last["snapshots"]
+        self._pending = last["stats"]["pending"]
         if self.cfg.restrict_to_seed_hosts and self.allowed_hosts is None:
             seed_hosts = (self.frontier_df()
                           .filter(F.col("round_added") == 0)
@@ -385,13 +397,11 @@ class CrawlEngine:
     # ------------------------------------------------------------------
 
     @staticmethod
-    def _reconcile(base: DataFrame, updates: DataFrame | None) -> DataFrame:
+    def _reconcile(base: DataFrame, updates: DataFrame) -> DataFrame:
         """Apply the latest state-transition delta per url_hash. The delta
         set spans at most frontier_compact_every rounds of scheduled work —
         key-width, typically broadcastable — so the base (which holds the
         fat url_canon strings) never shuffles."""
-        if updates is None:
-            return base
         latest = (
             updates.groupBy("url_hash")
             .agg(F.max_by(F.struct("state", "attempts"), "round").alias("_u"))
@@ -413,14 +423,10 @@ class CrawlEngine:
         ).filter(F.col("state") == "pending")
 
     def frontier_df(self) -> DataFrame:
-        """Full frontier (pending ∪ terminal) — fixtures, resume, q30.
-        Terminal rows live exactly once in the archive (appended at
-        transition), pending rows exactly once in the reconciled base."""
-        archive = self._read("frontier_archive")
-        pending = self._pending_frontier()
-        if archive is None:
-            return pending
-        return pending.unionByName(archive)
+        """Full frontier (every state) — fixtures, resume, q30."""
+        full = self._reconcile(
+            self._read("frontier"), self._read("frontier_updates"))
+        return full.unionByName(self._read("frontier_archive"))
 
     # ------------------------------------------------------------------
     # Bloom prefilter state (`bloom_shards`: one blob per shard, bloom.py)
@@ -471,6 +477,21 @@ class CrawlEngine:
     # ------------------------------------------------------------------
 
     def run_round(self, round_no: int) -> dict:
+        """Run and commit one round; returns its stats. Its cached frames
+        are released however it ends (run.py retries a failed crawl in
+        the same session), newest first so none is re-planned."""
+        try:
+            return self._round(round_no)
+        finally:
+            for df in reversed(self._round_cache):
+                df.unpersist()
+            self._round_cache.clear()
+
+    def _cache(self, df: DataFrame) -> DataFrame:
+        self._round_cache.append(df.cache())
+        return df
+
+    def _round(self, round_no: int) -> dict:
         t0 = time.monotonic()
         cfg, pol = self.cfg, self.cfg.politeness
         pending = self._pending_frontier()
@@ -479,12 +500,11 @@ class CrawlEngine:
         # match (no Python crossing, no driver-pickled rule dict) ---
         with_path = pending.withColumn(
             "path", F.coalesce(F.parse_url("url_canon", F.lit("PATH")), F.lit("")))
-        gated = (
+        gated = self._cache(
             with_path.join(F.broadcast(self.robots_rules), "host", "left")
             .withColumn("allowed",
                         allowed_rules_col(F.col("path"), F.col("rules")))
-            .drop("path", "rules")
-        ).cache()
+            .drop("path", "rules"))
         blocked = gated.filter(~F.col("allowed")).drop("allowed")
         eligible = gated.filter(F.col("allowed")).drop("allowed")
 
@@ -498,7 +518,6 @@ class CrawlEngine:
             eligible = eligible.filter(~gflag)
 
         # --- budgets (pure Column recurrence over previous-round state) ---
-        delays = self._domain_delays_df()
         prev_state = self._read("domain_state")
 
         # --- circuit breaker gate: open domains are skipped entirely ---
@@ -519,7 +538,7 @@ class CrawlEngine:
                 F.coalesce(F.col("crawl_delay_s"), F.lit(0.0)),
                 F.col("err_rate"), F.col("consec_err"), pol)
         budgets = (
-            domains.join(F.broadcast(delays), "domain", "left")
+            domains.join(F.broadcast(self.domain_delays), "domain", "left")
             .join(F.broadcast(prev_state.select(
                 "domain", "err_rate", "consec_err", "rate_mult",
                 "n_fetch_total", "n_err_total")),
@@ -557,13 +576,12 @@ class CrawlEngine:
                 .drop("_half")
             )
 
-        scheduled = schedule_topk(eligible, budgets, pol).cache()
+        scheduled = self._cache(schedule_topk(eligible, budgets, pol))
 
         # --- "fetch": equi-join the canonical pages table ---
-        fetched = (
+        fetched = self._cache(
             scheduled.join(self.pages, "url_canon", "left")
-            .withColumn("found", F.col("html").isNotNull())
-        ).cache()
+            .withColumn("found", F.col("html").isNotNull()))
 
         # --- per-partition lineage metrics (north_rule) ---
         metrics = (
@@ -668,7 +686,7 @@ class CrawlEngine:
         # flagged is consumed by BOTH branches below — cached so the
         # links -> canonicalize -> bloom Arrow chain runs once, not twice;
         # the cache materialization also prices the probe strategy choice
-        flagged = flagged.cache()
+        flagged = self._cache(flagged)
         n_maybe = flagged.filter(F.col("maybe_seen")).count()
         definite_new = flagged.filter(~F.col("maybe_seen")).drop("maybe_seen")
         needs_check = flagged.filter(F.col("maybe_seen")).drop("maybe_seen")
@@ -698,58 +716,33 @@ class CrawlEngine:
                                   "left_semi")
         confirmed_new = needs_check.join(dupes, "url_hash", "left_anti")
         new_urls = definite_new.unionByName(confirmed_new)
-        # cached: new_rows feeds four consumers (url_seen append, bloom
-        # shard build, frontier union, stats) — without the cache the whole
+        # cached: new_rows feeds three writes — without the cache the whole
         # links->bloom->anti-join chain re-executes per consumer
-        new_rows = (
+        new_rows = self._cache(
             new_urls.withColumnRenamed("cand_domain", "domain")
             .withColumn("priority", F.lit(cfg.default_priority))
             .withColumn("attempts", F.lit(0))
             .withColumn("round_added", F.lit(round_no))
             .withColumn("state", F.lit("pending"))
-            .select([f.name for f in FRONTIER_SCHEMA.fields])
-        ).cache()
+            .select([f.name for f in FRONTIER_SCHEMA.fields]))
 
         # --- frontier state transitions: O(round work) DELTAS, never a
-        # full-frontier join/rewrite. Terminal rows (done/failed/blocked*)
-        # go to the archive once, with a masking delta so they drop out of
-        # the pending view; retries are a delta only (attempts+1). ---
-        fcols = [f.name for f in FRONTIER_SCHEMA.fields]
-
-        def _as_update(df: DataFrame, state_col, attempts_col) -> DataFrame:
-            return df.select(
-                "url_hash", state_col.alias("state"),
-                attempts_col.cast("int").alias("attempts"),
-                F.lit(round_no).alias("round"))
-
-        def _as_archive(df: DataFrame, state_col, attempts_col) -> DataFrame:
-            return (df.withColumn("state", state_col)
-                    .withColumn("attempts", attempts_col.cast("int"))
-                    .select(fcols))
-
-        done = fetched.filter("found")
-        failed = fetched.filter(
-            ~F.col("found") & (F.col("attempts") + 1 >= cfg.max_attempts))
-        retried = fetched.filter(
-            ~F.col("found") & (F.col("attempts") + 1 < cfg.max_attempts))
-
-        terminal = [
-            (done, F.lit("done"), F.col("attempts")),
-            (failed, F.lit("failed"), F.col("attempts") + 1),
-            (blocked, F.lit("blocked"), F.col("attempts")),
-        ]
-        if gdpr_blocked is not None:
-            terminal.append(
-                (gdpr_blocked, F.lit("blocked_gdpr"), F.col("attempts")))
-
-        updates_df = _as_update(retried, F.lit("pending"),
-                                F.col("attempts") + 1)
-        archive_rows = None
-        for df, st, att in terminal:
-            updates_df = updates_df.unionByName(_as_update(df, st, att))
-            part = _as_archive(df, st, att)
-            archive_rows = part if archive_rows is None \
-                else archive_rows.unionByName(part)
+        # full-frontier join/rewrite. A terminal delta (done/failed/
+        # blocked*) masks its row out of the pending view until the next
+        # compaction archives it; a miss below max_attempts stays pending
+        # with attempts+1 ---
+        found, missed = F.col("found"), F.col("attempts") + 1
+        updates_df = fetched.select(
+            "url_hash",
+            F.when(found, "done").when(missed >= cfg.max_attempts, "failed")
+            .otherwise("pending").alias("state"),
+            F.when(found, F.col("attempts")).otherwise(missed)
+            .alias("attempts"))
+        for df, st in ((blocked, "blocked"), (gdpr_blocked, "blocked_gdpr")):
+            if df is not None:
+                updates_df = updates_df.unionByName(
+                    df.select("url_hash", F.lit(st).alias("state"), "attempts"))
+        updates_df = updates_df.withColumn("round", F.lit(round_no))
 
         # --- crawl log (the reproducible order fixture) ---
         log = fetched.select(
@@ -826,14 +819,36 @@ class CrawlEngine:
             .alias("n_err_total"),
         )
 
-        # --- checkpoint + round commit: every frontier write is an
-        # O(round-work) append (base_snapshot pinned to the committed
-        # journal so crashed rounds can't leak uncommitted data) ---
+        # --- checkpoint + round commit: appends are pinned to the
+        # committed snapshots, so crashed rounds can't leak uncommitted
+        # data. Counts are observed on the writes: each delta is one
+        # pending-view row and no new row was seen, so pending moves by
+        # exactly new_urls - terminal transitions ---
+        new_rows_w, new_obs = _observed(new_rows, new_urls=F.count(F.lit(1)))
+        updates_w, upd_obs = _observed(
+            updates_df, terminal=F.count_if(F.col("state") != "pending"))
+        log_w, log_obs = _observed(
+            log, scheduled=F.count(F.lit(1)),
+            fetched=F.count_if(F.col("status") == "fetched"))
         sids = dict(self._snapshot_ids)
-        sids["frontier"] = self._append("frontier", new_rows)
-        sids["frontier_updates"] = self._append("frontier_updates", updates_df)
-        sids["frontier_archive"] = self._append("frontier_archive",
-                                                archive_rows)
+        if (cfg.frontier_compact_every > 0
+                and round_no % cfg.frontier_compact_every == 0):
+            # compaction (module docstring): one reconcile, three writes
+            full = self._cache(self._reconcile(
+                self._read("frontier").unionByName(new_rows_w),
+                self._read("frontier_updates").unionByName(updates_w),
+            ).select([f.name for f in FRONTIER_SCHEMA.fields]))
+            is_pending = F.col("state") == "pending"
+            sids["frontier"] = self.store["frontier"].overwrite(
+                full.filter(is_pending))
+            sids["frontier_archive"] = self._append(
+                "frontier_archive", full.filter(~is_pending))
+            sids["frontier_updates"] = self.store["frontier_updates"].overwrite(
+                self.spark.createDataFrame([], FRONTIER_UPDATES_SCHEMA))
+        else:
+            sids["frontier"] = self._append("frontier", new_rows_w)
+            sids["frontier_updates"] = self._append("frontier_updates",
+                                                    updates_w)
         sids["url_seen"] = self.store.url_seen.append_round(
             self.spark, new_rows.select("url_hash"), round_no)
         # one blob per shard (bloom.py invariant): the next round's
@@ -850,59 +865,22 @@ class CrawlEngine:
             # rows per round, append-only
             sids["pagination_chains"] = self._append(
                 "pagination_chains", new_chain_rows)
-        sids["crawl_log"] = self._append("crawl_log", log)
+        sids["crawl_log"] = self._append("crawl_log", log_w)
         sids["lineage_metrics"] = self._append("lineage_metrics", metrics)
         sids["request_metrics"] = self._append("request_metrics",
                                                request_metrics)
 
-        stats_row = fetched.agg(
-            F.count("*").alias("scheduled"),
-            F.sum(F.col("found").cast("long")).alias("fetched")).collect()[0]
-        n_new = new_rows.count()
-
-        # post-round pending view over the freshly written snapshots (scan
-        # is O(pending + uncompacted deltas), independent of archive size)
-        base_new = self.store["frontier"].read(self.spark, sids["frontier"])
-        upd_new = self.store["frontier_updates"].read(
-            self.spark, sids["frontier_updates"])
-        pend_new = self._reconcile(base_new, upd_new).filter(
-            F.col("state") == "pending")
-        pending_left = pend_new.count()
-
-        # periodic compaction: fold deltas into the base (all-pending by
-        # construction) and truncate them — bounds reconcile depth
-        if (cfg.frontier_compact_every > 0
-                and round_no % cfg.frontier_compact_every == 0):
-            sids["frontier"] = self.store["frontier"].overwrite(pend_new)
-            sids["frontier_updates"] = self.store["frontier_updates"].overwrite(
-                self.spark.createDataFrame([], FRONTIER_UPDATES_SCHEMA))
-
-        wall_ms = int((time.monotonic() - t0) * 1000)
+        logged, n_new = log_obs.get, new_obs.get["new_urls"]
         stats = {
             "round": round_no,
-            "scheduled": stats_row["scheduled"] or 0,
-            "fetched": stats_row["fetched"] or 0,
+            "scheduled": logged["scheduled"],
+            "fetched": logged["fetched"],
             "new_urls": n_new,
-            "pending": pending_left,
-            "wall_ms": wall_ms,
+            "pending": self._pending - upd_obs.get["terminal"] + n_new,
+            "wall_ms": int((time.monotonic() - t0) * 1000),
         }
-        # round-level observability row (the dashboard-counter family,
-        # metrics.go RecordPageScraped totals, rendered per round)
-        sids["round_metrics"] = self._append(
-            "round_metrics",
-            self.spark.createDataFrame(
-                [(round_no, stats["scheduled"], stats["fetched"],
-                  n_new, pending_left, wall_ms)],
-                "round int, scheduled long, fetched long, new_urls long, "
-                "pending long, wall_ms long"))
-        self.store.commit_round(round_no, sids)
-        self._snapshot_ids = sids
-
-        gated.unpersist()
-        scheduled.unpersist()
-        fetched.unpersist()
-        flagged.unpersist()
-        new_rows.unpersist()
+        self.store.commit_round(round_no, sids, stats)
+        self._snapshot_ids, self._pending = sids, stats["pending"]
         return stats
 
     def _pagination_links(
@@ -939,7 +917,7 @@ class CrawlEngine:
                     [], "url_hash long, chain_id long")
             # chain membership: a seed page starts its own chain
             # (chain_id = its url_hash); next pages inherit via the mapping
-            nxt = (
+            nxt = self._cache(
                 nxt.withColumn("host", host_col(F.col("src_url")))
                 .withColumn("src_hash", F.xxhash64("src_url"))
                 .join(F.broadcast(chains.dropDuplicates(["url_hash"])),
@@ -953,8 +931,7 @@ class CrawlEngine:
                     F.when(F.col("cursor") == F.coalesce("last_cursor", F.lit("")),
                            F.lit(None).cast("string"))
                     .otherwise(F.col("next_url")),
-                )
-            ).cache()
+                ))
             this_round = (
                 nxt.filter(F.col("cursor") != "")
                 .groupBy("host", "chain_id")
@@ -983,16 +960,16 @@ class CrawlEngine:
         return links, new_state, new_chains
 
     def _domain_delays_df(self) -> DataFrame:
+        """Max robots crawl-delay per registered domain (built once)."""
         delays: dict[str, float] = {}
         for host, rules in self.robots.by_host.items():
             d = rules.get_crawl_delay(self.cfg.user_agent)
             if d > 0:
                 dom = registered_domain(host)
                 delays[dom] = max(delays.get(dom, 0.0), d)
-        rows = [(k, float(v)) for k, v in sorted(delays.items())]
-        if not rows:
-            return self.spark.createDataFrame([], "domain string, crawl_delay_s double")
-        return self.spark.createDataFrame(rows, "domain string, crawl_delay_s double")
+        return self.spark.createDataFrame(
+            [(k, float(v)) for k, v in sorted(delays.items())],
+            "domain string, crawl_delay_s double")
 
     # ------------------------------------------------------------------
     # full crawl
@@ -1015,6 +992,14 @@ class CrawlEngine:
             if s["pending"] == 0:
                 break
         return stats
+
+    def round_metrics(self) -> DataFrame:
+        """The committed crawl rounds' journal stats, one row per round
+        (metrics.go RecordPageScraped totals rendered per round)."""
+        return self.spark.createDataFrame(
+            [r["stats"] for r in self.store.committed_rounds() if r["round"]],
+            "round int, scheduled long, fetched long, new_urls long, "
+            "pending long, wall_ms long")
 
     def crawl_log(self) -> DataFrame:
         return (self._read("crawl_log")

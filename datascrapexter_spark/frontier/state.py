@@ -12,7 +12,8 @@ snapshot manifest:
 - append = write a NEW data directory, then atomically publish a new
   snapshot whose file list = previous snapshot's dirs + the new dir
   (no rewrite of existing data — O(delta), like an Iceberg append);
-- overwrite = new snapshot referencing only the new dir;
+- overwrite = new snapshot referencing only the new dir; a snapshot also
+  records the schema, so a read runs no Spark job to infer it;
 - reads resolve the current snapshot's dir list (or any older snapshot id
   — time travel, which is what crash-resume uses);
 - publishing is a tmp-file + os.replace, so a killed driver never leaves
@@ -29,6 +30,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 class SnapshotTable:
@@ -57,14 +59,14 @@ class SnapshotTable:
     def current_snapshot_id(self) -> int | None:
         return self._read_manifest()["current"]
 
-    def _dirs_for(self, snapshot_id: int | None) -> list[str]:
+    def _snapshot(self, snapshot_id: int | None) -> dict | None:
         m = self._read_manifest()
         sid = snapshot_id if snapshot_id is not None else m["current"]
         if sid is None:
-            return []
+            return None
         for snap in m["snapshots"]:
             if snap["id"] == sid:
-                return snap["dirs"]
+                return snap
         raise KeyError(f"snapshot {sid} not found in {self.manifest_path}")
 
     # -- IO ---------------------------------------------------------------
@@ -74,10 +76,11 @@ class SnapshotTable:
         df.write.mode("overwrite").parquet(os.path.join(self.dir, rel))
         return rel
 
-    def _commit(self, dirs: list[str], meta: dict | None) -> int:
+    def _commit(self, dirs: list[str], df: DataFrame, meta: dict | None) -> int:
         m = self._read_manifest()
         sid = (m["current"] or 0) + 1
-        m["snapshots"].append({"id": sid, "dirs": dirs, "meta": meta or {}})
+        m["snapshots"].append({"id": sid, "dirs": dirs, "meta": meta or {},
+                               "schema": df.schema.jsonValue()})
         m["current"] = sid
         self._publish(m)
         return sid
@@ -92,18 +95,20 @@ class SnapshotTable:
         would silently resurrect that uncommitted data. The crawl engine
         always appends relative to its journal-committed snapshot."""
         rel = self._write_data_dir(df, (self.current_snapshot_id() or 0) + 1)
-        return self._commit(self._dirs_for(base_snapshot_id) + [rel], meta)
+        base = self._snapshot(base_snapshot_id)
+        return self._commit((base["dirs"] if base else []) + [rel], df, meta)
 
     def overwrite(self, df: DataFrame, meta: dict | None = None) -> int:
         rel = self._write_data_dir(df, (self.current_snapshot_id() or 0) + 1)
-        return self._commit([rel], meta)
+        return self._commit([rel], df, meta)
 
     def read(self, spark: SparkSession, snapshot_id: int | None = None) -> DataFrame | None:
-        dirs = self._dirs_for(snapshot_id)
-        if not dirs:
+        snap = self._snapshot(snapshot_id)
+        if snap is None:
             return None
-        paths = [os.path.join(self.dir, d) for d in dirs]
-        return spark.read.parquet(*paths)
+        paths = [os.path.join(self.dir, d) for d in snap["dirs"]]
+        return (spark.read.schema(T.StructType.fromJson(snap["schema"]))
+                .parquet(*paths))
 
     def exists(self) -> bool:
         return self.current_snapshot_id() is not None
@@ -232,16 +237,15 @@ class BucketedSeenTable:
 class StateStore:
     """All engine state tables under one root + a round-commit journal.
 
-    A crawl round is committed by `commit_round(round_no, snapshot_ids)`:
-    resume reads the highest committed round and time-travels every table
-    back to the snapshot ids recorded for it (so a crash mid-round replays
-    that round from its start — per north_rule, resumable mid-crawl)."""
+    `commit_round(round_no, snapshot_ids, stats)` writes a round's one
+    record (round 0, init, starts a new journal): resume time-travels every
+    table back to the last record's snapshot ids and takes its stats, so a
+    crash mid-round replays that round from its start (north_rule)."""
 
     TABLES = ("frontier", "frontier_updates", "frontier_archive",
               "bloom_shards", "domain_state", "pagination_state",
               "pagination_chains", "crawl_log",
-              "lineage_metrics", "request_metrics", "extraction_metrics",
-              "round_metrics")
+              "lineage_metrics", "request_metrics", "extraction_metrics")
 
     def __init__(self, root: str):
         self.root = root
@@ -257,20 +261,22 @@ class StateStore:
     def __getitem__(self, name: str) -> SnapshotTable:
         return self.tables[name]
 
-    def commit_round(self, round_no: int, snapshot_ids: dict[str, int | None]) -> None:
-        journal = self._read_journal()
-        journal["rounds"].append({"round": round_no, "snapshots": snapshot_ids})
+    def commit_round(self, round_no: int, snapshot_ids: dict[str, int | None],
+                     stats: dict) -> None:
+        rounds = [] if round_no == 0 else self.committed_rounds()
+        rounds.append(
+            {"round": round_no, "snapshots": snapshot_ids, "stats": stats})
         tmp = self.journal_path + f".tmp-{uuid.uuid4().hex}"
         with open(tmp, "w") as fh:
-            json.dump(journal, fh)
+            json.dump({"rounds": rounds}, fh)
         os.replace(tmp, self.journal_path)
 
-    def _read_journal(self) -> dict:
+    def committed_rounds(self) -> list[dict]:
         if not os.path.exists(self.journal_path):
-            return {"rounds": []}
+            return []
         with open(self.journal_path) as fh:
-            return json.load(fh)
+            return json.load(fh)["rounds"]
 
     def last_committed_round(self) -> dict | None:
-        rounds = self._read_journal()["rounds"]
+        rounds = self.committed_rounds()
         return rounds[-1] if rounds else None

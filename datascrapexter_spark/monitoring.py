@@ -5,11 +5,11 @@ The reference runs these as an HTTP sidecar (health endpoints
 /root/reference/internal/monitoring/health.go:264-343 GetHealth /
 GetReadiness / GetLiveness; alert rules dashboard.go:961-984; dashboard
 summary dashboard.go:488-533). This sandbox has no server, and at
-cluster scale the natural surface is the STATE STORE anyway: every round
-checkpoints `round_metrics` / `request_metrics` / `extraction_metrics`
-(scheduler.py, extract/engine.py), so health and alerts are a driver-side
-evaluation over those tables — the aggregation and status-transition
-semantics are ported exactly; only the transport (HTTP JSON) is dropped.
+cluster scale the natural surface is the STATE STORE anyway: the round
+journal's stats (`CrawlEngine.round_metrics()`), `request_metrics` and
+`extraction_metrics` (scheduler.py, run.py), so health and alerts are a
+driver-side evaluation over those tables — the aggregation and status-
+transition semantics are ported exactly; only the transport is dropped.
 
 Status lattice (health.go:283-321, GetHealth):
   - any UNHEALTHY check that is critical      -> overall UNHEALTHY
@@ -381,9 +381,9 @@ def crawl_health_report(round_metrics: DataFrame | None,
 
 
 def engine_health_report(engine) -> dict:
-    """Convenience wrapper over a CrawlEngine's committed state tables."""
+    """Convenience wrapper over a CrawlEngine's committed state."""
     return crawl_health_report(
-        engine._read("round_metrics"),
+        engine.round_metrics(),
         engine._read("request_metrics"),
         engine.store["extraction_metrics"].read(engine.spark),
     )

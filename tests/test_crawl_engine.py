@@ -199,11 +199,11 @@ def test_request_metrics_match_log(crawled):
 
 
 def test_round_metrics_match_stats(crawled):
-    """The persisted round_metrics rows equal the stats run_round
-    returned (resumable observability — dashboard-counter parity)."""
+    """round_metrics(), read back from the round journal, equals the
+    stats run_round returned (resumable observability — dashboard-counter
+    parity)."""
     engine, stats, _ = crawled
-    rows = {r["round"]: r
-            for r in engine._read("round_metrics").collect()}
+    rows = {r["round"]: r for r in engine.round_metrics().collect()}
     assert len(rows) == len(stats)
     for s in stats:
         r = rows[s["round"]]
@@ -273,6 +273,121 @@ def test_resume_ignores_uncommitted_appends(spark, tmp_path, web):
     assert spark_log(engine2) == sim.sorted_log()
     seen2 = {r["url_hash"] for r in engine2.seen_hashes().collect()}
     assert seen2 == sim.seen
+
+
+class _Crash(RuntimeError):
+    """The driver died right after a state write."""
+
+
+def _hook_writes(mp, crash_after=None) -> list[tuple[str, str]]:
+    """Record every StateStore write — snapshot-table appends and
+    overwrites, url_seen round appends — as (table, method), and raise
+    _Crash right after the `crash_after`-th one returns."""
+    import os
+
+    from datascrapexter_spark.frontier.state import (
+        BucketedSeenTable,
+        SnapshotTable,
+    )
+
+    writes = []
+
+    def hooked(fn):
+        def write(table, *args, **kwargs):
+            out = fn(table, *args, **kwargs)
+            writes.append((os.path.basename(table.dir), fn.__name__))
+            if len(writes) == crash_after:
+                raise _Crash(writes[-1])
+            return out
+        return write
+
+    for cls, name in ((SnapshotTable, "append"), (SnapshotTable, "overwrite"),
+                      (BucketedSeenTable, "append_round")):
+        mp.setattr(cls, name, hooked(getattr(cls, name)))
+    return writes
+
+
+def _round_outcome(engine, round_no):
+    """Crawl log, url_seen set, full frontier and the journal's round
+    record (its wall time aside) after `round_no` committed."""
+    record = engine.store.last_committed_round()
+    assert record["round"] == round_no
+    return (
+        spark_log(engine),
+        sorted(r["url_hash"] for r in engine.seen_hashes().collect()),
+        sorted(tuple(r) for r in engine.frontier_df().select(
+            "url_hash", "url_canon", "state", "attempts",
+            "round_added").collect()),
+        {k: v for k, v in record["stats"].items() if k != "wall_ms"},
+    )
+
+
+def test_crash_at_every_write_resumes_to_same_round(spark, tmp_path,
+                                                     monkeypatch):
+    """A crash right after ANY state write of a round — here a compaction
+    round, so the archive append is among them — resumes in a fresh
+    engine to the same crawl log, url_seen set, frontier and round record
+    as the uninterrupted round. Every k starts from a copy of the store
+    as the previous round left it. The uninterrupted round also pins the
+    Spark jobs a round that fetches pages may run."""
+    import shutil
+    import time
+
+    swept = 2
+    # a small filter and few seen buckets keep the ~20 rounds cheap; the
+    # sizing never changes the crawl
+    cfg = make_cfg(frontier_compact_every=swept, bloom_n_shards=4,
+                   bloom_m_bits=1 << 12, seen_n_buckets=4)
+    pages_rows, seeds_rows, robots_texts = make_web(
+        n_hosts=3, pages_per_host=10, seed=11)
+    pages = spark.createDataFrame(
+        pages_rows, "url string, warc_ts timestamp, html binary, "
+                    "text string, lang string")
+    seeds = spark.createDataFrame(seeds_rows, "url string, priority int")
+
+    def engine_at(root):
+        return CrawlEngine(spark, StateStore(str(root)), pages, robots_texts,
+                           cfg)
+
+    t0 = time.monotonic()
+    engine = engine_at(tmp_path / "crawl")
+    engine.init(seeds)
+    engine.run_round(swept - 1)
+    template = tmp_path / "after_prev_round"
+    shutil.copytree(tmp_path / "crawl", template)
+
+    sc = spark.sparkContext
+    with monkeypatch.context() as mp:
+        writes = _hook_writes(mp)
+        sc.setJobGroup("crawl-round-jobs", "one uninterrupted crawl round")
+        try:
+            stats = engine.run_round(swept)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup("crawl-round-jobs"))
+    assert stats["fetched"] > 0
+    assert n_jobs <= 50, n_jobs
+    expected = _round_outcome(engine, swept)
+    assert ("frontier_archive", "append") in writes
+    assert engine._read("frontier_archive").count() > 0
+
+    for k in range(1, len(writes) + 1):
+        root = tmp_path / f"crash_{k}"
+        shutil.copytree(template, root)
+        crashed = engine_at(root)
+        assert crashed.resume() == swept - 1
+        with monkeypatch.context() as mp:
+            _hook_writes(mp, crash_after=k)
+            with pytest.raises(_Crash):
+                crashed.run_round(swept)
+        resumed = engine_at(root)
+        assert resumed.resume() == swept - 1
+        resumed.run_round(swept)
+        assert _round_outcome(resumed, swept) == expected, (k, writes[k - 1])
+        shutil.rmtree(root)
+    print(f"crash sweep: {len(writes)} writes, {n_jobs} jobs in the "
+          f"uninterrupted round, {time.monotonic() - t0:.0f} s")
 
 
 def test_canonicalization_collapses_dupes(crawled):

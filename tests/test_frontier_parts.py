@@ -94,10 +94,15 @@ def test_snapshot_table_append_and_time_travel(spark, tmp_path):
 def test_state_store_round_journal(tmp_path):
     store = StateStore(str(tmp_path / "s"))
     assert store.last_committed_round() is None
-    store.commit_round(0, {"frontier": 1})
-    store.commit_round(1, {"frontier": 2})
+    store.commit_round(0, {"frontier": 1}, {"pending": 3})
+    store.commit_round(1, {"frontier": 2}, {"pending": 5})
     last = store.last_committed_round()
     assert last["round"] == 1 and last["snapshots"]["frontier"] == 2
+    assert last["stats"] == {"pending": 5}
+    assert [r["round"] for r in store.committed_rounds()] == [0, 1]
+    # round 0 (init) starts a new crawl's journal
+    store.commit_round(0, {"frontier": 3}, {"pending": 1})
+    assert [r["round"] for r in store.committed_rounds()] == [0]
 
 
 def test_manifest_commit_is_atomic(spark, tmp_path):

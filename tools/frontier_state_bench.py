@@ -3,11 +3,11 @@
 store pre-loaded with N vs 4N dead (already-crawled) URLs and report the
 per-round walls.
 
-With round 3's incremental frontier state (append-only transition deltas +
-terminal archive + scan-only url_seen probe) the per-round cost depends on
-the ROUND's work, not on history, so the two arms' medians should match;
-the round-2 design (full frontier join+overwrite per round and a url_seen
-shuffle per round) grew with the accumulated state.
+With the incremental frontier state (append-only transition deltas,
+terminal rows archived at compaction, scan-only url_seen probe) the
+per-round cost depends on the ROUND's work, not on history, so the two
+arms' medians should match; the round-2 design (full frontier join+
+overwrite and a url_seen shuffle per round) grew with the history.
 
 Constant work per arm per round: H chain hosts, budget 1 page/host/round —
 every round fetches H pages and discovers H new URLs, regardless of how
@@ -117,7 +117,9 @@ def inject_dead_history(spark, engine, n_dead: int,
     sids["bloom_shards"] = engine.store["bloom_shards"].overwrite(
         engine._fold_bloom(dead.select("url_hash"), 0,
                            prev=engine._read("bloom_shards")))
-    engine.store.commit_round(0, sids)
+    # dead rows are terminal: init's round stats still hold
+    engine.store.commit_round(0, sids,
+                              engine.store.last_committed_round()["stats"])
     engine._snapshot_ids = sids
 
 
