@@ -170,7 +170,8 @@ def extract_fields_df(
             n = batch.num_rows
             cols: dict[str, list] = {cfg.name: [None] * n for cfg in fields_local}
             errs, succ = [None] * n, [True] * n
-            for i, html in enumerate(batch.column(html_col).to_pylist()):
+            pages = batch.column(html_col).to_numpy(zero_copy_only=False)
+            for i, html in enumerate(pages.tolist()):
                 doc = parse_html(html or "")
                 data, errors, success = extract_all(
                     doc, fields_local, continue_on_error
@@ -188,7 +189,7 @@ def extract_fields_df(
             cols["_errors"], cols["_success"] = errs, succ
             for col, rules in chains.items():
                 vals = cols[col] if col in cols else \
-                    batch.column(col).to_pylist()
+                    batch.column(col).to_numpy(zero_copy_only=False).tolist()
                 cols[col] = [chain_or_null(rules, v) for v in vals]
             arrays = []
             for name in out_names:

@@ -194,16 +194,17 @@ class BucketedSeenTable:
     def append_round(self, spark: SparkSession, df: DataFrame,
                      round_no: int, idempotent: bool = True) -> int:
         """Append this round's new hashes into partition round=round_no.
-        `idempotent` first drops that partition, so a crashed round's
-        uncommitted files can never double up when the round re-runs."""
+        `idempotent` first drops that partition if its directory exists
+        (only when a crashed round re-runs), so a crashed round's
+        uncommitted files can never double up."""
         import shutil
 
         self._ensure(spark)
-        if idempotent:
+        part = os.path.join(self.dir, f"round={round_no}")
+        if idempotent and os.path.exists(part):
             spark.sql(f"ALTER TABLE {self.table} "
                       f"DROP IF EXISTS PARTITION (round={round_no})")
-            shutil.rmtree(os.path.join(self.dir, f"round={round_no}"),
-                          ignore_errors=True)
+            shutil.rmtree(part, ignore_errors=True)
         (df.select(F.col("url_hash").cast("long"))
          .withColumn("round", F.lit(round_no))
          .repartition(self.n_buckets, "url_hash")

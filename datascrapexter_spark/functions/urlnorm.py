@@ -353,7 +353,7 @@ def canonicalize_arrow_df(df, url_col: str = "url"):
 
     def fn(batches):
         for batch in batches:
-            urls = batch.column(0).to_pylist()
+            urls = batch.column(0).to_numpy(zero_copy_only=False).tolist()
             canon: list = []
             hosts: list = []
             doms: list = []

@@ -18,17 +18,20 @@ Grammar:
 Matching returns elements in document order, deduplicated (goquery
 semantics for Find on multiple roots).
 
-On a document root (a parentless Node) the first compound of each
-sequence takes its candidates from the document's cached tag buckets
-(dom.DocIndex) rather than a walk of the whole tree, and the document-order
-sort reuses the cached positions. Selecting under a subtree root walks
-that subtree.
+Candidates come from the document's index (dom.DocIndex) rather than a
+walk of the tree: the first compound of each sequence, and each compound
+after a descendant combinator, takes the tag bucket (every element for
+no tag or `*`) sliced to the pre-order interval of the root or of each
+outermost matched node, found by bisecting the bucket's positions. A child
+combinator reads the matched node's children. The document-order sort uses
+the positions the index stores on each element.
 """
 
 from __future__ import annotations
 
 import re
 from functools import lru_cache
+from operator import attrgetter
 
 from .dom import Node
 
@@ -161,29 +164,30 @@ def parse_selector(selector: str) -> list[list[tuple[str, Compound]]]:
 
 def _match_seq(root: Node, seq: list[tuple[str, Compound]]) -> list[Node]:
     """Match one combinator sequence under `root` (root excluded)."""
-    # current candidate set starts as all descendants matching seq[0]
+    if root.is_text:
+        return []
+    index = _topmost(root).doc_index()
     _, first = seq[0]
-    if root.parent is None:
-        index = root.doc_index()
-        pool = (index.elements if first.tag in (None, "*")
-                else index.by_tag.get(first.tag, ()))
-    else:
-        pool = root.iter_elements()
-    current = [n for n in pool if first.matches(n)]
+    current = [n for n in index.under(root, first.tag) if first.matches(n)]
     for combinator, compound in seq[1:]:
         nxt: list[Node] = []
-        seen = set()
-        for node in current:
-            if combinator == "child":
-                it = node.element_children()
-            else:
-                it = node.iter_elements()
-            for cand in it:
-                if id(cand) not in seen and compound.matches(cand):
-                    seen.add(id(cand))
-                    nxt.append(cand)
+        if combinator == "child":
+            for node in current:
+                nxt.extend(c for c in node.children if compound.matches(c))
+        else:
+            # a node inside an earlier node's subtree adds no candidates
+            current.sort(key=_POS)
+            reach = -1
+            for node in current:
+                if node._pos > reach:
+                    reach = node._end
+                    nxt.extend(c for c in index.under(node, compound.tag)
+                               if compound.matches(c))
         current = nxt
     return current
+
+
+_POS = attrgetter("_pos")
 
 
 def select(root: Node, selector: str) -> list[Node]:
@@ -196,12 +200,11 @@ def select(root: Node, selector: str) -> list[Node]:
             if id(n) not in seen:
                 seen.add(id(n))
                 out.append(n)
-    # a single one-compound group emits in document order (walk or bucket)
+    # a single one-compound group emits in document order (bucket order)
     # already; only multi-group / multi-step results need the position sort
     needs_sort = len(groups) > 1 or any(len(seq) > 1 for seq in groups)
     if needs_sort and len(out) > 1:
-        order = _topmost(root).doc_index().pos
-        out.sort(key=lambda n: order[id(n)])
+        out.sort(key=_POS)
     return out
 
 

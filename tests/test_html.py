@@ -64,6 +64,9 @@ def test_implied_tbody():
     doc = parse_html("<table><tr><td>x</td></tr></table>")
     assert len(select(doc, "tbody")) == 1
     assert select(doc, "tbody tr td")[0].text() == "x"
+    # a self-closed row is appended as it is, with no tbody
+    doc = parse_html("<table><tr/><td>y</td></table>")
+    assert [n.tag for n in select(doc, "table")[0].children] == ["tr", "td"]
 
 
 def test_auto_close_li():
@@ -177,12 +180,14 @@ def _parity_docs():
 
 
 def test_indexed_select_matches_walk_on_document_and_subtree_roots():
-    for html in _parity_docs():
+    import random
+
+    rng = random.Random(7)
+    fuzzed = [_fuzz_doc(rng, odd=False) for _ in range(100)]
+    for html in _parity_docs() + fuzzed:
         doc = parse_html(html)
-        subtrees = [n for n in doc.iter_elements()
-                    if n.tag in ("html", "body", "div", "ul", "table", "tr")]
         for sel in PARITY_SELECTORS:
-            for root in [doc] + subtrees:
+            for root in [doc, *doc.iter_elements()]:
                 got = select(root, sel)
                 assert [id(n) for n in got] == \
                     [id(n) for n in _walk_select(root, sel)], (sel, root)
@@ -206,3 +211,136 @@ def test_extract_links_df_matches_walk_select(spark, monkeypatch):
     want = sorted((u, o) for u, _, h, _, _ in pages
                   for o in links.extract_links_py(h, u))
     assert got == want and got
+
+
+# -- one-pass builder vs html.parser ----------------------------------------
+
+_FUZZ_TAGS = ["div", "p", "span", "a", "ul", "li", "table", "tr", "td", "th",
+              "tbody", "thead", "tfoot", "br", "img", "input", "hr", "option",
+              "dt", "dd", "b", "h1", "section", "DIV", "Table", "TR", "Li"]
+_FUZZ_TEXT = ["hello", " ", "\n  ", "a & b", "&amp;", "&lt;x&gt;", "&#39;",
+              "&#x41;", "&nbsp;", "&nbsp", "&bogus;", "&", ">", "café",
+              " ", "x=1", "'q'", '"dq"', "&#0;", "1 &lt 2"]
+_FUZZ_VALUES = ["x", "a b", "", "&amp;", "/p/1", "a>b", "&#39;s", "x/",
+                "&quot;", "http://h/?a=1&b=2", "café", "a\nb"]
+# constructs the one-pass grammar leaves to html.parser
+_FUZZ_ODD = ["<", "a < b", "<?xml version='1.0'?>", "<![CDATA[x<y]]>",
+             "<!x>", "</>", "</ 3>", "< p>", '<a x="1"y="2">', "<a x==y>",
+             "<a\x0bb>", "<a/ >", "<div class=\"open", "<p", "</div foo>",
+             "<a x= >", "<a  x>", "<!-->", "<!--->", "&#", "<3",
+             "<span x=a\"b>", "<img src='x'/ alt>"]
+
+
+def _fuzz_attrs(rng) -> str:
+    out = []
+    for _ in range(rng.randrange(4)):
+        name = rng.choice(["class", "id", "href", "data-x", "CLASS", "title",
+                           "x", "Id", "aria-label"])
+        value = rng.choice(_FUZZ_VALUES)
+        form = rng.randrange(5)
+        ws = rng.choice([" ", "  ", "\n", "\t"])
+        if form == 0:
+            out.append(f'{ws}{name}="{value}"')
+        elif form == 1:
+            out.append(f"{ws}{name}='{value}'")
+        elif form == 2 and value and not any(c in value for c in " \n'\"=<>`"):
+            out.append(f"{ws}{name}={value}")
+        elif form == 3:
+            out.append(f'{ws}{name} = "{value}"')
+        else:
+            out.append(f"{ws}{name}")
+    return "".join(out)
+
+
+def _fuzz_raw(rng, tag: str) -> str:
+    body = "".join(rng.choice(["if (a < b) {}", "x = '</scr' + 'ipt>';",
+                               "<b>not a tag</b>", "&amp;", "</scripty>",
+                               "a</style x>", " ", "\n", "<!-- c -->",
+                               "</\u017fcript>", "</\u017ftyle>"])
+                   for _ in range(rng.randrange(4)))
+    close = rng.choice([f"</{tag}>", f"</{tag.upper()}>", f"</{tag} >",
+                        f"</ {tag}>"])
+    return f"<{tag}{_fuzz_attrs(rng)}>{body}{close}"
+
+
+def _fuzz_doc(rng, odd: bool) -> str:
+    parts = []
+    if rng.random() < 0.3:
+        parts.append(rng.choice(["<!DOCTYPE html>", "<!doctype html>\n"]))
+    for _ in range(rng.randrange(1, 40)):
+        r = rng.random()
+        if r < 0.35:
+            tag = rng.choice(_FUZZ_TAGS)
+            end = rng.choice([">", ">", ">", "/>", " />", "\n>"])
+            parts.append(f"<{tag}{_fuzz_attrs(rng)}{end}")
+        elif r < 0.6:
+            parts.append(rng.choice(["</", "</", "</ "])
+                         + rng.choice(_FUZZ_TAGS)
+                         + rng.choice([">", ">", " >"]))
+        elif r < 0.85:
+            parts.append(rng.choice(_FUZZ_TEXT))
+        elif r < 0.92:
+            parts.append(rng.choice(["<!-- c -->", "<!---->", "<!-- a -- b -->",
+                                     "<!--<p>-->", "<!-- x --\n>"]))
+        else:
+            parts.append(_fuzz_raw(rng, rng.choice(["script", "style"])))
+    if odd:
+        parts.insert(rng.randrange(len(parts) + 1), rng.choice(_FUZZ_ODD))
+    return "".join(parts)
+
+
+def _shape(node):
+    if node.is_text:
+        return node.text_data
+    return (node.tag, list(node.attrs.items()),
+            [_shape(c) for c in node.children])
+
+
+def _index_shape(root):
+    index = root.doc_index()
+    assert index.elements == list(root.iter_elements())
+    return ([(n.tag, n._pos, n._end) for n in index.elements],
+            {t: [n._pos for n in b] for t, b in index.by_tag.items()},
+            index.tag_pos)
+
+
+def test_one_pass_builder_matches_html_parser_fuzz():
+    """Seeded documents: where the one-pass builder takes a document, its
+    tree and its index equal html.parser's tree and a walked index."""
+    import random
+
+    from datascrapexter_spark.html import dom
+
+    rng = random.Random(20261018)
+    n_fast = n_docs = 0
+    for k in range(6000):
+        html = _fuzz_doc(rng, odd=k % 3 == 0)
+        builder = dom._TreeBuilder()
+        builder.feed(html)
+        builder.close()
+        want = builder.tree.finish()
+        recorded = _index_shape(want)       # recorded by the fallback's pass
+        want._index = dom.DocIndex.walk(want)
+        assert _index_shape(want) == recorded, html
+        got = dom._build_one_pass(html)
+        n_docs += 1
+        if got is None:
+            continue
+        n_fast += 1
+        assert _shape(got) == _shape(want), html
+        assert _index_shape(got) == _index_shape(want), html
+    # both paths get real coverage
+    assert 0.3 < n_fast / n_docs < 0.95, (n_fast, n_docs)
+
+
+def test_one_pass_builder_takes_real_pages():
+    from datascrapexter_spark.html import dom
+    from tests.webgen import make_web
+
+    pages, _, _ = make_web(n_hosts=2, pages_per_host=4)
+    docs = [PARITY_HTML, BASIC_HTML] + [h.decode() for _, _, h, _, _ in pages]
+    for html in docs:
+        assert dom._build_one_pass(html) is not None
+    for html in ["a < b", "<?xml?><p>x</p>", "<script>never closed"]:
+        assert dom._build_one_pass(html) is None
+        assert dom.build_stdlib_tree(html).doc_index() is not None
