@@ -5,8 +5,8 @@ round, internal/scraper/engine.go crawl limits); at web scale hosts are
 not equal — a host that answers 50% errors or serves 90% duplicate
 content should get a shrinking share of the per-round fetch budget, and
 a clean host a growing one.  This module closes that loop from the
-request/fetch history the engine already records (request_metrics,
-scheduler.py): per-host error and duplicate rates fold into an integer
+request/fetch history the engine already records (the crawl log, served
+per host as CrawlEngine.request_metrics(), scheduler.py): per-host error and duplicate rates fold into an integer
 reputation score, and a total round budget is divided proportionally.
 
 Scale shape: one hash exchange on host builds the per-host aggregate

@@ -19,11 +19,14 @@ the robots gate is a codegen prefix match):
     deterministic), up to max_attempts;
  5. out-links -> canonicalize -> Bloom prefilter (definitely-new skips
     the exact check) -> exact check vs the bucketed-at-rest url_seen
-    (seen ⋉ probe semi, then probe ▷ dupes anti — the seen set is
-    scanned, never exchanged or hash-built) -> append frontier;
+    (confirm_new: seen ⋉ probe shuffle-hash semi, then probe ▷ dupes
+    anti — one plan for every round size; the seen set is scanned,
+    never exchanged, sorted or hash-built) -> append frontier;
  6. checkpoint to snapshot tables, then commit the round's one journal
     record (snapshot ids + stats observed on the crawl_log, frontier and
     frontier_updates writes); a crash mid-round resumes from the last one.
+    Nothing derivable is written: the request counters are served from
+    the crawl log (request_metrics_from_log).
 
 Identity for dedup is xxhash64(url_canon) per north_rule; the sequential
 oracle simulator (tests/crawl_oracle.py) reproduces every step bit-for-bit,
@@ -56,7 +59,6 @@ from __future__ import annotations
 
 import time
 from dataclasses import dataclass, field as dc_field
-from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
@@ -119,6 +121,45 @@ def _observed(df: DataFrame, **counts: Column) -> tuple[DataFrame, Observation]:
     return df.observe(obs, *[c.alias(k) for k, c in counts.items()]), obs
 
 
+# above this total Bloom filter size the round probes it with the
+# distributed cogroup (shards never leave executors) instead of collecting
+# and broadcasting it — at 10^10 URLs the filter is tens of GiB
+BLOOM_BROADCAST_MAX_BYTES = 32 << 20
+
+
+def confirm_new(needs_check: DataFrame, url_seen: DataFrame) -> DataFrame:
+    """Rows of `needs_check` whose url_hash is not in `url_seen` — the
+    round's exact "seen before?" check. url_seen (~80 GB at 10^10 URLs)
+    is scanned in its bucket layout, never exchanged, sorted or
+    hash-built: only the round-sized probe moves and is built. The hint
+    keeps it so; without it AQE sorts the seen scan for a sort-merge join
+    once the probe outgrows the broadcast threshold (PLANS.md)."""
+    probe = needs_check.select("url_hash").hint("shuffle_hash")
+    dupes = url_seen.join(probe, "url_hash", "left_semi")
+    return needs_check.join(dupes, "url_hash", "left_anti")
+
+
+def request_metrics_from_log(crawl_log: DataFrame,
+                             cfg: CrawlConfig) -> DataFrame:
+    """Per-round per-host per-status request counters (the RecordRequest /
+    RecordPageScraped families, internal/monitoring/metrics.go:601-661,
+    rendered round-wise) from a crawl log: host comes from url_canon by
+    the function that sets the frontier's host; with UA rotation on, the
+    agent label is the seeded column of antidetect.py."""
+    keys = ["round", "host", "status"]
+    log = crawl_log.withColumn(
+        "host", canonicalize_struct_udf("url_canon").getField("host"))
+    if cfg.rotate_user_agents:
+        from .antidetect import user_agent_col
+
+        log = log.withColumn("agent", user_agent_col(
+            F.col("url_hash"), F.col("round"),
+            list(cfg.user_agent_pool) if cfg.user_agent_pool else None,
+            seed=cfg.ua_rotation_seed))
+        keys.append("agent")
+    return log.groupBy(*keys).agg(F.count("*").alias("n"))
+
+
 @dataclass
 class CrawlConfig:
     politeness: PolitenessConfig = dc_field(default_factory=PolitenessConfig)
@@ -139,14 +180,11 @@ class CrawlConfig:
     # partitioned Bloom URL-seen prefilter (bloom.py): bloom_n_shards
     # shards of bloom_m_bits bits, k probes each. A prefilter only — the
     # exact url_seen check settles every maybe-seen candidate, so the
-    # sizing moves cost, never the crawl
+    # sizing moves cost, never the crawl. The filter's total size picks
+    # its probe (BLOOM_BROADCAST_MAX_BYTES)
     bloom_n_shards: int = 16
     bloom_m_bits: int = 1 << 20
     bloom_k: int = 7
-    # above this total filter size the probe switches from driver-broadcast
-    # (zero shuffle) to the distributed cogroup probe (shards never leave
-    # executors) — at 10^10 URLs the filter is tens of GiB
-    bloom_broadcast_max_bytes: int = 32 << 20
     # circuit breaker per domain (reference: internal/utils/performance.go:
     # 426-515, config-gated wiring engine.go:264-300, default maxFailures=5
     # errors/service.go:14). Round-wise rendering: breaker_failures
@@ -170,19 +208,14 @@ class CrawlConfig:
     # rounds (caps reconcile-join depth at K rounds of scheduled work;
     # compaction itself costs O(pending), amortized over K rounds)
     frontier_compact_every: int = 8
-    # maybe-seen rows at or below this probe the seen set via broadcast
-    # reverse-semi; above it (link-heavy round) the probe rides a
-    # shuffle-hash semi co-located with the bucketed seen table. BOTH
-    # paths scan url_seen without exchanging it and hash-build only the
-    # round-sized probe (2M hashes ~ 16 MB broadcast)
-    seen_probe_broadcast_max: int = 2_000_000
     # buckets for url_seen at rest (state.BucketedSeenTable). Size so one
     # bucket streams through one task: 10^10 hashes / 4096 buckets ≈ 20 MB
-    # of longs each; sandbox default = local cores
+    # of longs each; sandbox default = local cores. Every round's exact
+    # check runs one plan (confirm_new), whatever its probe size
     seen_n_buckets: int = 32
     # seeded per-request user-agent rotation (antidetect.py): each fetch
     # gets a deterministic UA keyed on (url_hash, round, seed) and
-    # request_metrics gains an `agent` label column. Off by default — the
+    # request_metrics() gains an `agent` label column. Off by default — the
     # reference's antidetect module is opt-in config too
     rotate_user_agents: bool = False
     ua_rotation_seed: int = 0
@@ -358,11 +391,6 @@ class CrawlEngine:
             self.spark.createDataFrame(
                 [], "round int, partition_id int, scheduled long, fetched long, "
                     "errors long"))
-        req_schema = ("round int, host string, status string, agent string, "
-                      "n long") if self.cfg.rotate_user_agents else \
-                     "round int, host string, status string, n long"
-        sids["request_metrics"] = self.store["request_metrics"].overwrite(
-            self.spark.createDataFrame([], req_schema))
         n_seeds = seeded_obs.get["n"]
         self.store.commit_round(0, sids, {"pending": n_seeds})
         self._snapshot_ids, self._pending = sids, n_seeds
@@ -593,35 +621,6 @@ class CrawlEngine:
             .select("round", "partition_id", "scheduled", "fetched", "errors")
         )
 
-        # --- per-round per-host per-status request counters (the
-        # RecordRequest / RecordPageScraped families,
-        # internal/monitoring/metrics.go:601-661, rendered round-wise;
-        # host is the reference's label, status our deterministic
-        # fetched/miss stand-in for its code classes). With UA rotation
-        # on (antidetect.py), each request also carries its seeded agent
-        # label — pure codegen, keyed (url_hash, round, seed) ---
-        status_col = (F.when(F.col("found"), "fetched").otherwise("miss")
-                      .alias("status"))
-        if cfg.rotate_user_agents:
-            from .antidetect import user_agent_col
-
-            agent = user_agent_col(
-                F.col("url_hash"), F.lit(round_no),
-                list(cfg.user_agent_pool) if cfg.user_agent_pool else None,
-                seed=cfg.ua_rotation_seed).alias("agent")
-            request_metrics = (
-                fetched.groupBy("host", status_col, agent)
-                .agg(F.count("*").alias("n"))
-                .select(F.lit(round_no).alias("round"), "host", "status",
-                        "agent", "n")
-            )
-        else:
-            request_metrics = (
-                fetched.groupBy("host", status_col)
-                .agg(F.count("*").alias("n"))
-                .select(F.lit(round_no).alias("round"), "host", "status", "n")
-            )
-
         # --- out-links -> new frontier candidates ---
         spec = cfg.pagination_spec
         new_pag_state = new_chain_rows = None
@@ -667,7 +666,7 @@ class CrawlEngine:
 
         # --- dedup: Bloom prefilter (no false negatives), then the exact
         # url_seen check for the maybe-seen candidates only ---
-        if self._filter_total_bytes() <= cfg.bloom_broadcast_max_bytes:
+        if self._filter_total_bytes() <= BLOOM_BROADCAST_MAX_BYTES:
             # small filter: collect+broadcast, probe with zero extra shuffle
             bbc = self.spark.sparkContext.broadcast(self._load_bloom())
 
@@ -684,37 +683,13 @@ class CrawlEngine:
                 candidates, self._read("bloom_shards"),
                 cfg.bloom_n_shards, cfg.bloom_m_bits, cfg.bloom_k)
         # flagged is consumed by BOTH branches below — cached so the
-        # links -> canonicalize -> bloom Arrow chain runs once, not twice;
-        # the cache materialization also prices the probe strategy choice
+        # links -> canonicalize -> bloom Arrow chain runs once, not twice
         flagged = self._cache(flagged)
-        n_maybe = flagged.filter(F.col("maybe_seen")).count()
         definite_new = flagged.filter(~F.col("maybe_seen")).drop("maybe_seen")
-        needs_check = flagged.filter(F.col("maybe_seen")).drop("maybe_seen")
-        # url_seen grows with the crawl (10^10 hashes = ~80 GB) — it must
-        # be SCANNED, never SHUFFLED and never HASH-BUILT, per round. Both
-        # probe strategies share one shape: semi-join the seen scan
-        # against the round-sized probe (dupes = seen ⋉ probe), then
-        # anti-join the probe against those dupes — every build side and
-        # every exchanged side is O(this round's links).
-        url_seen = self.store.url_seen.read(
-            self.spark, self._snapshot_ids.get("url_seen"))
-        probe = needs_check.select("url_hash")
-        if n_maybe <= cfg.seen_probe_broadcast_max:
-            # quiet round (bloom FP ~1%): driver-broadcast probe — one
-            # parallel seen scan, zero exchange anywhere
-            dupes = url_seen.join(F.broadcast(probe), "url_hash",
-                                  "left_semi")
-        else:
-            # link-heavy round (steady-state crawls re-discover most
-            # links): probe too big to collect — shuffle it into the seen
-            # table's bucket layout instead. url_seen is bucketed at rest
-            # by url_hash (state.BucketedSeenTable), so Catalyst plans a
-            # shuffled-hash semi where the seen side is a bare bucketed
-            # FileScan (no Exchange, `Bucketed: true` — PLANS.md extract)
-            # and only the probe is exchanged + built.
-            dupes = url_seen.join(probe.hint("shuffle_hash"), "url_hash",
-                                  "left_semi")
-        confirmed_new = needs_check.join(dupes, "url_hash", "left_anti")
+        confirmed_new = confirm_new(
+            flagged.filter(F.col("maybe_seen")).drop("maybe_seen"),
+            self.store.url_seen.read(
+                self.spark, self._snapshot_ids.get("url_seen")))
         new_urls = definite_new.unionByName(confirmed_new)
         # cached: new_rows feeds three writes — without the cache the whole
         # links->bloom->anti-join chain re-executes per consumer
@@ -849,8 +824,10 @@ class CrawlEngine:
             sids["frontier"] = self._append("frontier", new_rows_w)
             sids["frontier_updates"] = self._append("frontier_updates",
                                                     updates_w)
+        # the frontier write above filled new_obs: size this write by it
+        n_new = new_obs.get["new_urls"]
         sids["url_seen"] = self.store.url_seen.append_round(
-            self.spark, new_rows.select("url_hash"), round_no)
+            self.spark, new_rows.select("url_hash"), round_no, n_rows=n_new)
         # one blob per shard (bloom.py invariant): the next round's
         # broadcast collect stays bounded by _filter_total_bytes()
         sids["bloom_shards"] = self.store["bloom_shards"].overwrite(
@@ -867,10 +844,8 @@ class CrawlEngine:
                 "pagination_chains", new_chain_rows)
         sids["crawl_log"] = self._append("crawl_log", log_w)
         sids["lineage_metrics"] = self._append("lineage_metrics", metrics)
-        sids["request_metrics"] = self._append("request_metrics",
-                                               request_metrics)
 
-        logged, n_new = log_obs.get, new_obs.get["new_urls"]
+        logged = log_obs.get
         stats = {
             "round": round_no,
             "scheduled": logged["scheduled"],
@@ -1004,6 +979,11 @@ class CrawlEngine:
     def crawl_log(self) -> DataFrame:
         return (self._read("crawl_log")
                 .orderBy("round", "domain", "seq"))
+
+    def request_metrics(self) -> DataFrame:
+        """Committed per-round per-host per-status request counters, served
+        from the crawl log (request_metrics_from_log)."""
+        return request_metrics_from_log(self._read("crawl_log"), self.cfg)
 
     def seen_hashes(self) -> DataFrame:
         return self.store.url_seen.read(

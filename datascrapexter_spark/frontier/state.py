@@ -114,6 +114,10 @@ class SnapshotTable:
         return self.current_snapshot_id() is not None
 
 
+# new hashes per url_seen write task (8 MB of longs)
+SEEN_ROWS_PER_WRITE_TASK = 1 << 20
+
+
 class BucketedSeenTable:
     """url_seen at rest: a Spark bucketed external table — CLUSTERED BY
     (url_hash) INTO n_buckets BUCKETS, identity-partitioned by crawl round.
@@ -138,11 +142,12 @@ class BucketedSeenTable:
     "ignore partitions the journal never committed" and re-running a
     crashed round first drops its own partition (idempotent).
 
-    Per-round write cost is O(new URLs this round); the bucketed insert
-    repartitions the delta to one task per bucket so each round adds at
-    most n_buckets files. Long crawls accumulate one thin partition per
-    round — production Iceberg bin-packs those in maintenance (`compact()`
-    here); the round loop itself never rewrites history.
+    Per-round write cost is O(new URLs this round): one task per
+    SEEN_ROWS_PER_WRITE_TASK new hashes, each writing one file per bucket
+    it holds (a quiet round: one task, at most n_buckets files). Long
+    crawls accumulate one thin partition per round — production Iceberg
+    bin-packs those in maintenance (`compact()` here); the round loop
+    itself never rewrites history.
 
     Sizing: pick n_buckets so one bucket's hashes stream through one task
     comfortably — at 10^10 URLs and 4096 buckets a bucket is ~20 MB of
@@ -192,11 +197,14 @@ class BucketedSeenTable:
         return self.append_round(spark, df, round_no, idempotent=False)
 
     def append_round(self, spark: SparkSession, df: DataFrame,
-                     round_no: int, idempotent: bool = True) -> int:
+                     round_no: int, idempotent: bool = True,
+                     n_rows: int | None = None) -> int:
         """Append this round's new hashes into partition round=round_no.
         `idempotent` first drops that partition if its directory exists
         (only when a crashed round re-runs), so a crashed round's
-        uncommitted files can never double up."""
+        uncommitted files can never double up. `n_rows`, the delta's
+        observed row count, sizes the write (unknown: a task per bucket);
+        a one-task write coalesces, so pass a cheap-to-read `df`."""
         import shutil
 
         self._ensure(spark)
@@ -205,10 +213,14 @@ class BucketedSeenTable:
             spark.sql(f"ALTER TABLE {self.table} "
                       f"DROP IF EXISTS PARTITION (round={round_no})")
             shutil.rmtree(part, ignore_errors=True)
-        (df.select(F.col("url_hash").cast("long"))
-         .withColumn("round", F.lit(round_no))
-         .repartition(self.n_buckets, "url_hash")
-         .write.mode("append").insertInto(self.table))
+        n_tasks = self.n_buckets if n_rows is None else max(1, min(
+            self.n_buckets, -(-n_rows // SEEN_ROWS_PER_WRITE_TASK)))
+        out = (df.select(F.col("url_hash").cast("long"))
+               .withColumn("round", F.lit(round_no)))
+        # one task needs no shuffle: it still writes one file per bucket
+        out = (out.coalesce(1) if n_tasks == 1
+               else out.repartition(n_tasks, "url_hash"))
+        out.write.mode("append").insertInto(self.table)
         return round_no
 
     def read(self, spark: SparkSession,
@@ -246,7 +258,7 @@ class StateStore:
     TABLES = ("frontier", "frontier_updates", "frontier_archive",
               "bloom_shards", "domain_state", "pagination_state",
               "pagination_chains", "crawl_log",
-              "lineage_metrics", "request_metrics", "extraction_metrics")
+              "lineage_metrics", "extraction_metrics")
 
     def __init__(self, root: str):
         self.root = root

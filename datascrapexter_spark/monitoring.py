@@ -1,14 +1,15 @@
 """Health checks, alert evaluation, and dashboard summary over the
-persisted crawl metrics tables.
+persisted crawl state.
 
 The reference runs these as an HTTP sidecar (health endpoints
 /root/reference/internal/monitoring/health.go:264-343 GetHealth /
 GetReadiness / GetLiveness; alert rules dashboard.go:961-984; dashboard
 summary dashboard.go:488-533). This sandbox has no server, and at
 cluster scale the natural surface is the STATE STORE anyway: the round
-journal's stats (`CrawlEngine.round_metrics()`), `request_metrics` and
-`extraction_metrics` (scheduler.py, run.py), so health and alerts are a
-driver-side evaluation over those tables — the aggregation and status-
+journal's stats (`CrawlEngine.round_metrics()`), the request counters
+served from the crawl log (`CrawlEngine.request_metrics()`) and the
+`extraction_metrics` table (scheduler.py, run.py), so health and alerts
+are a driver-side evaluation over that state — the aggregation and status-
 transition semantics are ported exactly; only the transport is dropped.
 
 Status lattice (health.go:283-321, GetHealth):
@@ -384,7 +385,7 @@ def engine_health_report(engine) -> dict:
     """Convenience wrapper over a CrawlEngine's committed state."""
     return crawl_health_report(
         engine.round_metrics(),
-        engine._read("request_metrics"),
+        engine.request_metrics(),
         engine.store["extraction_metrics"].read(engine.spark),
     )
 

@@ -133,8 +133,8 @@ def run_scrape_job(
     # consume `results` — persist so the mapInArrow HTML-extraction stage
     # (the job's most expensive) materializes exactly once
     results = results.persist()
-    # per-field success/error counters persisted next to the crawl's
-    # request_metrics (RecordExtractionSuccess/Error parity — SURVEY §2.4)
+    # per-field success/error counters persisted next to the crawl log
+    # (RecordExtractionSuccess/Error parity — SURVEY §2.4)
     store["extraction_metrics"].overwrite(
         extraction_metrics(results, cfg.fields))
     if output_path is not None:

@@ -91,7 +91,7 @@ def test_engine_wires_agent_label_into_request_metrics(spark, tmp_path):
                       rotate_user_agents=True, ua_rotation_seed=3)
     engine, _ = run_spark_crawl(spark, tmp_path, web, cfg)
 
-    metrics = engine._read("request_metrics")
+    metrics = engine.request_metrics()
     assert "agent" in metrics.columns
     recorded = {(r["round"], r["host"], r["status"], r["agent"]): r["n"]
                 for r in metrics.collect()}

@@ -42,7 +42,9 @@ def test_cogroup_probe_matches_broadcast(spark):
     assert all(got[int(h)] for h in seen_hashes[:200])
 
 
-def test_crawl_engine_identical_on_distributed_probe(spark, tmp_path):
+def test_crawl_engine_identical_on_distributed_probe(spark, tmp_path,
+                                                     monkeypatch):
+    from datascrapexter_spark.frontier import scheduler
     from datascrapexter_spark.frontier.scheduler import CrawlConfig, CrawlEngine
     from datascrapexter_spark.frontier.state import StateStore
     from tests.webgen import make_web
@@ -55,9 +57,9 @@ def test_crawl_engine_identical_on_distributed_probe(spark, tmp_path):
 
     logs = {}
     for name, max_bytes in (("bcast", 32 << 20), ("dist", 0)):
+        monkeypatch.setattr(scheduler, "BLOOM_BROADCAST_MAX_BYTES", max_bytes)
         cfg = CrawlConfig(max_rounds=3, bloom_n_shards=4,
-                          bloom_m_bits=1 << 12,
-                          bloom_broadcast_max_bytes=max_bytes)
+                          bloom_m_bits=1 << 12)
         eng = CrawlEngine(spark, StateStore(str(tmp_path / name)), pages,
                           robots, cfg)
         eng.run(seeds, max_rounds=3)

@@ -193,9 +193,36 @@ def test_request_metrics_match_log(crawled):
         (row[0], extract_domain(row[3]), row[6]) for row in spark_log(engine)
     )
     got = Counter()
-    for r in engine._read("request_metrics").collect():
+    for r in engine.request_metrics().collect():
         got[(r["round"], r["host"], r["status"])] += r["n"]
     assert got == expected
+
+
+def test_request_metrics_host_rule_matches_frontier(spark):
+    """The view's host is the frontier's: canonicalize_parts over
+    url_canon, which unbrackets IPv6 literals (parse_url's HOST keeps
+    the brackets) and keeps hosts java.net.URI rejects."""
+    from datascrapexter_spark.frontier.scheduler import (
+        CRAWL_LOG_SCHEMA,
+        request_metrics_from_log,
+    )
+    from datascrapexter_spark.functions.urlnorm import (
+        canonicalize_parts,
+        normalize_url,
+    )
+
+    urls = ["https://[::1]:8443/p", "https://[2001:db8::7]/q?a=1",
+            "https://user@Example.COM:8080/x", "https://my_host.example/y",
+            "https://shop.example.co.uk/", "https://[::1]:8443/p2"]
+    canon = [normalize_url(u) for u in urls]
+    log = spark.createDataFrame(
+        [(1, "d", i, c, i, 5, "fetched") for i, c in enumerate(canon)],
+        CRAWL_LOG_SCHEMA)
+    got = {(r["host"], r["n"]) for r in
+           request_metrics_from_log(log, make_cfg()).collect()}
+    hosts = [canonicalize_parts(c)[1] for c in canon]
+    assert got == {(h, hosts.count(h)) for h in hosts}
+    assert ("::1", 2) in got
 
 
 def test_round_metrics_match_stats(crawled):
@@ -225,17 +252,30 @@ def test_compaction_interval_invariant(spark, tmp_path, web):
     assert seen == sim.seen
 
 
-def test_seen_probe_strategies_identical(spark, tmp_path, web):
-    """seen_probe_broadcast_max=0 forces the heavy-round shuffle-hash
-    anti-join path; the crawl must be bit-identical to the broadcast
-    reverse-semi default (and to the oracle sim)."""
-    cfg = make_cfg(seen_probe_broadcast_max=0)
-    engine, _ = run_spark_crawl(spark, tmp_path, web, cfg)
-    sim = CrawlSimulator.from_raw(web[0], web[2], cfg)
-    sim.run(web[1])
-    assert spark_log(engine) == sim.sorted_log()
-    seen = {r["url_hash"] for r in engine.seen_hashes().collect()}
-    assert seen == sim.seen
+def test_seen_probe_plan_never_moves_seen(spark, tmp_path):
+    """The round's exact seen check (confirm_new) scans the bucketed
+    url_seen in place — no Exchange and no Sort above its FileScan — for
+    a quiet round's probe and for a probe above the broadcast threshold,
+    and answers needs_check minus seen either way."""
+    from datascrapexter_spark.frontier.scheduler import confirm_new
+    from datascrapexter_spark.frontier.state import BucketedSeenTable
+
+    from .test_seen_bucketed import _plan, _seen_scan_has_no_exchange_above
+
+    table = BucketedSeenTable(str(tmp_path), n_buckets=8)
+    table.overwrite_all(
+        spark, spark.range(0, 20000).select(F.xxhash64("id").alias("url_hash")))
+    session = spark.newSession()  # the lowered threshold stays local
+    session.conf.set("spark.sql.autoBroadcastJoinThreshold", "1k")
+    for s, lo, hi in ((spark, 19980, 20020), (session, 10000, 30000)):
+        needs_check = s.range(lo, hi).select(
+            F.xxhash64("id").alias("url_hash"), F.col("id"))
+        new = confirm_new(needs_check, table.read(s, max_round=0))
+        assert sorted(r["id"] for r in new.collect()) == list(
+            range(max(lo, 20000), hi))
+        plan = _plan(new)
+        assert "isFinalPlan=true" in plan, plan
+        assert _seen_scan_has_no_exchange_above(plan, table.table), plan
 
 
 def test_resume_ignores_uncommitted_appends(spark, tmp_path, web):
@@ -367,7 +407,7 @@ def test_crash_at_every_write_resumes_to_same_round(spark, tmp_path,
             sc.setLocalProperty("spark.job.description", None)
     n_jobs = len(sc.statusTracker().getJobIdsForGroup("crawl-round-jobs"))
     assert stats["fetched"] > 0
-    assert n_jobs <= 50, n_jobs
+    assert n_jobs <= 41, n_jobs
     expected = _round_outcome(engine, swept)
     assert ("frontier_archive", "append") in writes
     assert engine._read("frontier_archive").count() > 0

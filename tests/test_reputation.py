@@ -92,7 +92,7 @@ def test_engine_reputation_budgets_shrink_erroring_domain(spark, tmp_path):
         eng = CrawlEngine(spark, StateStore(str(tmp_path / f"s{flag}")),
                           pages, {}, cfg)
         eng.run(seeds, max_rounds=3)
-        rows = eng._read("request_metrics").collect()
+        rows = eng.request_metrics().collect()
         out: dict = {}
         for r in rows:
             dom = "bad" if "bad-" in r["host"] else "good"

@@ -81,10 +81,15 @@ def test_run_scrape_job_end_to_end(spark, tmp_path):
     # metrics parity tables persisted by the job (monitoring/metrics.go
     # RecordRequest + RecordExtractionSuccess/Error families):
     # request_metrics totals equal the number of scheduled fetches...
+    from datascrapexter_spark.frontier.scheduler import (
+        CrawlConfig,
+        request_metrics_from_log,
+    )
     from datascrapexter_spark.frontier.state import StateStore
 
     store = StateStore(str(tmp_path / "state"))
-    req = store["request_metrics"].read(spark).collect()
+    req = request_metrics_from_log(store["crawl_log"].read(spark),
+                                   CrawlConfig()).collect()
     assert sum(r["n"] for r in req) == sum(s["scheduled"] for s in stats)
     assert sum(r["n"] for r in req if r["status"] == "fetched") == len(rows)
     # ...and extraction_metrics counts errors per field over the results

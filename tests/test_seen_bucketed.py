@@ -35,8 +35,8 @@ def _plan(df) -> str:
 
 def _seen_scan_has_no_exchange_above(plan: str, table: str) -> bool:
     """True iff the url_seen FileScan line exists, is bucketed, and no
-    Exchange sits between it and the join (i.e. the scan subtree side of
-    the join contains no Exchange operator above the seen scan)."""
+    Exchange or Sort sits between it and the join (i.e. the scan subtree
+    side of the join neither moves nor sorts the seen set)."""
     lines = plan.splitlines()
     scan_idx = [i for i, ln in enumerate(lines) if table in ln]
     assert scan_idx, f"no scan of {table} in plan:\n{plan}"
@@ -50,21 +50,21 @@ def _seen_scan_has_no_exchange_above(plan: str, table: str) -> bool:
         if cur < indent:
             if "Join" in ln:
                 return True
-            if "Exchange" in ln:
+            if "Exchange" in ln or ln.lstrip(" :+-").startswith("Sort "):
                 return False
             indent = cur
     return True
 
 
 def test_heavy_probe_plan_no_exchange_over_seen(spark, seen):
-    """The link-heavy path shape (scheduler.py run_round): shuffle-hash
+    """The round's exact check (scheduler.confirm_new): shuffle-hash
     semi with the probe as build side — seen scanned in place."""
+    from datascrapexter_spark.frontier.scheduler import confirm_new
+
     url_seen = seen.read(spark, max_round=1)
     probe = spark.range(0, 4000).select(
         F.xxhash64(F.col("id") + 15000).alias("url_hash"))
-    dupes = url_seen.join(probe.hint("shuffle_hash"), "url_hash",
-                          "left_semi")
-    plan = _plan(dupes)
+    plan = _plan(confirm_new(probe, url_seen))
     assert _seen_scan_has_no_exchange_above(plan, seen.table), plan
     # probe side IS exchanged into the bucket layout (round-sized)
     assert re.search(r"Exchange hashpartitioning\(url_hash#\d+L, 8\)", plan), plan

@@ -11,7 +11,7 @@ with every opt-in data-plane feature enabled at once —
   - spider-trap gate (every page links one trap URL),
   - registered-domain blocklist (every page links one blocked mirror),
   - reputation-proportional budgets (a slice of pages 404 every round),
-  - seeded UA rotation (labels every request_metrics row),
+  - seeded UA rotation (an agent per request, keyed on the crawl log),
   - circuit breaker + robots gates (dead host + disallow rules + delays),
 
 over a chain web with CONSTANT per-round work (each round fetches ~the

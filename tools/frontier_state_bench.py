@@ -16,9 +16,9 @@ much history the store carries.
 Usage: python tools/frontier_state_bench.py [n_dead] [mult] [rounds]
                                             [--heavy]
 `--heavy` (round-3 verdict item #1 evidence): every page also links to
-64 already-crawled URLs on its own host and the probe gate is forced to
-0, so EVERY round runs the link-heavy exact check — the shuffle-hash
-semi against the bucketed-at-rest url_seen. Per-round work is still
+64 already-crawled URLs on its own host, so EVERY round's exact check
+(scheduler.confirm_new, the shuffle-hash semi against the bucketed-at-rest
+url_seen) probes a link-heavy, mostly-seen set. Per-round work is still
 constant; only the dead-history (seen-set) size differs between arms,
 isolating the seen-size dependence of the heavy path. Prints one JSON
 line {"mode": ..., "arms": {...}, "wall_ratio_4x_vs_1x": r}.
@@ -134,11 +134,7 @@ def run_arm(spark, n_dead: int, rounds: int, heavy: bool = False) -> dict:
     try:
         pol = PolitenessConfig(max_pages_per_round_per_domain=1,
                                requests_per_second=10.0, round_seconds=10.0)
-        # --heavy: gate=0 forces the link-heavy exact-check path (the
-        # shuffle-hash semi against the bucketed seen table) every round,
-        # the same path a >2M maybe-seen round takes at scale
-        cfg = CrawlConfig(politeness=pol, max_rounds=rounds + 1,
-                          seen_probe_broadcast_max=0 if heavy else 2_000_000)
+        cfg = CrawlConfig(politeness=pol, max_rounds=rounds + 1)
         engine = CrawlEngine(spark, StateStore(root), pages, {}, cfg)
         engine.init(seeds)
         inject_dead_history(spark, engine, n_dead, on_seed_hosts=heavy)
