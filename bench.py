@@ -11,8 +11,8 @@ engine's core:
 
   canonicalize (Arrow UDF) -> xxhash64 -> intra-batch dedup (tracking-param
   variants collapse) -> anti-join against a pre-materialized url_seen table
-  (half the URLs) -> per-registered-domain politeness budgets -> salted
-  two-phase top-k schedule -> count.
+  (half the URLs) -> per-registered-domain politeness budgets -> per-domain
+  top-k schedule (map-side group limit at the page cap) -> count.
 
 `--scaling` additionally reruns the frontier job at local[N] and local[4N]
 (N = cpus/4) on the SAME input and reports throughput at both plus

@@ -13,7 +13,8 @@ one full crawl-scheduling round over a synthetic raw-URL stream derived
 from `lineitem`: canonicalize (one fused Arrow crossing) -> xxhash64 ->
 intra-batch dedup -> robots gate (broadcast rules-array join + codegen
 prefix match) -> anti-join vs a pre-materialized url_seen half-space ->
-per-registered-domain politeness budgets -> salted two-phase top-k.
+per-registered-domain politeness budgets -> per-domain top-k (one
+window, map-side group limit at the page cap).
 
 Reference anchor: this is the scheduling core of the crawl loop
 (engine.go:678-804 generalized per-host; dedup superseding the
@@ -92,7 +93,8 @@ def frontier_bench(spark: SparkSession, sf_dir: str, mult: int = URL_MULT) -> di
     canonicalize -> hash -> intra-batch dedup -> robots gate (broadcast
     rules-array join + codegen prefix match — zero Python) -> anti-join vs
     url_seen -> per-domain politeness budgets (broadcast crawl-delay
-    table, no big-table pass) -> salted two-phase top-k.
+    table, no big-table pass) -> per-domain top-k (one window, map-side
+    group limit at the page cap).
     Returns {n_urls, wall_s, urls_per_sec, ...}."""
     from datascrapexter_spark.frontier.politeness import (
         PolitenessConfig,

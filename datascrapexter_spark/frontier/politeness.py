@@ -15,16 +15,18 @@ SAME recurrence once per crawl round from the previous round's aggregates
 of (config, robots, previous-round error rates), hence reproducible and
 identical in the sequential oracle simulator.
 
-Everything here is native Column expressions (whole-stage codegen) except
-nothing — no UDFs. The per-domain top-k runs in two phases over a salt of
-the url_hash so one mega-host cannot create a single giant window
-partition (north_rule: "salted groupBy-per-registered-domain to kill host
-skew"); phase 1 prunes each (domain, salt) slice to its local top-k,
-phase 2 ranks the <= n_salts*k survivors exactly.
+Everything here is native Column expressions (whole-stage codegen), no
+UDFs. Host skew in the per-domain top-k is handled by Spark's map-side
+group limit (north_rule: host skew handled explicitly): `schedule_topk`
+ranks each domain once, and the literal page cap in its filter lets the
+optimizer keep at most `cap` rows per domain in every map task before the
+domain exchange, so one mega-host sends at most (map tasks x cap) rows to
+its window, not its whole backlog.
 """
 
 from __future__ import annotations
 
+import math
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Window
@@ -42,7 +44,6 @@ class PolitenessConfig:
     error_rate_multiplier: float = 3.0   # ratelimiter.go:31
     max_slowdown: float = 4.0            # "up to 4x slower"
     max_penalty: float = 10.0            # consecutive-error cap
-    n_salts: int = 8
     # strategy surface (ratelimiter.go:91-99): fixed|adaptive|burst|hybrid.
     # The crawl engine's pinned recurrence (tokens_per_round below) is the
     # deterministic round-wise rendering of `adaptive`; the full 4-strategy
@@ -63,6 +64,25 @@ class PolitenessConfig:
     max_consecutive_multiplier: float = 10.0  # :38
 
 
+def _eff_rps(delay_col, cfg: PolitenessConfig):
+    """Base rate, lowered to 1/crawl-delay (delay capped at
+    max_crawl_delay_s) when the domain sets one."""
+    eff_delay = F.least(delay_col, F.lit(float(cfg.max_crawl_delay_s)))
+    rps = F.lit(float(cfg.requests_per_second))
+    return F.when(eff_delay > 0.0, F.least(rps, F.lit(1.0) / eff_delay)
+                  ).otherwise(rps)
+
+
+def _clamp_budget(raw, cfg: PolitenessConfig):
+    """greatest(1, least(raw, cap)): every budget ends here, so
+    1 <= tokens <= max(1, cap) — the bound schedule_topk's literal group
+    limit relies on."""
+    return F.greatest(
+        F.lit(1),
+        F.least(raw, F.lit(int(cfg.max_pages_per_round_per_domain))),
+    ).cast("int")
+
+
 def tokens_per_round(delay_col, err_rate_col, consec_col, cfg: PolitenessConfig):
     """Budget recurrence as a Column expression.
 
@@ -70,11 +90,6 @@ def tokens_per_round(delay_col, err_rate_col, consec_col, cfg: PolitenessConfig)
     eff_rps = min(base_rps, 1/min(crawl_delay, max_delay))
     slowdown = min(1 + err*mult, 4) * min(1 + 0.5*consec, 10), capped 10.
     """
-    eff_delay = F.least(delay_col, F.lit(float(cfg.max_crawl_delay_s)))
-    eff_rps = F.when(
-        eff_delay > 0.0,
-        F.least(F.lit(float(cfg.requests_per_second)), F.lit(1.0) / eff_delay),
-    ).otherwise(F.lit(float(cfg.requests_per_second)))
     err = F.coalesce(err_rate_col, F.lit(0.0))
     consec = F.coalesce(consec_col, F.lit(0))
     slowdown = F.when(
@@ -85,11 +100,9 @@ def tokens_per_round(delay_col, err_rate_col, consec_col, cfg: PolitenessConfig)
     penalty = F.least(F.lit(1.0) + 0.5 * consec.cast("double"),
                       F.lit(float(cfg.max_penalty)))
     total_slow = F.least(slowdown * penalty, F.lit(float(cfg.max_penalty)))
-    raw = F.floor(F.lit(float(cfg.round_seconds)) * eff_rps / total_slow)
-    return F.greatest(
-        F.lit(1),
-        F.least(raw, F.lit(int(cfg.max_pages_per_round_per_domain))),
-    ).cast("int")
+    raw = F.floor(F.lit(float(cfg.round_seconds)) * _eff_rps(delay_col, cfg)
+                  / total_slow)
+    return _clamp_budget(raw, cfg)
 
 
 def tokens_per_round_py(delay_s: float, err_rate: float | None,
@@ -97,8 +110,6 @@ def tokens_per_round_py(delay_s: float, err_rate: float | None,
     """Exact Python twin of `tokens_per_round` — shared by the sequential
     oracle simulator and the streaming stateful operator so every surface
     computes the same budget."""
-    import math
-
     eff_delay = min(delay_s, cfg.max_crawl_delay_s)
     if eff_delay > 0.0:
         eff_rps = min(cfg.requests_per_second, 1.0 / eff_delay)
@@ -172,30 +183,12 @@ def strategy_tokens_per_round(delay_col, err_rate_col, consec_col,
       adaptive  rate / interval_multiplier (min-change gated)
       burst     base rate + adjusted burst headroom
       hybrid    adaptive rate + adjusted burst headroom
+
+    The same budget as `strategy_tokens_from_state` over this round's
+    freshly gated multiplier (never null, as the stored one may be).
     """
-    eff_delay = F.least(F.coalesce(delay_col, F.lit(0.0)),
-                        F.lit(float(cfg.max_crawl_delay_s)))
-    eff_rps = F.when(
-        eff_delay > 0.0,
-        F.least(F.lit(float(cfg.requests_per_second)), F.lit(1.0) / eff_delay),
-    ).otherwise(F.lit(float(cfg.requests_per_second)))
-    base = F.lit(float(cfg.round_seconds)) * eff_rps
     mult = interval_multiplier(err_rate_col, consec_col, prev_mult_col, cfg)
-    burst = burst_size(err_rate_col, cfg)
-    if cfg.strategy == "fixed":
-        raw = F.floor(base)
-    elif cfg.strategy == "adaptive":
-        raw = F.floor(base / mult)
-    elif cfg.strategy == "burst":
-        raw = F.floor(base) + burst
-    elif cfg.strategy == "hybrid":
-        raw = F.floor(base / mult) + burst
-    else:
-        raise ValueError(f"unknown rate-limit strategy: {cfg.strategy}")
-    return F.greatest(
-        F.lit(1),
-        F.least(raw, F.lit(int(cfg.max_pages_per_round_per_domain))),
-    ).cast("int")
+    return strategy_tokens_from_state(delay_col, err_rate_col, mult, cfg)
 
 
 def strategy_tokens_from_state(delay_col, err_rate_col, mult_col,
@@ -210,13 +203,8 @@ def strategy_tokens_from_state(delay_col, err_rate_col, mult_col,
       burst     base + burst(err)
       hybrid    base / mult + burst(err)
     """
-    eff_delay = F.least(F.coalesce(delay_col, F.lit(0.0)),
-                        F.lit(float(cfg.max_crawl_delay_s)))
-    eff_rps = F.when(
-        eff_delay > 0.0,
-        F.least(F.lit(float(cfg.requests_per_second)), F.lit(1.0) / eff_delay),
-    ).otherwise(F.lit(float(cfg.requests_per_second)))
-    base = F.lit(float(cfg.round_seconds)) * eff_rps
+    base = F.lit(float(cfg.round_seconds)) * _eff_rps(
+        F.coalesce(delay_col, F.lit(0.0)), cfg)
     mult = F.coalesce(mult_col, F.lit(1.0))
     burst = burst_size(err_rate_col, cfg)
     if cfg.strategy == "fixed":
@@ -229,10 +217,7 @@ def strategy_tokens_from_state(delay_col, err_rate_col, mult_col,
         raw = F.floor(base / mult) + burst
     else:
         raise ValueError(f"unknown rate-limit strategy: {cfg.strategy}")
-    return F.greatest(
-        F.lit(1),
-        F.least(raw, F.lit(int(cfg.max_pages_per_round_per_domain))),
-    ).cast("int")
+    return _clamp_budget(raw, cfg)
 
 
 def interval_multiplier_py(err_rate: float | None, consec: int | None,
@@ -252,8 +237,6 @@ def interval_multiplier_py(err_rate: float | None, consec: int | None,
 
 
 def burst_size_py(err_rate: float | None, cfg: PolitenessConfig) -> int:
-    import math
-
     err = err_rate or 0.0
     base = float(cfg.burst)
     if err < cfg.burst_increase_threshold:
@@ -266,8 +249,6 @@ def burst_size_py(err_rate: float | None, cfg: PolitenessConfig) -> int:
 def strategy_tokens_from_state_py(delay_s: float, err_rate: float | None,
                                   mult: float | None,
                                   cfg: PolitenessConfig) -> int:
-    import math
-
     eff_delay = min(delay_s, cfg.max_crawl_delay_s)
     eff_rps = min(cfg.requests_per_second, 1.0 / eff_delay) \
         if eff_delay > 0.0 else cfg.requests_per_second
@@ -301,26 +282,26 @@ def schedule_topk(pending: DataFrame, budgets: DataFrame,
     Ordering (deterministic total order per domain, SURVEY §7):
       priority DESC, round_added ASC, url_hash ASC.
 
-    Two-phase top-k: phase 1 ranks within (domain, salt) — bounded
-    partitions regardless of host skew — and keeps local top-k; phase 2
-    ranks the survivors (<= n_salts * tokens per domain) exactly.
-    Emits `seq` = 1-based rank within the domain for this round.
+    One window ranks each domain; `seq` = 1-based rank within the domain
+    for this round. The filter's literal conjunct `seq <= max(1, cap)`
+    drops no row, since every budget is at most max(1, cap)
+    (`_clamp_budget`; the engine's adjustments only lower it). It lets
+    Spark's InferWindowGroupLimit plan a WindowGroupLimit Partial below
+    the domain exchange: each map task ships at most `cap` rows per
+    domain, so a hot host's window input is bounded by map tasks x cap.
+    Spark infers the limit only for literals up to
+    `spark.sql.optimizer.windowGroupLimitThreshold` (1000 by default);
+    above it the plan is a plain per-domain window with the same result.
+    The session's conf is the caller's and is left as is.
     """
     order = [F.col("priority").desc(), F.col("round_added").asc(),
              F.col("url_hash").asc()]
-    with_budget = pending.join(F.broadcast(budgets), "domain", "inner")
-
-    salt = F.pmod(F.col("url_hash"), F.lit(cfg.n_salts))
-    w1 = Window.partitionBy("domain", "salt").orderBy(*order)
-    phase1 = (
-        with_budget.withColumn("salt", salt)
-        .withColumn("local_rank", F.row_number().over(w1))
-        .filter(F.col("local_rank") <= F.col("tokens"))
-        .drop("local_rank", "salt")
-    )
-    w2 = Window.partitionBy("domain").orderBy(*order)
+    cap = max(1, int(cfg.max_pages_per_round_per_domain))
+    w = Window.partitionBy("domain").orderBy(*order)
+    seq = F.col("seq")
     return (
-        phase1.withColumn("seq", F.row_number().over(w2))
-        .filter(F.col("seq") <= F.col("tokens"))
+        pending.join(F.broadcast(budgets), "domain", "inner")
+        .withColumn("seq", F.row_number().over(w))
+        .filter((seq <= F.col("tokens")) & (seq <= F.lit(cap)))
         .drop("tokens")
     )

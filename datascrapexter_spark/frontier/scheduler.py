@@ -10,9 +10,11 @@ the robots gate is a codegen prefix match):
  1. pending frontier rows, robots-filtered (broadcast rules; denied ->
     'blocked' — compliance_test.go:226-238 semantics);
  2. per-domain budgets from the deterministic politeness recurrence
-    (politeness.py; ratelimiter.go semantics evaluated round-wise);
- 3. salted two-phase top-k picks this round's fetch set with a
-    deterministic total order (priority DESC, round_added, url_hash);
+    (round_budgets; ratelimiter.go semantics evaluated round-wise);
+ 3. one per-domain window picks this round's fetch set with a
+    deterministic total order (priority DESC, round_added, url_hash); a
+    map-side group limit at the page cap bounds what a hot host ships
+    to its window (schedule_topk);
  4. "fetch" = left equi-join against the canonical pages table (the
     sandbox stand-in for the HTTP fetch — BASELINE.json input_hint);
     misses re-enqueue with attempts+1 (client.go:311-322 retry semantics,
@@ -244,6 +246,46 @@ class CrawlConfig:
     # 1% score floor: a bad host keeps a probe-sized budget and can
     # recover. Opt-in; off = bit-identical crawls to round-4 fixtures.
     reputation_budgets: bool = False
+
+
+def round_budgets(domains: DataFrame, domain_delays: DataFrame,
+                  prev_state: DataFrame, cfg: CrawlConfig,
+                  round_no: int) -> DataFrame:
+    """(domain, tokens): each domain's page budget for round `round_no`, a
+    pure Column recurrence over the previous round's `domain_state` and
+    the robots crawl delays. 1 <= tokens <= max(1, page cap) on every
+    branch, which schedule_topk's literal group limit rests on: the
+    recurrences clamp to it, and the reputation scale and the half-open
+    probe only lower a budget, floored at 1."""
+    pol = cfg.politeness
+    delay = F.coalesce(F.col("crawl_delay_s"), F.lit(0.0))
+    if pol.use_strategy_budgets:
+        tokens = strategy_tokens_from_state(
+            delay, F.col("err_rate"), F.col("rate_mult"), pol)
+    else:
+        tokens = tokens_per_round(
+            delay, F.col("err_rate"), F.col("consec_err"), pol)
+    if cfg.reputation_budgets:
+        # cumulative score (reputation.py formula, dup signal 0 on
+        # the engine path): score = MICRO - err_ppm floored at 1%;
+        # no history -> full score. tokens scale proportionally,
+        # floor 1 (the half-open-probe analogue).
+        from .reputation import MICRO, _idiv
+
+        err_ppm = _idiv(F.lit(MICRO) * F.col("n_err_total"),
+                        F.greatest(F.col("n_fetch_total"), F.lit(1)))
+        score = F.when(
+            F.coalesce("n_fetch_total", F.lit(0)) == 0, F.lit(MICRO)
+        ).otherwise(
+            F.greatest(F.lit(MICRO) - err_ppm, F.lit(MICRO // 100)))
+        tokens = F.greatest(_idiv(tokens * score, F.lit(MICRO)), F.lit(1))
+    if cfg.quarantine_max_failures > 0:
+        # half-open: first round after expiry probes with budget 1
+        tokens = F.when(F.col("quarantined_until") == round_no - 1,
+                        F.lit(1)).otherwise(tokens)
+    return (domains.join(F.broadcast(domain_delays), "domain", "left")
+            .join(F.broadcast(prev_state), "domain", "left")
+            .select("domain", tokens.alias("tokens")))
 
 
 class CrawlEngine:
@@ -556,54 +598,8 @@ class CrawlEngine:
             eligible = eligible.join(
                 F.broadcast(quarantined), "domain", "left_anti")
 
-        domains = eligible.select("domain").distinct()
-        if pol.use_strategy_budgets:
-            tokens = strategy_tokens_from_state(
-                F.coalesce(F.col("crawl_delay_s"), F.lit(0.0)),
-                F.col("err_rate"), F.col("rate_mult"), pol)
-        else:
-            tokens = tokens_per_round(
-                F.coalesce(F.col("crawl_delay_s"), F.lit(0.0)),
-                F.col("err_rate"), F.col("consec_err"), pol)
-        budgets = (
-            domains.join(F.broadcast(self.domain_delays), "domain", "left")
-            .join(F.broadcast(prev_state.select(
-                "domain", "err_rate", "consec_err", "rate_mult",
-                "n_fetch_total", "n_err_total")),
-                "domain", "left")
-            .select("domain", tokens.alias("tokens"),
-                    "n_fetch_total", "n_err_total")
-        )
-        if cfg.reputation_budgets:
-            # cumulative score (reputation.py formula, dup signal 0 on
-            # the engine path): score = MICRO - err_ppm floored at 1%;
-            # no history -> full score. tokens scale proportionally,
-            # floor 1 (the half-open-probe analogue).
-            from .reputation import MICRO, _idiv
-
-            err_ppm = _idiv(F.lit(MICRO) * F.col("n_err_total"),
-                            F.greatest(F.col("n_fetch_total"), F.lit(1)))
-            score = F.when(
-                F.coalesce("n_fetch_total", F.lit(0)) == 0, F.lit(MICRO)
-            ).otherwise(
-                F.greatest(F.lit(MICRO) - err_ppm, F.lit(MICRO // 100)))
-            budgets = budgets.withColumn(
-                "tokens",
-                F.greatest(_idiv(F.col("tokens") * score, F.lit(MICRO)),
-                           F.lit(1)))
-        budgets = budgets.select("domain", "tokens")
-        if cfg.quarantine_max_failures > 0:
-            # half-open: first round after expiry probes with budget 1
-            half = prev_state.filter(
-                F.col("quarantined_until") == round_no - 1
-            ).select("domain", F.lit(True).alias("_half"))
-            budgets = (
-                budgets.join(F.broadcast(half), "domain", "left")
-                .withColumn("tokens", F.when(F.col("_half"), F.lit(1))
-                            .otherwise(F.col("tokens")))
-                .drop("_half")
-            )
-
+        budgets = round_budgets(eligible.select("domain").distinct(),
+                                self.domain_delays, prev_state, cfg, round_no)
         scheduled = self._cache(schedule_topk(eligible, budgets, pol))
 
         # --- "fetch": equi-join the canonical pages table ---

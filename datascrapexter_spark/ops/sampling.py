@@ -110,7 +110,7 @@ def shuffle_shards(df: DataFrame, key_col: str, n_shards: int,
 
 
 def cap_per_group(df: DataFrame, group_col: str, k: int, key_col: str,
-                  seed: int = 0, n_salts: int = 16) -> DataFrame:
+                  seed: int = 0) -> DataFrame:
     """Keep at most k rows per group, picked deterministically — the
     Gopher/Dolma per-domain budget: no single domain may dominate the
     training mix, and the surviving rows must be the same every run.
@@ -118,27 +118,24 @@ def cap_per_group(df: DataFrame, group_col: str, k: int, key_col: str,
     The pick order is (u(key), key): a stable pseudo-random choice, not
     "first k by storage order" (which would bias toward old crawl rounds).
 
-    Skew-resistant two-phase top-k (same shape as the frontier's
-    schedule_topk): phase 1 ranks within (group, salt) so partition size
-    stays bounded no matter how hot one domain is, keeping only local
-    top-k; phase 2 ranks the <= n_salts*k survivors per group exactly.
-    The salt affects partitioning only, never the result.
+    One window over the group, filtered on a literal k (same shape as the
+    frontier's schedule_topk): for k up to
+    `spark.sql.optimizer.windowGroupLimitThreshold` (1000 by default)
+    Spark plans a WindowGroupLimit Partial below the group exchange, so
+    each map task ships at most k rows per group and a hot group's window
+    input is bounded by map tasks x k. Above it the plan is a plain
+    per-group window with the same result.
     """
     from pyspark.sql import Window
 
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    order = [F.col("_u").asc(), F.col(key_col).asc()]
-    salt = F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_salts))
-    w1 = Window.partitionBy(group_col, "_salt").orderBy(*order)
-    w2 = Window.partitionBy(group_col).orderBy(*order)
+    w = Window.partitionBy(group_col).orderBy(F.col("_u").asc(),
+                                              F.col(key_col).asc())
     return (df.withColumn("_u", hash_unit_col(key_col, seed))
-            .withColumn("_salt", salt)
-            .withColumn("_r1", F.row_number().over(w1))
-            .filter(F.col("_r1") <= k)
-            .withColumn("_r2", F.row_number().over(w2))
-            .filter(F.col("_r2") <= k)
-            .drop("_u", "_salt", "_r1", "_r2"))
+            .withColumn("_rank", F.row_number().over(w))
+            .filter(F.col("_rank") <= k)
+            .drop("_u", "_rank"))
 
 
 def take_token_budget(df: DataFrame, budget: int, key_col: str,

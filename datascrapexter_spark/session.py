@@ -2,8 +2,10 @@
 
 Scale notes (100 TB / 1000-executor design, tested on local[N]):
 - AQE on: runtime coalescing of shuffle partitions + skew-join splitting.
-  Host-skewed politeness aggregations additionally use explicit salting
-  (see frontier/politeness.py) because AQE only splits *join* skew.
+  AQE only splits *join* skew, so the host-skewed politeness top-k bounds
+  a hot host's window input itself: a literal page cap lets Spark plan a
+  map-side WindowGroupLimit before the domain exchange (see
+  frontier/politeness.py).
 - Arrow enabled: every Python crossing is Arrow-batched (pandas UDFs);
   there is no row-at-a-time Python UDF anywhere in this package.
 - shuffle.partitions defaults to cores on local mode; on a real cluster

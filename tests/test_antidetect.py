@@ -86,7 +86,7 @@ def test_engine_wires_agent_label_into_request_metrics(spark, tmp_path):
     (determinism checked through the engine, not a Python twin)."""
     web = make_web(n_hosts=3, pages_per_host=4, seed=7)
     pol = PolitenessConfig(requests_per_second=2.0, round_seconds=2.0,
-                           max_pages_per_round_per_domain=6, n_salts=4)
+                           max_pages_per_round_per_domain=6)
     cfg = CrawlConfig(politeness=pol, max_rounds=6,
                       rotate_user_agents=True, ua_rotation_seed=3)
     engine, _ = run_spark_crawl(spark, tmp_path, web, cfg)

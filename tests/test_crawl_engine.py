@@ -19,7 +19,6 @@ def make_cfg(**kw):
         requests_per_second=2.0,
         round_seconds=2.0,               # base tokens = 4/round
         max_pages_per_round_per_domain=6,
-        n_salts=4,
     )
     defaults = dict(politeness=pol, max_attempts=2, max_rounds=12)
     defaults.update(kw)
@@ -407,7 +406,7 @@ def test_crash_at_every_write_resumes_to_same_round(spark, tmp_path,
             sc.setLocalProperty("spark.job.description", None)
     n_jobs = len(sc.statusTracker().getJobIdsForGroup("crawl-round-jobs"))
     assert stats["fetched"] > 0
-    assert n_jobs <= 41, n_jobs
+    assert n_jobs <= 40, n_jobs
     expected = _round_outcome(engine, swept)
     assert ("frontier_archive", "append") in writes
     assert engine._read("frontier_archive").count() > 0
@@ -596,7 +595,7 @@ def test_circuit_breaker_quarantine_reopen(spark, tmp_path):
     robots = {"q.ex.com": "User-agent: *\nCrawl-delay: 1\n"}
     web = (rows, seeds, robots)
     pol = PolitenessConfig(requests_per_second=2.0, round_seconds=0.5,
-                           max_pages_per_round_per_domain=6, n_salts=4)
+                           max_pages_per_round_per_domain=6)
     cfg = CrawlConfig(politeness=pol, max_attempts=3, max_rounds=10,
                       quarantine_max_failures=2, quarantine_reset_rounds=2)
     engine, stats = run_spark_crawl(spark, tmp_path, web, cfg)
@@ -718,7 +717,7 @@ def test_strategy_budgets_end_to_end(spark, tmp_path):
     web = (rows, seeds, {})
     pol = PolitenessConfig(
         requests_per_second=2.0, round_seconds=2.0,
-        max_pages_per_round_per_domain=6, n_salts=4,
+        max_pages_per_round_per_domain=6,
         strategy="hybrid", use_strategy_budgets=True, burst=2,
         consec_err_limit=1,
     )

@@ -163,3 +163,174 @@ def test_rules_array_gate_matches_python_twin(spark):
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "BroadcastExchange" in plan or "Broadcast" in plan
         assert "Python" not in plan and "ArrowEval" not in plan
+
+
+# ---------------------------------------------------------------------------
+# Per-domain top-k (politeness.schedule_topk) and the budget ceiling it needs
+# ---------------------------------------------------------------------------
+
+
+def _skewed_pending(cap, seed=5):
+    """Pending rows and per-domain budgets: one hot domain holds >= 90% of
+    the rows and several times the cap, priorities and round_added are
+    mixed, and the budgets span 1..max(1, cap) (the hot domain's is the
+    top one)."""
+    import random
+
+    rnd = random.Random(seed)
+    n_hot = max(3 * cap, 1000)
+    sizes = {"hot.com": n_hot}
+    sizes.update({f"cold{i}.com": 3 + 2 * i for i in range(8)})
+    hashes = set()
+    while len(hashes) < sum(sizes.values()):
+        hashes.add(rnd.getrandbits(64) - (1 << 63))
+    hashes = list(hashes)
+    rows = []
+    for dom, n in sizes.items():
+        for _ in range(n):
+            rows.append((dom, hashes.pop(), rnd.randrange(10),
+                         rnd.randrange(4)))
+    assert sizes["hot.com"] >= 0.9 * len(rows)
+    cold = sorted(d for d in sizes if d != "hot.com")
+    top = max(1, cap)
+    tokens = {"hot.com": top}
+    tokens.update({d: 1 + (i * (top - 1)) // (len(cold) - 1)
+                   for i, d in enumerate(cold)})
+    assert min(tokens.values()) == 1 and max(tokens.values()) == top
+    return rows, tokens
+
+
+def _topk_twin(rows, tokens):
+    by_dom = {}
+    for dom, h, prio, added in rows:
+        by_dom.setdefault(dom, []).append((-prio, added, h))
+    out = set()
+    for dom, keys in by_dom.items():
+        for seq, (_, _, h) in enumerate(sorted(keys)[:tokens[dom]], 1):
+            out.add((dom, seq, h))
+    return out
+
+
+def _schedule(spark, rows, tokens, cap):
+    from datascrapexter_spark.frontier.politeness import (PolitenessConfig,
+                                                          schedule_topk)
+
+    pending = spark.createDataFrame(
+        rows, "domain string, url_hash long, priority int, round_added int"
+    ).repartition(4)
+    budgets = spark.createDataFrame(sorted(tokens.items()),
+                                    "domain string, tokens int")
+    cfg = PolitenessConfig(max_pages_per_round_per_domain=cap)
+    return schedule_topk(pending, budgets, cfg)
+
+
+def _plan(df):
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+@pytest.mark.parametrize("cap", [0, 6, 1000, 1001])
+def test_schedule_topk_matches_row_wise_twin_on_skew(spark, cap):
+    """Exact per-domain top-`tokens` in (priority DESC, round_added,
+    url_hash) order, for caps with a map-side group limit (6, 1000; 0,
+    whose budgets are still 1) and one above Spark's inference threshold
+    (1001, plain window)."""
+    rows, tokens = _skewed_pending(cap)
+    sched = _schedule(spark, rows, tokens, cap)
+    got = {(r["domain"], r["seq"], r["url_hash"])
+           for r in sched.select("domain", "seq", "url_hash").collect()}
+    assert got == _topk_twin(rows, tokens)
+    assert "WindowGroupLimit" in _plan(sched) or cap > 1000
+
+
+@pytest.mark.parametrize("cap", [6, 1000])
+def test_schedule_topk_plan_limits_before_domain_exchange(spark, cap):
+    """One domain exchange after the budget join, and a WindowGroupLimit
+    Partial below it: each map task ships at most `cap` rows per domain."""
+    rows, tokens = _skewed_pending(6)
+    plan = _plan(_schedule(spark, rows, tokens, cap))
+    assert plan.count("Exchange hashpartitioning(domain") == 1, plan
+    exchange = plan.index("Exchange hashpartitioning(domain")
+    partial = plan.index(f"row_number(), {cap}, Partial")
+    join = plan.index("BroadcastHashJoin")
+    assert exchange < partial < join, plan
+
+
+def test_schedule_topk_above_limit_threshold_plans_plain_window(spark):
+    """cap 1001 is above Spark's default windowGroupLimitThreshold: no
+    group limit, one plain per-domain window (exactness is checked by the
+    row-wise twin above)."""
+    rows, tokens = _skewed_pending(6)
+    plan = _plan(_schedule(spark, rows, tokens, 1001))
+    assert "WindowGroupLimit" not in plan
+    assert plan.count("Exchange hashpartitioning(domain") == 1, plan
+
+
+def test_budgets_stay_within_one_and_cap(spark):
+    """1 <= tokens <= max(1, cap) for every budget expression — the bound
+    schedule_topk's literal group limit relies on: tokens_per_round, all
+    four strategy_tokens_from_state strategies, and the engine's
+    round_budgets with the reputation scale and the half-open probe."""
+    from pyspark.sql import functions as F
+
+    from datascrapexter_spark.frontier.politeness import (
+        PolitenessConfig,
+        strategy_tokens_from_state,
+        tokens_per_round,
+    )
+    from datascrapexter_spark.frontier.scheduler import (CrawlConfig,
+                                                         round_budgets)
+
+    # raw budgets far above and below every cap: no delay and a long round,
+    # a huge delay, heavy errors, long error streaks, tiny and huge
+    # multipliers, missing history
+    state = [
+        ("a.com", 0.0, 0, 0, None, 1.0, 0, 0),
+        ("b.com", 1.0, 100, 9, 4, 25.0, 50, 50),
+        ("c.com", 0.5, 3, 1, None, 0.01, 10, 4),
+        ("d.com", None, None, None, None, None, None, None),
+        ("e.com", 0.0, 0, 0, 4, 0.5, 1000, 0),
+    ]
+    delays = [("a.com", 0.001), ("b.com", 1e6), ("c.com", 2.0)]
+    spark_state = spark.createDataFrame(
+        state, "domain string, err_rate double, consec_err int, "
+               "breaker_failures int, quarantined_until int, "
+               "rate_mult double, n_fetch_total long, n_err_total long")
+    spark_delays = spark.createDataFrame(delays,
+                                         "domain string, crawl_delay_s double")
+    domains = spark_state.select("domain")
+    inputs = domains.join(spark_delays, "domain", "left").join(
+        spark_state, "domain")
+    delay = F.coalesce(F.col("crawl_delay_s"), F.lit(0.0))
+
+    for cap in (0, 1, 6, 1000):
+        cols = []
+        for round_s in (0.1, 500.0):
+            base = dict(max_pages_per_round_per_domain=cap,
+                        round_seconds=round_s, burst=7)
+            cols.append(tokens_per_round(
+                delay, F.col("err_rate"), F.col("consec_err"),
+                PolitenessConfig(**base)))
+            for strategy in ("fixed", "adaptive", "burst", "hybrid"):
+                cols.append(strategy_tokens_from_state(
+                    delay, F.col("err_rate"), F.col("rate_mult"),
+                    PolitenessConfig(strategy=strategy, **base)))
+        got = [v for r in inputs.select(*cols).collect() for v in r]
+        assert len(got) == 10 * len(state)
+        assert all(1 <= t <= max(1, cap) for t in got), (cap, got)
+        assert max(got) == max(1, cap)
+
+        for strategy_budgets in (False, True):
+            for strategy in ("fixed", "hybrid"):
+                pol = PolitenessConfig(
+                    max_pages_per_round_per_domain=cap, round_seconds=500.0,
+                    burst=7, strategy=strategy,
+                    use_strategy_budgets=strategy_budgets)
+                cfg = CrawlConfig(politeness=pol, reputation_budgets=True,
+                                  quarantine_max_failures=2)
+                budgets = dict(round_budgets(domains, spark_delays,
+                                             spark_state, cfg, 5).collect())
+                assert sorted(budgets) == sorted(s[0] for s in state)
+                assert all(1 <= t <= max(1, cap) for t in budgets.values()), (
+                    cap, strategy_budgets, strategy, budgets)
+                # half-open probe: quarantine expired at round 4
+                assert budgets["b.com"] == budgets["e.com"] == 1

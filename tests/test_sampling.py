@@ -181,6 +181,20 @@ def test_cap_per_group_skew_and_equivalence(spark):
     assert sorted(map(tuple, out)) == sorted(map(tuple, again))
 
 
+
+def test_cap_per_group_plan_limits_before_exchange(spark):
+    """One group exchange, with a WindowGroupLimit Partial below it: each
+    map task keeps at most k rows per group before the shuffle."""
+    from datascrapexter_spark.ops.sampling import cap_per_group
+
+    df = spark.createDataFrame([(i, "hot") for i in range(300)],
+                               "doc_id long, grp string")
+    plan = cap_per_group(df, "grp", 5, "doc_id", seed=9)._jdf \
+        .queryExecution().executedPlan().toString()
+    assert plan.count("Exchange") == 1, plan
+    assert plan.index("Exchange hashpartitioning(grp") < \
+        plan.index("row_number(), 5, Partial"), plan
+
 def test_take_token_budget_prefix_semantics(spark):
     from datascrapexter_spark.ops.sampling import (take_token_budget,
                                                    hash_unit_col)
