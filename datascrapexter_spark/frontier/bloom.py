@@ -1,28 +1,31 @@
 """Partitioned Bloom URL-seen prefilter, built/probed in vectorized numpy
-inside Arrow-batched UDFs — the north_rule's partitioned URL-seen filter,
-and the only filter family the crawl engine uses.
+inside one Arrow-batched cogroup per crawl round — the north_rule's
+partitioned URL-seen filter, and the only filter family the crawl engine
+uses.
 
 Role at scale: the exact seen-set lives in the `url_seen` table (bucketed
 by url_hash); correctness is ALWAYS settled by an exact left_anti join
 (SURVEY §7 "Bloom is a prefilter only"). The Bloom filter's job is to
 shrink that anti-join's probe side: candidates whose shard bitset says
-"definitely unseen" skip the shuffle entirely, and at 10^10 URLs with a
-~1% duplicate discovery rate that's a ~99% reduction in anti-join input.
+"definitely unseen" skip the exact check, and at 10^10 URLs with a ~1%
+duplicate discovery rate that's a ~99% reduction in anti-join input.
 
 Sharding: shard_id = pmod(url_hash, n_shards) (non-negative, matching Spark
-`F.pmod` in every probe path, including negative hashes), so each shard covers a
-hash-disjoint slice and shards can be built/merged per Spark partition.
+`F.pmod` for every n_shards, including negative hashes), so each shard covers
+a hash-disjoint slice and is probed and folded where it lives.
 
 State invariant: the `bloom_shards` snapshot table holds ONE row
-(shard_id, round, bitset) per shard that has any member — never more than
-n_shards rows and never more than n_shards * m_bits/8 bytes. Each crawl
-round folds its new hashes into the committed blobs (OR-merge per shard,
-CrawlEngine._fold_bloom) and overwrites the table; `round` is the last
-round that changed the shard. So the driver-broadcast probe collects at
-most the filter's own size, and the distributed probe reads one blob per
-shard. Size for the target frontier (e.g. 4096 shards x 16 MiB = 64 GiB
+(shard_id, bitset) per shard that has any member — never more than
+n_shards rows and never more than n_shards * m_bits/8 bytes — and the
+blobs hold exactly the hashes of `url_seen` (both are written from the
+same hashes and pinned to the same journal record). Each round runs one
+pass, `probe_and_fold`: candidates shuffle by shard, each task reads only
+its shard's blob (a few MiB at scale, e.g. 4096 shards x 16 MiB = 64 GiB
 total at 10^10 URLs ~ 9.6 bits/key; the defaults are test-sized, 16 x
-128 KiB). Probing broadcasts only the shards, never the seen table.
+128 KiB), flags its candidates and emits the shard's next blob. Folding
+every candidate rather than only the new ones gives the same bytes: a
+candidate that is not new is in `url_seen`, so its bits are already set.
+No blob ever visits the driver.
 
 The reference's dedup is a pass-through stub (internal/pipeline/
 components.go:173-263 `RecordDeduplicator`) + an MD5 helper
@@ -32,8 +35,10 @@ north_rule.
 
 from __future__ import annotations
 
+from functools import reduce
+
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -82,7 +87,8 @@ def probe_bitset(bitset: bytes, hashes: np.ndarray,
 
 
 class BloomShards:
-    """Driver-side handle over all shards; broadcastable for probe UDFs."""
+    """Driver-side filter over all shards — the reference that the engine's
+    one-pass cogroup (probe_and_fold) is tested against."""
 
     def __init__(self, n_shards: int = DEFAULT_N_SHARDS,
                  m_bits: int = DEFAULT_M_BITS, k: int = DEFAULT_K,
@@ -93,16 +99,13 @@ class BloomShards:
         self.shards = shards or {}
 
     def shard_of(self, hashes: np.ndarray) -> np.ndarray:
-        """pmod semantics (non-negative result, sign of the divisor) so the
-        driver-broadcast path agrees with the Spark `F.pmod` shard columns in
-        the scheduler/cogroup paths for EVERY n_shards, not just powers of
-        two — np.mod on int64 matches Spark pmod exactly."""
+        """pmod semantics (non-negative result, sign of the divisor): np.mod
+        on int64 matches the Spark `F.pmod` shard column of probe_and_fold
+        for EVERY n_shards, not just powers of two."""
         return np.mod(np.asarray(hashes, dtype=np.int64),
                       np.int64(self.n_shards)).astype(np.int64)
 
     def add_hashes(self, hashes: np.ndarray) -> None:
-        """Driver-side incremental build (executor-side build goes through
-        build_bitset inside applyInPandas — see scheduler)."""
         hashes = np.asarray(hashes, dtype=np.int64)
         if not len(hashes):
             return
@@ -112,7 +115,7 @@ class BloomShards:
             cur = self.shards.get(int(s))
             self.shards[int(s)] = merge_bitsets(cur, bs) if cur else bs
 
-    def maybe_seen(self, hashes: pd.Series | np.ndarray) -> np.ndarray:
+    def maybe_seen(self, hashes: np.ndarray) -> np.ndarray:
         hashes = np.asarray(hashes, dtype=np.int64)
         out = np.zeros(len(hashes), dtype=bool)
         if not len(hashes):
@@ -126,61 +129,58 @@ class BloomShards:
             out[mask] = probe_bitset(bitset, hashes[mask], self.m_bits, self.k)
         return out
 
-    # -- persistence ------------------------------------------------------
 
-    def to_rows(self, round_no: int) -> list[tuple[int, int, bytes]]:
-        return [(int(s), round_no, bs) for s, bs in sorted(self.shards.items())]
-
-    @classmethod
-    def from_rows(cls, rows, n_shards: int = DEFAULT_N_SHARDS,
-                  m_bits: int = DEFAULT_M_BITS, k: int = DEFAULT_K) -> "BloomShards":
-        """Handle over persisted (shard_id, round, bitset) rows; rows that
-        share a shard are OR-merged."""
-        shards: dict[int, bytes] = {}
-        for shard_id, _round, bitset in rows:
-            cur = shards.get(shard_id)
-            shards[shard_id] = merge_bitsets(cur, bitset) if cur else bytes(bitset)
-        return cls(n_shards, m_bits, k, shards)
+BLOB_SCHEMA = T.StructType([
+    T.StructField("shard_id", T.IntegerType()),
+    T.StructField("bitset", T.BinaryType()),
+])
 
 
-def probe_maybe_seen_df(candidates: DataFrame, shards_df: DataFrame,
-                        n_shards: int, m_bits: int, k: int,
-                        hash_col: str = "url_hash") -> DataFrame:
-    """Distributed probe: candidates cogrouped with their shard's bitsets —
-    no shard ever visits the driver.
+def probe_and_fold(candidates: DataFrame, shards: DataFrame | None,
+                   n_shards: int, m_bits: int, k: int) -> DataFrame:
+    """One Bloom pass: `candidates` (with a `url_hash` column) cogrouped by
+    shard_id = pmod(url_hash, n_shards) with the committed `shards` blobs
+    (None = no prior state). Emits, in one frame (split it with
+    split_pass):
 
-    This is the 10^10-scale path: the full filter (n_shards * m_bits/8
-    bytes, e.g. 64 GiB) cannot be collected+broadcast, but each hash needs
-    exactly one shard, so candidates shuffle by shard_id = pmod(hash,
-    n_shards) and each task reads only its shard's blob (a few MiB) for a
-    vectorized numpy probe. Output = candidates +
-    `maybe_seen` boolean. The small-filter fast path (driver broadcast, no
-    shuffle) lives in the scheduler and is chosen by total filter size.
+    * every candidate, flagged `maybe_seen` against its shard's blob, with
+      null shard_id and bitset;
+    * one row per shard (every other column null) holding its next blob,
+      OR(blob, build_bitset(candidate hashes)); a shard with no candidate
+      passes its blob through unchanged.
     """
+    if shards is None:
+        shards = candidates.sparkSession.createDataFrame([], BLOB_SCHEMA)
+    # nullable throughout: each row kind is null in the other's columns
     out_schema = T.StructType(
-        list(candidates.schema.fields) + [T.StructField("maybe_seen", T.BooleanType())]
-    )
-    out_cols = [f.name for f in out_schema.fields]
-    shard_col = F.pmod(F.col(hash_col), F.lit(n_shards)).cast("int")
-    cand = candidates.withColumn("_shard_id", shard_col)
-    sh = shards_df.withColumnRenamed("shard_id", "_shard_id")
+        [T.StructField(f.name, f.dataType) for f in candidates.schema.fields]
+        + [T.StructField("maybe_seen", T.BooleanType())]
+        + list(BLOB_SCHEMA.fields))
 
-    def probe(cand_pdf: pd.DataFrame, shards_pdf: pd.DataFrame) -> pd.DataFrame:
-        if cand_pdf.empty:
-            return pd.DataFrame(columns=out_cols)
-        bitset = None
-        for bs in shards_pdf["bitset"]:
-            b = bytes(bs)
-            bitset = b if bitset is None else merge_bitsets(bitset, b)
-        hashes = cand_pdf[hash_col].to_numpy()
-        maybe = (np.zeros(len(hashes), dtype=bool) if bitset is None
-                 else probe_bitset(bitset, hashes, m_bits, k))
-        out = cand_pdf.drop(columns=["_shard_id"]).copy()
-        out["maybe_seen"] = maybe
-        return out
+    def step(key, cand: pa.Table, prior: pa.Table) -> pa.Table:
+        old = prior.column("bitset").to_pylist()
+        blob = reduce(merge_bitsets, old) if old else None
+        hashes = cand.column("url_hash").to_numpy()
+        maybe = (np.zeros(len(hashes), dtype=bool) if blob is None
+                 else probe_bitset(blob, hashes, m_bits, k))
+        if len(hashes):
+            new = build_bitset(hashes, m_bits, k)
+            blob = new if blob is None else merge_bitsets(blob, new)
+        flagged = (cand.drop_columns("shard_id")
+                   .append_column("maybe_seen", pa.array(maybe)))
+        blob_row = pa.table({
+            "shard_id": pa.array([key[0].as_py()], pa.int32()),
+            "bitset": pa.array([blob], pa.binary())})
+        return pa.concat_tables([flagged, blob_row], promote_options="default")
 
-    return (
-        cand.groupBy("_shard_id")
-        .cogroup(sh.groupBy("_shard_id"))
-        .applyInPandas(probe, out_schema)
-    )
+    shard_col = F.pmod(F.col("url_hash"), F.lit(n_shards)).cast("int")
+    return (candidates.withColumn("shard_id", shard_col).groupBy("shard_id")
+            .cogroup(shards.groupBy("shard_id"))
+            .applyInArrow(step, out_schema))
+
+
+def split_pass(both: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """probe_and_fold's frame -> (flagged candidates, next blob rows)."""
+    is_blob = F.col("bitset").isNotNull()
+    return (both.filter(~is_blob).drop("shard_id", "bitset"),
+            both.filter(is_blob).select("shard_id", "bitset"))

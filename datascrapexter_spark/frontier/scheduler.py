@@ -4,8 +4,8 @@ checkpoint, generalized from the reference's strictly-sequential page loop
 frontier at cluster scale (north_rule).
 
 Round r (all DataFrame ops; the only Python crossings are the Arrow-batched
-UDFs for URL canonicalization, HTML link extraction and the Bloom probe —
-the robots gate is a codegen prefix match):
+UDFs for URL canonicalization and HTML link extraction, and the round's one
+Bloom pass — the robots gate is a codegen prefix match):
 
  1. pending frontier rows, robots-filtered (broadcast rules; denied ->
     'blocked' — compliance_test.go:226-238 semantics);
@@ -19,11 +19,13 @@ the robots gate is a codegen prefix match):
     sandbox stand-in for the HTTP fetch — BASELINE.json input_hint);
     misses re-enqueue with attempts+1 (client.go:311-322 retry semantics,
     deterministic), up to max_attempts;
- 5. out-links -> canonicalize -> Bloom prefilter (definitely-new skips
-    the exact check) -> exact check vs the bucketed-at-rest url_seen
-    (confirm_new: seen ⋉ probe shuffle-hash semi, then probe ▷ dupes
-    anti — one plan for every round size; the seen set is scanned,
-    never exchanged, sorted or hash-built) -> append frontier;
+ 5. out-links -> canonicalize -> one Bloom pass (bloom.probe_and_fold:
+    one shard cogroup flags each candidate maybe-seen and emits each
+    shard's next blob; definitely-new skips the exact check) -> exact
+    check vs the bucketed-at-rest url_seen (confirm_new: seen ⋉ probe
+    shuffle-hash semi, then probe ▷ dupes anti — one plan for every
+    round size; the seen set is scanned, never exchanged, sorted or
+    hash-built) -> append frontier;
  6. checkpoint to snapshot tables, then commit the round's one journal
     record (snapshot ids + stats observed on the crawl_log, frontier and
     frontier_updates writes); a crash mid-round resumes from the last one.
@@ -62,7 +64,6 @@ from __future__ import annotations
 import time
 from dataclasses import dataclass, field as dc_field
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -73,7 +74,7 @@ from ..functions.urlnorm import (
     registered_domain,
 )
 from ..functions.urlnorm import host_col
-from .bloom import BloomShards, build_bitset, merge_bitsets, probe_maybe_seen_df
+from .bloom import probe_and_fold, split_pass
 from .links import extract_links_df
 from .pagination import PaginationSpec, extract_next_urls_df
 from .politeness import (
@@ -121,12 +122,6 @@ def _observed(df: DataFrame, **counts: Column) -> tuple[DataFrame, Observation]:
     write that consumes it (unnamed for the reason ops/pipeline.py gives)."""
     obs = Observation()
     return df.observe(obs, *[c.alias(k) for k, c in counts.items()]), obs
-
-
-# above this total Bloom filter size the round probes it with the
-# distributed cogroup (shards never leave executors) instead of collecting
-# and broadcasting it — at 10^10 URLs the filter is tens of GiB
-BLOOM_BROADCAST_MAX_BYTES = 32 << 20
 
 
 def confirm_new(needs_check: DataFrame, url_seen: DataFrame) -> DataFrame:
@@ -180,10 +175,10 @@ class CrawlConfig:
     restrict_to_seed_hosts: bool = True
     default_priority: int = 5          # JobPriority normal (pkg/types/types.go:47)
     # partitioned Bloom URL-seen prefilter (bloom.py): bloom_n_shards
-    # shards of bloom_m_bits bits, k probes each. A prefilter only — the
-    # exact url_seen check settles every maybe-seen candidate, so the
-    # sizing moves cost, never the crawl. The filter's total size picks
-    # its probe (BLOOM_BROADCAST_MAX_BYTES)
+    # shards of bloom_m_bits bits, k probes each, probed and folded in
+    # one shard cogroup per round. A prefilter only — the exact url_seen
+    # check settles every maybe-seen candidate, so the sizing moves
+    # cost, never the crawl
     bloom_n_shards: int = 16
     bloom_m_bits: int = 1 << 20
     bloom_k: int = 7
@@ -415,8 +410,10 @@ class CrawlEngine:
         self.store.url_seen.n_buckets = self.cfg.seen_n_buckets
         sids["url_seen"] = self.store.url_seen.overwrite_all(
             self.spark, seen, round_no=0)
-        sids["bloom_shards"] = self.store["bloom_shards"].overwrite(
-            self._fold_bloom(seen, 0, prev=None))
+        _, blobs = split_pass(probe_and_fold(
+            seen, None, self.cfg.bloom_n_shards, self.cfg.bloom_m_bits,
+            self.cfg.bloom_k))
+        sids["bloom_shards"] = self.store["bloom_shards"].overwrite(blobs)
         empty_state = self.spark.createDataFrame(
             [], "domain string, err_rate double, consec_err int, "
                 "breaker_failures int, quarantined_until int, "
@@ -499,50 +496,6 @@ class CrawlEngine:
         return full.unionByName(self._read("frontier_archive"))
 
     # ------------------------------------------------------------------
-    # Bloom prefilter state (`bloom_shards`: one blob per shard, bloom.py)
-    # ------------------------------------------------------------------
-
-    def _filter_total_bytes(self) -> int:
-        return self.cfg.bloom_n_shards * self.cfg.bloom_m_bits // 8
-
-    def _fold_bloom(self, hashes: DataFrame, round_no: int,
-                    prev: DataFrame | None) -> DataFrame:
-        """Next `bloom_shards` snapshot: cogroup the new hashes by shard
-        with the `prev` blobs and emit OR(prev, build_bitset(new)) per
-        shard; shards with no new hash pass through unchanged."""
-        cfg = self.cfg
-        m_bits, k = cfg.bloom_m_bits, cfg.bloom_k
-        schema = "shard_id int, round int, bitset binary"
-        if prev is None:
-            prev = self.spark.createDataFrame([], schema)
-
-        def fold(new: pd.DataFrame, old: pd.DataFrame) -> pd.DataFrame:
-            if new.empty:
-                return old[["shard_id", "round", "bitset"]]
-            bs = build_bitset(new["url_hash"].to_numpy(), m_bits, k)
-            for blob in old["bitset"]:
-                bs = merge_bitsets(bs, bytes(blob))
-            return pd.DataFrame({"shard_id": [int(new["shard_id"].iloc[0])],
-                                 "round": [round_no], "bitset": [bs]})
-
-        new = hashes.withColumn(
-            "shard_id",
-            F.pmod(F.col("url_hash"), F.lit(cfg.bloom_n_shards)).cast("int"))
-        return (new.groupBy("shard_id")
-                .cogroup(prev.groupBy("shard_id"))
-                .applyInPandas(fold, schema))
-
-    def _load_bloom(self) -> BloomShards:
-        """The committed filter on the driver: at most bloom_n_shards
-        blobs, so the collect is bounded by _filter_total_bytes()."""
-        df = self._read("bloom_shards")
-        rows = [] if df is None else [
-            (r["shard_id"], r["round"], r["bitset"]) for r in df.collect()
-        ]
-        return BloomShards.from_rows(
-            rows, self.cfg.bloom_n_shards, self.cfg.bloom_m_bits, self.cfg.bloom_k)
-
-    # ------------------------------------------------------------------
     # one round
     # ------------------------------------------------------------------
 
@@ -600,7 +553,7 @@ class CrawlEngine:
 
         budgets = round_budgets(eligible.select("domain").distinct(),
                                 self.domain_delays, prev_state, cfg, round_no)
-        scheduled = self._cache(schedule_topk(eligible, budgets, pol))
+        scheduled = schedule_topk(eligible, budgets, pol)
 
         # --- "fetch": equi-join the canonical pages table ---
         fetched = self._cache(
@@ -660,27 +613,15 @@ class CrawlEngine:
             candidates = candidates.filter(score < cfg.trap_threshold)
         candidates = candidates.withColumn("url_hash", F.xxhash64("url_canon"))
 
-        # --- dedup: Bloom prefilter (no false negatives), then the exact
-        # url_seen check for the maybe-seen candidates only ---
-        if self._filter_total_bytes() <= BLOOM_BROADCAST_MAX_BYTES:
-            # small filter: collect+broadcast, probe with zero extra shuffle
-            bbc = self.spark.sparkContext.broadcast(self._load_bloom())
-
-            @F.pandas_udf(T.BooleanType())
-            def maybe_seen_udf(h: pd.Series) -> pd.Series:
-                return pd.Series(bbc.value.maybe_seen(h.to_numpy()))
-
-            flagged = candidates.withColumn(
-                "maybe_seen", maybe_seen_udf("url_hash"))
-        else:
-            # cluster-scale filter: distributed cogroup probe — shards stay
-            # on executors, candidates shuffle once by shard_id
-            flagged = probe_maybe_seen_df(
-                candidates, self._read("bloom_shards"),
-                cfg.bloom_n_shards, cfg.bloom_m_bits, cfg.bloom_k)
-        # flagged is consumed by BOTH branches below — cached so the
-        # links -> canonicalize -> bloom Arrow chain runs once, not twice
-        flagged = self._cache(flagged)
+        # --- dedup: one Bloom pass (no false negatives) flags the
+        # candidates and folds them into the next blobs, then the exact
+        # url_seen check for the maybe-seen candidates only. Cached: the
+        # frontier append and the bloom_shards write both read it, so the
+        # links -> canonicalize -> bloom Arrow chain runs once ---
+        bloom_pass = self._cache(probe_and_fold(
+            candidates, self._read("bloom_shards"),
+            cfg.bloom_n_shards, cfg.bloom_m_bits, cfg.bloom_k))
+        flagged, next_blobs = split_pass(bloom_pass)
         definite_new = flagged.filter(~F.col("maybe_seen")).drop("maybe_seen")
         confirmed_new = confirm_new(
             flagged.filter(F.col("maybe_seen")).drop("maybe_seen"),
@@ -824,11 +765,8 @@ class CrawlEngine:
         n_new = new_obs.get["new_urls"]
         sids["url_seen"] = self.store.url_seen.append_round(
             self.spark, new_rows.select("url_hash"), round_no, n_rows=n_new)
-        # one blob per shard (bloom.py invariant): the next round's
-        # broadcast collect stays bounded by _filter_total_bytes()
-        sids["bloom_shards"] = self.store["bloom_shards"].overwrite(
-            self._fold_bloom(new_rows.select("url_hash"), round_no,
-                             prev=self._read("bloom_shards")))
+        # one blob per shard (bloom.py invariant), from the cached pass
+        sids["bloom_shards"] = self.store["bloom_shards"].overwrite(next_blobs)
         sids["domain_state"] = self.store["domain_state"].overwrite(new_domain_state)
         if new_pag_state is not None:
             sids["pagination_state"] = self.store["pagination_state"].overwrite(

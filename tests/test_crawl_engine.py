@@ -157,9 +157,8 @@ def test_resume_after_interrupt(spark, tmp_path, web):
 
 def test_bloom_shards_one_blob_per_shard(crawled):
     """The committed Bloom state is one blob per shard, however many
-    rounds ran: the broadcast probe's collect is bounded by
-    _filter_total_bytes(), and the folded blobs equal a filter built in
-    one pass from the committed url_seen set."""
+    rounds ran, bounded by the filter's size, and the folded blobs equal
+    a filter built in one pass from the committed url_seen set."""
     import numpy as np
 
     from datascrapexter_spark.frontier.bloom import BloomShards
@@ -170,7 +169,8 @@ def test_bloom_shards_one_blob_per_shard(crawled):
     shard_ids = [r["shard_id"] for r in rows]
     assert len(rows) <= cfg.bloom_n_shards
     assert len(set(shard_ids)) == len(shard_ids)
-    assert sum(len(r["bitset"]) for r in rows) <= engine._filter_total_bytes()
+    assert (sum(len(r["bitset"]) for r in rows)
+            <= cfg.bloom_n_shards * cfg.bloom_m_bits // 8)
 
     seen = np.array([r["url_hash"] for r in engine.seen_hashes().collect()],
                     dtype=np.int64)
@@ -367,8 +367,8 @@ def test_crash_at_every_write_resumes_to_same_round(spark, tmp_path,
     round, so the archive append is among them — resumes in a fresh
     engine to the same crawl log, url_seen set, frontier and round record
     as the uninterrupted round. Every k starts from a copy of the store
-    as the previous round left it. The uninterrupted round also pins the
-    Spark jobs a round that fetches pages may run."""
+    as the previous round left it. The first round and the uninterrupted
+    round also pin the Spark jobs a round that fetches pages may run."""
     import shutil
     import time
 
@@ -388,25 +388,31 @@ def test_crash_at_every_write_resumes_to_same_round(spark, tmp_path,
         return CrawlEngine(spark, StateStore(str(root)), pages, robots_texts,
                            cfg)
 
-    t0 = time.monotonic()
-    engine = engine_at(tmp_path / "crawl")
-    engine.init(seeds)
-    engine.run_round(swept - 1)
-    template = tmp_path / "after_prev_round"
-    shutil.copytree(tmp_path / "crawl", template)
-
     sc = spark.sparkContext
-    with monkeypatch.context() as mp:
-        writes = _hook_writes(mp)
-        sc.setJobGroup("crawl-round-jobs", "one uninterrupted crawl round")
+
+    def round_jobs(round_no):
+        group = f"crawl-round-jobs-{round_no}"
+        sc.setJobGroup(group, f"crawl round {round_no}")
         try:
-            stats = engine.run_round(swept)
+            stats = engine.run_round(round_no)
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
             sc.setLocalProperty("spark.job.description", None)
-    n_jobs = len(sc.statusTracker().getJobIdsForGroup("crawl-round-jobs"))
+        return stats, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    t0 = time.monotonic()
+    engine = engine_at(tmp_path / "crawl")
+    engine.init(seeds)
+    _, first_jobs = round_jobs(swept - 1)
+    assert first_jobs <= 35, first_jobs
+    template = tmp_path / "after_prev_round"
+    shutil.copytree(tmp_path / "crawl", template)
+
+    with monkeypatch.context() as mp:
+        writes = _hook_writes(mp)
+        stats, n_jobs = round_jobs(swept)
     assert stats["fetched"] > 0
-    assert n_jobs <= 40, n_jobs
+    assert n_jobs <= 35, n_jobs
     expected = _round_outcome(engine, swept)
     assert ("frontier_archive", "append") in writes
     assert engine._read("frontier_archive").count() > 0
@@ -425,8 +431,9 @@ def test_crash_at_every_write_resumes_to_same_round(spark, tmp_path,
         resumed.run_round(swept)
         assert _round_outcome(resumed, swept) == expected, (k, writes[k - 1])
         shutil.rmtree(root)
-    print(f"crash sweep: {len(writes)} writes, {n_jobs} jobs in the "
-          f"uninterrupted round, {time.monotonic() - t0:.0f} s")
+    print(f"crash sweep: {len(writes)} writes, {first_jobs} jobs in the "
+          f"first round, {n_jobs} in the uninterrupted round, "
+          f"{time.monotonic() - t0:.0f} s")
 
 
 def test_canonicalization_collapses_dupes(crawled):

@@ -67,16 +67,6 @@ def test_bloom_shard_build_probe_roundtrip():
     assert probe_bitset(bs, hashes, m_bits=1 << 16, k=5).all()
 
 
-def test_bloom_from_rows_merges_rounds():
-    b1 = BloomShards(n_shards=4, m_bits=1 << 12, k=3)
-    b1.add_hashes(np.array([1, 2, 3], dtype=np.int64))
-    b2 = BloomShards(n_shards=4, m_bits=1 << 12, k=3)
-    b2.add_hashes(np.array([100, 200], dtype=np.int64))
-    rows = b1.to_rows(1) + b2.to_rows(2)
-    merged = BloomShards.from_rows(rows, 4, 1 << 12, 3)
-    assert merged.maybe_seen(np.array([1, 2, 3, 100, 200], dtype=np.int64)).all()
-
-
 def test_snapshot_table_append_and_time_travel(spark, tmp_path):
     t = SnapshotTable(str(tmp_path), "t")
     assert t.read(spark) is None

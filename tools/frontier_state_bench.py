@@ -37,6 +37,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from datascrapexter_spark.frontier.bloom import probe_and_fold, split_pass  # noqa: E402
 from datascrapexter_spark.frontier.politeness import PolitenessConfig  # noqa: E402
 from datascrapexter_spark.frontier.scheduler import (  # noqa: E402
     CrawlConfig,
@@ -114,9 +115,11 @@ def inject_dead_history(spark, engine, n_dead: int,
         spark, dead.select("url_hash"), round_no=0, idempotent=False)
     sids["frontier_archive"] = engine.store["frontier_archive"].append(
         dead_rows)
-    sids["bloom_shards"] = engine.store["bloom_shards"].overwrite(
-        engine._fold_bloom(dead.select("url_hash"), 0,
-                           prev=engine._read("bloom_shards")))
+    cfg = engine.cfg
+    _, blobs = split_pass(probe_and_fold(
+        dead.select("url_hash"), engine._read("bloom_shards"),
+        cfg.bloom_n_shards, cfg.bloom_m_bits, cfg.bloom_k))
+    sids["bloom_shards"] = engine.store["bloom_shards"].overwrite(blobs)
     # dead rows are terminal: init's round stats still hold
     engine.store.commit_round(0, sids,
                               engine.store.last_committed_round()["stats"])
