@@ -27,8 +27,9 @@ Bloom pass — the robots gate is a codegen prefix match):
     round size; the seen set is scanned, never exchanged, sorted or
     hash-built) -> append frontier;
  6. checkpoint to snapshot tables, then commit the round's one journal
-    record (snapshot ids + stats observed on the crawl_log, frontier and
-    frontier_updates writes); a crash mid-round resumes from the last one.
+    record (every table's snapshot + stats observed on the crawl_log,
+    frontier and frontier_updates writes); a crash mid-round resumes from
+    the last one, and the commit deletes the data no snapshot references.
     Nothing derivable is written: the request counters are served from
     the crawl log (request_metrics_from_log).
 
@@ -86,7 +87,7 @@ from .politeness import (
     tokens_per_round,
 )
 from .robots import RobotsIndex, allowed_rules_col, rules_array_df
-from .state import StateStore
+from .state import SnapshotTable, StateStore
 
 FRONTIER_SCHEMA = T.StructType([
     T.StructField("url_canon", T.StringType()),
@@ -114,6 +115,36 @@ CRAWL_LOG_SCHEMA = T.StructType([
     T.StructField("url_hash", T.LongType()),
     T.StructField("priority", T.IntegerType()),
     T.StructField("status", T.StringType()),
+])
+
+DOMAIN_STATE_SCHEMA = T.StructType([
+    T.StructField("domain", T.StringType()),
+    T.StructField("err_rate", T.DoubleType()),
+    T.StructField("consec_err", T.IntegerType()),
+    T.StructField("breaker_failures", T.IntegerType()),
+    T.StructField("quarantined_until", T.IntegerType()),
+    T.StructField("rate_mult", T.DoubleType()),
+    T.StructField("n_fetch_total", T.LongType()),
+    T.StructField("n_err_total", T.LongType()),
+])
+
+PAGINATION_STATE_SCHEMA = T.StructType([
+    T.StructField("host", T.StringType()),
+    T.StructField("chain_id", T.LongType()),
+    T.StructField("last_cursor", T.StringType()),
+])
+
+PAGINATION_CHAINS_SCHEMA = T.StructType([
+    T.StructField("url_hash", T.LongType()),
+    T.StructField("chain_id", T.LongType()),
+])
+
+LINEAGE_METRICS_SCHEMA = T.StructType([
+    T.StructField("round", T.IntegerType()),
+    T.StructField("partition_id", T.IntegerType()),
+    T.StructField("scheduled", T.LongType()),
+    T.StructField("fetched", T.LongType()),
+    T.StructField("errors", T.LongType()),
 ])
 
 
@@ -301,7 +332,7 @@ class CrawlEngine:
         self.domain_delays = self._domain_delays_df()
         self.pages = self._prepare_pages(pages).cache()
         self.allowed_hosts: set[str] | None = None
-        self._snapshot_ids: dict[str, int | None] = {}
+        self._snapshots: dict = {}  # the last commit's, per table
         self._pending = 0  # pending-view size at the last committed round
         self._round_cache: list[DataFrame] = []
 
@@ -395,53 +426,43 @@ class CrawlEngine:
                  .filter(F.col("_rn") == 1).drop("_rn"))
         frontier = self._frontier_rows(canon, F.col("priority"), 0)
 
-        if self.cfg.restrict_to_seed_hosts:
-            hosts = [r["host"] for r in frontier.select("host").distinct().collect()]
-            self.allowed_hosts = set(hosts)
-
-        sids = {}
+        # every other table starts empty: a snapshot with no data dirs
+        snaps = {name: SnapshotTable.empty(schema) for name, schema in (
+            ("frontier_updates", FRONTIER_UPDATES_SCHEMA),
+            ("frontier_archive", FRONTIER_SCHEMA),
+            ("domain_state", DOMAIN_STATE_SCHEMA),
+            ("pagination_state", PAGINATION_STATE_SCHEMA),
+            ("pagination_chains", PAGINATION_CHAINS_SCHEMA),
+            ("crawl_log", CRAWL_LOG_SCHEMA),
+            ("lineage_metrics", LINEAGE_METRICS_SCHEMA))}
         seeded, seeded_obs = _observed(frontier, n=F.count(F.lit(1)))
-        sids["frontier"] = self.store["frontier"].overwrite(seeded)
-        sids["frontier_updates"] = self.store["frontier_updates"].overwrite(
-            self.spark.createDataFrame([], FRONTIER_UPDATES_SCHEMA))
-        sids["frontier_archive"] = self.store["frontier_archive"].overwrite(
-            self.spark.createDataFrame([], FRONTIER_SCHEMA))
-        seen = frontier.select("url_hash")
+        snaps["frontier"] = self.store["frontier"].overwrite(seeded)
+        # the hosts, url_seen and the filter read the seeded rows back,
+        # so the normalize -> window -> canonicalize chain runs once
+        rows = self.store["frontier"].read(self.spark, snaps["frontier"])
+        if self.cfg.restrict_to_seed_hosts:
+            hosts = [r["host"] for r in rows.select("host").distinct().collect()]
+            self.allowed_hosts = set(hosts)
+        seen = rows.select("url_hash")
         self.store.url_seen.n_buckets = self.cfg.seen_n_buckets
-        sids["url_seen"] = self.store.url_seen.overwrite_all(
+        snaps["url_seen"] = self.store.url_seen.overwrite_all(
             self.spark, seen, round_no=0)
         _, blobs = split_pass(probe_and_fold(
             seen, None, self.cfg.bloom_n_shards, self.cfg.bloom_m_bits,
             self.cfg.bloom_k))
-        sids["bloom_shards"] = self.store["bloom_shards"].overwrite(blobs)
-        empty_state = self.spark.createDataFrame(
-            [], "domain string, err_rate double, consec_err int, "
-                "breaker_failures int, quarantined_until int, "
-                "rate_mult double, n_fetch_total long, n_err_total long")
-        sids["domain_state"] = self.store["domain_state"].overwrite(empty_state)
-        sids["pagination_state"] = self.store["pagination_state"].overwrite(
-            self.spark.createDataFrame(
-                [], "host string, chain_id long, last_cursor string"))
-        sids["pagination_chains"] = self.store["pagination_chains"].overwrite(
-            self.spark.createDataFrame([], "url_hash long, chain_id long"))
-        sids["crawl_log"] = self.store["crawl_log"].overwrite(
-            self.spark.createDataFrame([], CRAWL_LOG_SCHEMA))
-        sids["lineage_metrics"] = self.store["lineage_metrics"].overwrite(
-            self.spark.createDataFrame(
-                [], "round int, partition_id int, scheduled long, fetched long, "
-                    "errors long"))
+        snaps["bloom_shards"] = self.store["bloom_shards"].overwrite(blobs)
         n_seeds = seeded_obs.get["n"]
-        self.store.commit_round(0, sids, {"pending": n_seeds})
-        self._snapshot_ids, self._pending = sids, n_seeds
+        self.store.commit_round(0, snaps, {"pending": n_seeds})
+        self._snapshots, self._pending = snaps, n_seeds
 
     def resume(self) -> int:
         """Roll state back to the last committed round; returns that round.
-        Uncommitted snapshots written by a crashed round are simply not
-        referenced (north_rule: resumable mid-crawl)."""
+        Data a crashed round wrote is simply not referenced (north_rule:
+        resumable mid-crawl)."""
         last = self.store.last_committed_round()
         if last is None:
             raise RuntimeError("no committed rounds to resume from")
-        self._snapshot_ids = last["snapshots"]
+        self._snapshots = last["snapshots"]
         self._pending = last["stats"]["pending"]
         if self.cfg.restrict_to_seed_hosts and self.allowed_hosts is None:
             seed_hosts = (self.frontier_df()
@@ -451,13 +472,11 @@ class CrawlEngine:
         return last["round"]
 
     def _read(self, table: str) -> DataFrame:
-        return self.store[table].read(self.spark, self._snapshot_ids.get(table))
+        return self.store[table].read(self.spark, self._snapshots[table])
 
-    def _append(self, table: str, df: DataFrame) -> int:
-        """Append relative to the journal-committed snapshot (never onto a
-        crashed round's uncommitted appends)."""
-        return self.store[table].append(
-            df, base_snapshot_id=self._snapshot_ids.get(table))
+    def _append(self, table: str, df: DataFrame) -> dict:
+        """`df` on top of the committed snapshot of `table`."""
+        return self.store[table].append(df, self._snapshots[table])
 
     # ------------------------------------------------------------------
     # incremental frontier views
@@ -625,8 +644,7 @@ class CrawlEngine:
         definite_new = flagged.filter(~F.col("maybe_seen")).drop("maybe_seen")
         confirmed_new = confirm_new(
             flagged.filter(F.col("maybe_seen")).drop("maybe_seen"),
-            self.store.url_seen.read(
-                self.spark, self._snapshot_ids.get("url_seen")))
+            self.store.url_seen.read(self.spark, self._snapshots["url_seen"]))
         new_urls = definite_new.unionByName(confirmed_new)
         # cached: new_rows feeds three writes — without the cache the whole
         # links->bloom->anti-join chain re-executes per consumer
@@ -731,9 +749,8 @@ class CrawlEngine:
             .alias("n_err_total"),
         )
 
-        # --- checkpoint + round commit: appends are pinned to the
-        # committed snapshots, so crashed rounds can't leak uncommitted
-        # data. Counts are observed on the writes: each delta is one
+        # --- checkpoint + round commit: appends extend the committed
+        # snapshots, so crashed rounds can't leak uncommitted data. Counts are observed on the writes: each delta is one
         # pending-view row and no new row was seen, so pending moves by
         # exactly new_urls - terminal transitions ---
         new_rows_w, new_obs = _observed(new_rows, new_urls=F.count(F.lit(1)))
@@ -742,42 +759,42 @@ class CrawlEngine:
         log_w, log_obs = _observed(
             log, scheduled=F.count(F.lit(1)),
             fetched=F.count_if(F.col("status") == "fetched"))
-        sids = dict(self._snapshot_ids)
+        snaps = dict(self._snapshots)
         if (cfg.frontier_compact_every > 0
                 and round_no % cfg.frontier_compact_every == 0):
-            # compaction (module docstring): one reconcile, three writes
+            # compaction (module docstring): one reconcile, two writes
             full = self._cache(self._reconcile(
                 self._read("frontier").unionByName(new_rows_w),
                 self._read("frontier_updates").unionByName(updates_w),
             ).select([f.name for f in FRONTIER_SCHEMA.fields]))
             is_pending = F.col("state") == "pending"
-            sids["frontier"] = self.store["frontier"].overwrite(
+            snaps["frontier"] = self.store["frontier"].overwrite(
                 full.filter(is_pending))
-            sids["frontier_archive"] = self._append(
+            snaps["frontier_archive"] = self._append(
                 "frontier_archive", full.filter(~is_pending))
-            sids["frontier_updates"] = self.store["frontier_updates"].overwrite(
-                self.spark.createDataFrame([], FRONTIER_UPDATES_SCHEMA))
+            snaps["frontier_updates"] = SnapshotTable.empty(
+                FRONTIER_UPDATES_SCHEMA)
         else:
-            sids["frontier"] = self._append("frontier", new_rows_w)
-            sids["frontier_updates"] = self._append("frontier_updates",
-                                                    updates_w)
+            snaps["frontier"] = self._append("frontier", new_rows_w)
+            snaps["frontier_updates"] = self._append("frontier_updates",
+                                                     updates_w)
         # the frontier write above filled new_obs: size this write by it
         n_new = new_obs.get["new_urls"]
-        sids["url_seen"] = self.store.url_seen.append_round(
+        snaps["url_seen"] = self.store.url_seen.append_round(
             self.spark, new_rows.select("url_hash"), round_no, n_rows=n_new)
         # one blob per shard (bloom.py invariant), from the cached pass
-        sids["bloom_shards"] = self.store["bloom_shards"].overwrite(next_blobs)
-        sids["domain_state"] = self.store["domain_state"].overwrite(new_domain_state)
+        snaps["bloom_shards"] = self.store["bloom_shards"].overwrite(next_blobs)
+        snaps["domain_state"] = self.store["domain_state"].overwrite(new_domain_state)
         if new_pag_state is not None:
-            sids["pagination_state"] = self.store["pagination_state"].overwrite(
+            snaps["pagination_state"] = self.store["pagination_state"].overwrite(
                 new_pag_state)
         if new_chain_rows is not None:
             # chain membership of next-round pages: O(advancing chains)
             # rows per round, append-only
-            sids["pagination_chains"] = self._append(
+            snaps["pagination_chains"] = self._append(
                 "pagination_chains", new_chain_rows)
-        sids["crawl_log"] = self._append("crawl_log", log_w)
-        sids["lineage_metrics"] = self._append("lineage_metrics", metrics)
+        snaps["crawl_log"] = self._append("crawl_log", log_w)
+        snaps["lineage_metrics"] = self._append("lineage_metrics", metrics)
 
         logged = log_obs.get
         stats = {
@@ -788,8 +805,8 @@ class CrawlEngine:
             "pending": self._pending - upd_obs.get["terminal"] + n_new,
             "wall_ms": int((time.monotonic() - t0) * 1000),
         }
-        self.store.commit_round(round_no, sids, stats)
-        self._snapshot_ids, self._pending = sids, stats["pending"]
+        self.store.commit_round(round_no, snaps, stats)
+        self._snapshots, self._pending = snaps, stats["pending"]
         return stats
 
     def _pagination_links(
@@ -817,13 +834,7 @@ class CrawlEngine:
         new_state = new_chains = None
         if spec.type == "cursor":
             prev = self._read("pagination_state")
-            if prev is None:
-                prev = self.spark.createDataFrame(
-                    [], "host string, chain_id long, last_cursor string")
             chains = self._read("pagination_chains")
-            if chains is None:
-                chains = self.spark.createDataFrame(
-                    [], "url_hash long, chain_id long")
             # chain membership: a seed page starts its own chain
             # (chain_id = its url_hash); next pages inherit via the mapping
             nxt = self._cache(
@@ -920,5 +931,4 @@ class CrawlEngine:
         return request_metrics_from_log(self._read("crawl_log"), self.cfg)
 
     def seen_hashes(self) -> DataFrame:
-        return self.store.url_seen.read(
-            self.spark, self._snapshot_ids.get("url_seen"))
+        return self.store.url_seen.read(self.spark, self._snapshots["url_seen"])

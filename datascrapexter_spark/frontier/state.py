@@ -3,29 +3,31 @@
 Production target is Iceberg (`df.writeTo(tbl).append()` + snapshot-id
 time travel; the frontier table bucketed by url_hash, identity-partitioned
 by crawl round). This sandbox has no Iceberg runtime jar, so this module
-implements the same contract over Parquet directories with an atomic JSON
-snapshot manifest:
+implements the same contract over Parquet directories and one atomic JSON
+pointer, the round journal:
 
-  {root}/{table}/data/<snapshot>-<uuid>/part-*.parquet   (immutable files)
-  {root}/{table}/_snapshots.json                          (atomic pointer)
+  {root}/{table}/data/<uuid>/part-*.parquet   (immutable files)
+  {root}/_rounds.json                          (the one pointer)
 
-- append = write a NEW data directory, then atomically publish a new
-  snapshot whose file list = previous snapshot's dirs + the new dir
-  (no rewrite of existing data — O(delta), like an Iceberg append);
-- overwrite = new snapshot referencing only the new dir; a snapshot also
-  records the schema, so a read runs no Spark job to infer it;
-- reads resolve the current snapshot's dir list (or any older snapshot id
-  — time travel, which is what crash-resume uses);
-- publishing is a tmp-file + os.replace, so a killed driver never leaves
-  a torn manifest: resume sees the last fully committed snapshot.
+- a write adds one data dir and returns a snapshot value {"dirs",
+  "schema"}: overwrite's holds the new dir, append's the base's dirs plus
+  the new one (O(delta)); the schema spares a read an inference job, and
+  an empty table's snapshot has no dirs at all;
+- StateStore.commit_round publishes every table's snapshot and the
+  round's stats in one tmp-file + os.replace, so resume reads the last
+  whole commit, then deletes every data dir the commit does not
+  reference. A write no commit references is never read, and a crash
+  inside that expiry leaves only such dirs for the next commit to delete.
 
-The swap to real Iceberg is confined to this file.
+Iceberg: a snapshot value is a table's snapshot id, and the expiry is
+`expire_snapshots`. The swap to real Iceberg is confined to this file.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -34,84 +36,41 @@ from pyspark.sql import types as T
 
 
 class SnapshotTable:
+    """A table's immutable data dirs; StateStore commits its snapshots."""
+
     def __init__(self, root: str, name: str):
         self.dir = os.path.join(root, name)
-        self.manifest_path = os.path.join(self.dir, "_snapshots.json")
         os.makedirs(os.path.join(self.dir, "data"), exist_ok=True)
 
-    # -- manifest ---------------------------------------------------------
+    @staticmethod
+    def empty(schema: T.StructType) -> dict:
+        return {"dirs": [], "schema": schema.jsonValue()}
 
-    def _read_manifest(self) -> dict:
-        if not os.path.exists(self.manifest_path):
-            return {"current": None, "snapshots": []}
-        with open(self.manifest_path) as fh:
-            return json.load(fh)
-
-    def _publish(self, manifest: dict) -> None:
-        tmp = self.manifest_path + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as fh:
-            json.dump(manifest, fh)
-        os.replace(tmp, self.manifest_path)  # atomic commit
-
-    def snapshots(self) -> list[dict]:
-        return self._read_manifest()["snapshots"]
-
-    def current_snapshot_id(self) -> int | None:
-        return self._read_manifest()["current"]
-
-    def _snapshot(self, snapshot_id: int | None) -> dict | None:
-        m = self._read_manifest()
-        sid = snapshot_id if snapshot_id is not None else m["current"]
-        if sid is None:
-            return None
-        for snap in m["snapshots"]:
-            if snap["id"] == sid:
-                return snap
-        raise KeyError(f"snapshot {sid} not found in {self.manifest_path}")
-
-    # -- IO ---------------------------------------------------------------
-
-    def _write_data_dir(self, df: DataFrame, snapshot_id: int) -> str:
-        rel = f"data/{snapshot_id:06d}-{uuid.uuid4().hex[:8]}"
+    def _write(self, df: DataFrame, dirs: list[str]) -> dict:
+        rel = f"data/{uuid.uuid4().hex}"
         df.write.mode("overwrite").parquet(os.path.join(self.dir, rel))
-        return rel
+        return {"dirs": dirs + [rel], "schema": df.schema.jsonValue()}
 
-    def _commit(self, dirs: list[str], df: DataFrame, meta: dict | None) -> int:
-        m = self._read_manifest()
-        sid = (m["current"] or 0) + 1
-        m["snapshots"].append({"id": sid, "dirs": dirs, "meta": meta or {},
-                               "schema": df.schema.jsonValue()})
-        m["current"] = sid
-        self._publish(m)
-        return sid
+    def overwrite(self, df: DataFrame) -> dict:
+        return self._write(df, [])
 
-    def append(self, df: DataFrame, meta: dict | None = None,
-               base_snapshot_id: int | None = None) -> int:
-        """Append a delta on top of `base_snapshot_id` (default: current).
+    def append(self, df: DataFrame, base: dict) -> dict:
+        """`df` on top of `base`, the caller's committed snapshot (which
+        never holds a crashed round's writes)."""
+        return self._write(df, base["dirs"])
 
-        Passing the caller's last COMMITTED snapshot id makes appends safe
-        across crash-resume: a crashed round may have published snapshots
-        the round journal never committed, and appending onto `current`
-        would silently resurrect that uncommitted data. The crawl engine
-        always appends relative to its journal-committed snapshot."""
-        rel = self._write_data_dir(df, (self.current_snapshot_id() or 0) + 1)
-        base = self._snapshot(base_snapshot_id)
-        return self._commit((base["dirs"] if base else []) + [rel], df, meta)
-
-    def overwrite(self, df: DataFrame, meta: dict | None = None) -> int:
-        rel = self._write_data_dir(df, (self.current_snapshot_id() or 0) + 1)
-        return self._commit([rel], df, meta)
-
-    def read(self, spark: SparkSession, snapshot_id: int | None = None) -> DataFrame | None:
-        snap = self._snapshot(snapshot_id)
-        if snap is None:
-            return None
+    def read(self, spark: SparkSession, snap: dict) -> DataFrame:
         paths = [os.path.join(self.dir, d) for d in snap["dirs"]]
         return (spark.read.schema(T.StructType.fromJson(snap["schema"]))
                 .parquet(*paths))
 
-    def exists(self) -> bool:
-        return self.current_snapshot_id() is not None
+    def expire(self, snap: dict | None) -> None:
+        """Delete every data dir `snap` (None: no dir) does not reference."""
+        live = set(snap["dirs"]) if snap else set()
+        data = os.path.join(self.dir, "data")
+        for d in os.listdir(data):
+            if f"data/{d}" not in live:
+                shutil.rmtree(os.path.join(data, d), ignore_errors=True)
 
 
 # new hashes per url_seen write task (8 MB of longs)
@@ -248,12 +207,14 @@ class BucketedSeenTable:
 
 
 class StateStore:
-    """All engine state tables under one root + a round-commit journal.
+    """All engine state tables under one root + the round journal,
+    {"rounds": [{"round", "stats"}, ...], "snapshots": {table: snapshot}}.
 
-    `commit_round(round_no, snapshot_ids, stats)` writes a round's one
-    record (round 0, init, starts a new journal): resume time-travels every
-    table back to the last record's snapshot ids and takes its stats, so a
-    crash mid-round replays that round from its start (north_rule)."""
+    `commit_round(round_no, snapshots, stats)` appends the round's stats
+    (round 0, init, starts a new journal), replaces the snapshots, then
+    deletes every data dir they do not reference. Resume takes the last
+    commit's, so a crash mid-round replays that round from its start
+    (north_rule)."""
 
     TABLES = ("frontier", "frontier_updates", "frontier_archive",
               "bloom_shards", "domain_state", "pagination_state",
@@ -266,30 +227,51 @@ class StateStore:
         self.tables = {name: SnapshotTable(root, name) for name in self.TABLES}
         # url_seen is NOT a snapshot table: it lives bucketed-at-rest so
         # the per-round exact-dedup join never exchanges it (see
-        # BucketedSeenTable; its "snapshot id" in the round journal is the
-        # committed round number, read back as a partition filter)
+        # BucketedSeenTable; its snapshot in the journal is the committed
+        # round number, read back as a partition filter)
         self.url_seen = BucketedSeenTable(root)
         self.journal_path = os.path.join(root, "_rounds.json")
 
     def __getitem__(self, name: str) -> SnapshotTable:
         return self.tables[name]
 
-    def commit_round(self, round_no: int, snapshot_ids: dict[str, int | None],
-                     stats: dict) -> None:
-        rounds = [] if round_no == 0 else self.committed_rounds()
-        rounds.append(
-            {"round": round_no, "snapshots": snapshot_ids, "stats": stats})
+    def _journal(self) -> dict:
+        if not os.path.exists(self.journal_path):
+            return {"rounds": [], "snapshots": {}}
+        with open(self.journal_path) as fh:
+            return json.load(fh)
+
+    def _publish(self, journal: dict) -> None:
         tmp = self.journal_path + f".tmp-{uuid.uuid4().hex}"
         with open(tmp, "w") as fh:
-            json.dump({"rounds": rounds}, fh)
-        os.replace(tmp, self.journal_path)
+            json.dump(journal, fh)
+        os.replace(tmp, self.journal_path)  # atomic commit
+        for name, table in self.tables.items():
+            table.expire(journal["snapshots"].get(name))
+
+    def commit_round(self, round_no: int, snapshots: dict,
+                     stats: dict) -> None:
+        rounds = [] if round_no == 0 else self.committed_rounds()
+        rounds.append({"round": round_no, "stats": stats})
+        self._publish({"rounds": rounds, "snapshots": snapshots})
+
+    def commit(self, name: str, df: DataFrame) -> None:
+        """Overwrite table `name` on top of the last commit, outside a
+        round (extraction_metrics)."""
+        journal = self._journal()
+        journal["snapshots"][name] = self.tables[name].overwrite(df)
+        self._publish(journal)
+
+    def read(self, spark: SparkSession, name: str) -> DataFrame | None:
+        """Table `name` as of the last commit (None if never committed)."""
+        snap = self._journal()["snapshots"].get(name)
+        return None if snap is None else self.tables[name].read(spark, snap)
 
     def committed_rounds(self) -> list[dict]:
-        if not os.path.exists(self.journal_path):
-            return []
-        with open(self.journal_path) as fh:
-            return json.load(fh)["rounds"]
+        return self._journal()["rounds"]
 
     def last_committed_round(self) -> dict | None:
-        rounds = self.committed_rounds()
-        return rounds[-1] if rounds else None
+        journal = self._journal()
+        if not journal["rounds"]:
+            return None
+        return {**journal["rounds"][-1], "snapshots": journal["snapshots"]}

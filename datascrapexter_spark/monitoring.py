@@ -386,7 +386,7 @@ def engine_health_report(engine) -> dict:
     return crawl_health_report(
         engine.round_metrics(),
         engine.request_metrics(),
-        engine.store["extraction_metrics"].read(engine.spark),
+        engine.store.read(engine.spark, "extraction_metrics"),
     )
 
 

@@ -135,8 +135,8 @@ def run_scrape_job(
     results = results.persist()
     # per-field success/error counters persisted next to the crawl log
     # (RecordExtractionSuccess/Error parity — SURVEY §2.4)
-    store["extraction_metrics"].overwrite(
-        extraction_metrics(results, cfg.fields))
+    store.commit("extraction_metrics",
+                 extraction_metrics(results, cfg.fields))
     if output_path is not None:
         write_output(results, cfg.output_format, output_path)
     return results, stats

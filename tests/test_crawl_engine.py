@@ -3,6 +3,8 @@ sequential oracle's crawl order and URL-seen set exactly, under the same
 seed list and politeness budget; plus robots gating, retry, adaptation,
 and crash-resume."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -55,6 +57,15 @@ def run_spark_crawl(spark, tmp_path, web, cfg, max_rounds=None,
     for r in range(1, interrupt_after + 1):
         engine.run_round(r)
     return engine, None
+
+
+def unreferenced_dirs(store):
+    """Snapshot-table data dirs on disk that the last commit does not
+    reference."""
+    snaps = store.last_committed_round()["snapshots"]
+    return {(name, f"data/{d}") for name, table in store.tables.items()
+            for d in os.listdir(os.path.join(table.dir, "data"))
+            if name not in snaps or f"data/{d}" not in snaps[name]["dirs"]}
 
 
 def spark_log(engine):
@@ -131,14 +142,16 @@ def test_adaptation_shrinks_budget(spark, tmp_path):
 
 def test_resume_after_interrupt(spark, tmp_path, web):
     """Kill after round 2, resume in a NEW engine on the same store: final
-    log + seen set identical to the uninterrupted run."""
+    log + seen set identical to the uninterrupted run, and the dead
+    round's write is gone once the resumed round commits."""
     cfg = make_cfg()
     engine1, _ = run_spark_crawl(spark, tmp_path, web, cfg,
                                  interrupt_after=2)
     # simulate extra uncommitted garbage from a crash mid-round-3: write a
     # snapshot without committing the round
     frontier_now = engine1._read("frontier")
-    engine1.store["frontier"].overwrite(frontier_now.limit(1))
+    stray = engine1.store["frontier"].overwrite(frontier_now.limit(1))
+    assert ("frontier", stray["dirs"][0]) in unreferenced_dirs(engine1.store)
 
     pages_rows, seeds_rows, robots_texts = web
     pages_df = spark.createDataFrame(
@@ -153,6 +166,7 @@ def test_resume_after_interrupt(spark, tmp_path, web):
     assert spark_log(engine2) == sim.sorted_log()
     seen2 = {r["url_hash"] for r in engine2.seen_hashes().collect()}
     assert seen2 == sim.seen
+    assert unreferenced_dirs(store2) == set()
 
 
 def test_bloom_shards_one_blob_per_shard(crawled):
@@ -279,25 +293,24 @@ def test_seen_probe_plan_never_moves_seen(spark, tmp_path):
 
 def test_resume_ignores_uncommitted_appends(spark, tmp_path, web):
     """A crash AFTER a round's snapshot appends but BEFORE the journal
-    commit must not leak those appends into the resumed crawl: appends are
-    pinned to the journal-committed base snapshot, so garbage published by
-    the dead round is simply never referenced."""
+    commit must not leak those appends into the resumed crawl: appends
+    extend the journal-committed snapshot, so the dead round's writes are
+    never referenced, and the resumed round's commit deletes them."""
     cfg = make_cfg()
     engine1, _ = run_spark_crawl(spark, tmp_path, web, cfg,
                                  interrupt_after=2)
     # simulate the dead round-3: uncommitted APPENDS on append-only tables
-    # (the dangerous case — an overwrite is dropped by time travel, but a
-    # naive append would have stacked on top of these)
     garbage_seen = engine1.seen_hashes().limit(3).withColumn(
         "url_hash", F.col("url_hash") + 999)
     # bucketed url_seen: the dead round's hashes land in an uncommitted
     # round partition; resume must never read it, and the re-run round
     # must drop it before appending (idempotent write)
     engine1.store.url_seen.append_round(spark, garbage_seen, round_no=3)
-    engine1.store["frontier"].append(
-        engine1._read("frontier").limit(2))
-    engine1.store["frontier_updates"].append(
-        engine1._read("frontier_updates").limit(1))
+    for table, n in (("frontier", 2), ("frontier_updates", 1)):
+        engine1.store[table].append(engine1._read(table).limit(n),
+                                    engine1._snapshots[table])
+    assert {t for t, _ in unreferenced_dirs(engine1.store)} == {
+        "frontier", "frontier_updates"}
 
     pages_rows, seeds_rows, robots_texts = web
     pages_df = spark.createDataFrame(
@@ -312,6 +325,32 @@ def test_resume_ignores_uncommitted_appends(spark, tmp_path, web):
     assert spark_log(engine2) == sim.sorted_log()
     seen2 = {r["url_hash"] for r in engine2.seen_hashes().collect()}
     assert seen2 == sim.seen
+    assert unreferenced_dirs(store2) == set()
+
+
+def test_state_holds_only_the_last_commit(spark, tmp_path):
+    """After N and after 2N rounds every data dir on disk is referenced by
+    the last commit: overwritten, compacted-away and never-committed
+    snapshots are expired at commit, so state grows with live data only
+    (an overwrite-only table holds one dir however many rounds ran)."""
+    n = 2
+    cfg = make_cfg(frontier_compact_every=2)
+    engine, _ = run_spark_crawl(
+        spark, tmp_path, make_web(n_hosts=3, pages_per_host=10, seed=11),
+        cfg, interrupt_after=n)
+
+    def check(round_no):
+        # rounds n and 2n are compaction rounds: the frontier is rewritten
+        assert engine.store.last_committed_round()["round"] == round_no
+        assert unreferenced_dirs(engine.store) == set()
+        for table in ("bloom_shards", "domain_state", "frontier"):
+            assert len(os.listdir(os.path.join(
+                engine.store[table].dir, "data"))) == 1, table
+
+    check(n)
+    for r in range(n + 1, 2 * n + 1):
+        assert engine.run_round(r)["fetched"] > 0
+    check(2 * n)
 
 
 class _Crash(RuntimeError):
@@ -322,8 +361,6 @@ def _hook_writes(mp, crash_after=None) -> list[tuple[str, str]]:
     """Record every StateStore write — snapshot-table appends and
     overwrites, url_seen round appends — as (table, method), and raise
     _Crash right after the `crash_after`-th one returns."""
-    import os
-
     from datascrapexter_spark.frontier.state import (
         BucketedSeenTable,
         SnapshotTable,
@@ -346,6 +383,23 @@ def _hook_writes(mp, crash_after=None) -> list[tuple[str, str]]:
     return writes
 
 
+def _crash_in_expiry(mp, crash_at: int) -> None:
+    """Raise _Crash from SnapshotTable.expire at the `crash_at`-th table of
+    a commit, before that table is expired: the journal is already
+    published, the tables from there on keep their dead dirs."""
+    from datascrapexter_spark.frontier.state import SnapshotTable
+
+    expire, calls = SnapshotTable.expire, []
+
+    def hooked(table, snap):
+        calls.append(table.dir)
+        if len(calls) == crash_at:
+            raise _Crash(os.path.basename(table.dir))
+        return expire(table, snap)
+
+    mp.setattr(SnapshotTable, "expire", hooked)
+
+
 def _round_outcome(engine, round_no):
     """Crawl log, url_seen set, full frontier and the journal's round
     record (its wall time aside) after `round_no` committed."""
@@ -366,14 +420,17 @@ def test_crash_at_every_write_resumes_to_same_round(spark, tmp_path,
     """A crash right after ANY state write of a round — here a compaction
     round, so the archive append is among them — resumes in a fresh
     engine to the same crawl log, url_seen set, frontier and round record
-    as the uninterrupted round. Every k starts from a copy of the store
-    as the previous round left it. The first round and the uninterrupted
-    round also pin the Spark jobs a round that fetches pages may run."""
+    as the uninterrupted round. A crash inside the commit's expiry, at
+    any table, resumes to the committed round with the same outcome, and
+    the next round's commit leaves no unreferenced dir. Every crash
+    starts from a copy of the store as the previous round left it. The
+    init, the first round and the uninterrupted round also pin the Spark
+    jobs they may run."""
     import shutil
     import time
 
     swept = 2
-    # a small filter and few seen buckets keep the ~20 rounds cheap; the
+    # a small filter and few seen buckets keep the ~40 rounds cheap; the
     # sizing never changes the crawl
     cfg = make_cfg(frontier_compact_every=swept, bloom_n_shards=4,
                    bloom_m_bits=1 << 12, seen_n_buckets=4)
@@ -390,49 +447,70 @@ def test_crash_at_every_write_resumes_to_same_round(spark, tmp_path,
 
     sc = spark.sparkContext
 
-    def round_jobs(round_no):
-        group = f"crawl-round-jobs-{round_no}"
-        sc.setJobGroup(group, f"crawl round {round_no}")
+    def counted(label, fn):
+        group = f"crawl-jobs-{label}"
+        sc.setJobGroup(group, f"crawl {label}")
         try:
-            stats = engine.run_round(round_no)
+            out = fn()
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
             sc.setLocalProperty("spark.job.description", None)
-        return stats, len(sc.statusTracker().getJobIdsForGroup(group))
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
     t0 = time.monotonic()
     engine = engine_at(tmp_path / "crawl")
-    engine.init(seeds)
-    _, first_jobs = round_jobs(swept - 1)
-    assert first_jobs <= 35, first_jobs
+    _, init_jobs = counted("init", lambda: engine.init(seeds))
+    assert init_jobs <= 9, init_jobs
+    _, first_jobs = counted(f"round-{swept - 1}",
+                            lambda: engine.run_round(swept - 1))
+    assert first_jobs <= 33, first_jobs
     template = tmp_path / "after_prev_round"
     shutil.copytree(tmp_path / "crawl", template)
 
     with monkeypatch.context() as mp:
         writes = _hook_writes(mp)
-        stats, n_jobs = round_jobs(swept)
+        stats, n_jobs = counted(f"round-{swept}",
+                                lambda: engine.run_round(swept))
     assert stats["fetched"] > 0
-    assert n_jobs <= 35, n_jobs
+    assert n_jobs <= 34, n_jobs
     expected = _round_outcome(engine, swept)
     assert ("frontier_archive", "append") in writes
     assert engine._read("frontier_archive").count() > 0
 
-    for k in range(1, len(writes) + 1):
+    def crash_and_resume(k, hook, resumes_to):
         root = tmp_path / f"crash_{k}"
         shutil.copytree(template, root)
         crashed = engine_at(root)
         assert crashed.resume() == swept - 1
         with monkeypatch.context() as mp:
-            _hook_writes(mp, crash_after=k)
+            hook(mp)
             with pytest.raises(_Crash):
                 crashed.run_round(swept)
         resumed = engine_at(root)
-        assert resumed.resume() == swept - 1
+        assert resumed.resume() == resumes_to
+        return root, resumed
+
+    for k in range(1, len(writes) + 1):
+        root, resumed = crash_and_resume(
+            k, lambda mp: _hook_writes(mp, crash_after=k), swept - 1)
         resumed.run_round(swept)
         assert _round_outcome(resumed, swept) == expected, (k, writes[k - 1])
         shutil.rmtree(root)
-    print(f"crash sweep: {len(writes)} writes, {first_jobs} jobs in the "
-          f"first round, {n_jobs} in the uninterrupted round, "
+
+    leftovers = []
+    for k in range(1, len(StateStore.TABLES) + 1):
+        root, resumed = crash_and_resume(
+            f"expire_{k}", lambda mp: _crash_in_expiry(mp, k), swept)
+        assert _round_outcome(resumed, swept) == expected, k
+        leftovers.append(len(unreferenced_dirs(resumed.store)))
+        resumed.run_round(swept + 1)
+        assert unreferenced_dirs(resumed.store) == set(), k
+        shutil.rmtree(root)
+    # a crash at the first table leaves dead dirs for the next commit
+    assert leftovers[0] > 0, leftovers
+    print(f"crash sweep: {len(writes)} writes, {init_jobs} jobs in init, "
+          f"{first_jobs} in the first round, {n_jobs} in the uninterrupted "
+          f"round, dirs left by an expiry crash at each table {leftovers}, "
           f"{time.monotonic() - t0:.0f} s")
 
 

@@ -1,7 +1,10 @@
 """Unit tests: snapshot state store, Bloom shards, robots parser."""
 
+import os
+
 import numpy as np
 import pytest
+from pyspark.sql import types as T
 
 from datascrapexter_spark.frontier.bloom import BloomShards, build_bitset, probe_bitset
 from datascrapexter_spark.frontier.robots import parse_robots_txt
@@ -67,45 +70,78 @@ def test_bloom_shard_build_probe_roundtrip():
     assert probe_bitset(bs, hashes, m_bits=1 << 16, k=5).all()
 
 
+def _data_dirs(table: SnapshotTable) -> set[str]:
+    return {f"data/{d}" for d in os.listdir(os.path.join(table.dir, "data"))}
+
+
 def test_snapshot_table_append_and_time_travel(spark, tmp_path):
+    """Writes return snapshot values: each stays readable (time travel)
+    until it is expired, the empty snapshot reads as an empty frame with
+    its schema, and expire deletes exactly the data dirs a snapshot does
+    not reference."""
     t = SnapshotTable(str(tmp_path), "t")
-    assert t.read(spark) is None
+
+    def values(snap):
+        return sorted(r["v"] for r in t.read(spark, snap).collect())
+
+    empty = SnapshotTable.empty(T.StructType([T.StructField("v", T.LongType())]))
+    assert t.read(spark, empty).columns == ["v"] and values(empty) == []
     s1 = t.overwrite(spark.range(3).selectExpr("id as v"))
-    s2 = t.append(spark.range(10, 12).selectExpr("id as v"))
-    assert sorted(r["v"] for r in t.read(spark).collect()) == [0, 1, 2, 10, 11]
-    # time travel to snapshot 1
-    assert sorted(r["v"] for r in t.read(spark, s1).collect()) == [0, 1, 2]
-    # overwrite drops history for current but keeps old snapshots readable
-    t.overwrite(spark.range(99, 100).selectExpr("id as v"))
-    assert [r["v"] for r in t.read(spark).collect()] == [99]
-    assert sorted(r["v"] for r in t.read(spark, s2).collect()) == [0, 1, 2, 10, 11]
+    s2 = t.append(spark.range(10, 12).selectExpr("id as v"), s1)
+    assert values(s2) == [0, 1, 2, 10, 11]
+    assert values(s1) == [0, 1, 2]
+    assert values(t.append(spark.range(7, 8).selectExpr("id as v"), empty)) == [7]
+    s3 = t.overwrite(spark.range(99, 100).selectExpr("id as v"))
+    assert values(s3) == [99]
+    assert values(s2) == [0, 1, 2, 10, 11]
+    assert len(_data_dirs(t)) == 4
+    t.expire(s2)
+    assert _data_dirs(t) == set(s2["dirs"])
+    assert values(s2) == [0, 1, 2, 10, 11]
+    t.expire(s2)  # idempotent
+    assert _data_dirs(t) == set(s2["dirs"])
+    t.expire(None)
+    assert _data_dirs(t) == set()
 
 
-def test_state_store_round_journal(tmp_path):
+def test_state_store_round_journal(spark, tmp_path):
     store = StateStore(str(tmp_path / "s"))
     assert store.last_committed_round() is None
-    store.commit_round(0, {"frontier": 1}, {"pending": 3})
-    store.commit_round(1, {"frontier": 2}, {"pending": 5})
+    frontier = store["frontier"]
+    s0 = frontier.overwrite(spark.range(3).selectExpr("id as v"))
+    store.commit_round(0, {"frontier": s0}, {"pending": 3})
+    never_committed = frontier.overwrite(spark.range(1).selectExpr("id as v"))
+    s1 = frontier.append(spark.range(3, 5).selectExpr("id as v"), s0)
+    store.commit_round(1, {"frontier": s1}, {"pending": 5})
     last = store.last_committed_round()
-    assert last["round"] == 1 and last["snapshots"]["frontier"] == 2
+    assert last["round"] == 1 and last["snapshots"] == {"frontier": s1}
     assert last["stats"] == {"pending": 5}
     assert [r["round"] for r in store.committed_rounds()] == [0, 1]
+    assert sorted(r["v"] for r in store.read(spark, "frontier").collect()) \
+        == [0, 1, 2, 3, 4]
+    # the commit deleted the write no commit references
+    assert _data_dirs(frontier) == set(s1["dirs"])
+    assert not set(never_committed["dirs"]) & _data_dirs(frontier)
+    assert store.read(spark, "crawl_log") is None
     # round 0 (init) starts a new crawl's journal
-    store.commit_round(0, {"frontier": 3}, {"pending": 1})
+    store.commit_round(0, {"frontier": SnapshotTable.empty(T.StructType())},
+                       {"pending": 1})
     assert [r["round"] for r in store.committed_rounds()] == [0]
+    assert _data_dirs(frontier) == set()
 
 
 def test_manifest_commit_is_atomic(spark, tmp_path):
-    """A torn write never corrupts the manifest: publishing goes through
-    os.replace of a complete temp file."""
-    t = SnapshotTable(str(tmp_path), "t")
-    t.overwrite(spark.range(5).selectExpr("id as v"))
+    """A torn publish never corrupts the journal: publishing goes through
+    os.replace of a complete temp file, so an interrupted publish's stray
+    temp file is never read."""
+    store = StateStore(str(tmp_path))
+    snap = store["frontier"].overwrite(spark.range(5).selectExpr("id as v"))
+    store.commit_round(0, {"frontier": snap}, {"pending": 5})
     # leave a stray tmp file like an interrupted publish would
-    import os
-    stray = t.manifest_path + ".tmp-dead"
-    with open(stray, "w") as fh:
+    with open(store.journal_path + ".tmp-dead", "w") as fh:
         fh.write("{corrupt")
-    assert t.read(spark).count() == 5
+    assert store.last_committed_round()["stats"] == {"pending": 5}
+    assert store.read(spark, "frontier").count() == 5
 
 
 # ---------------------------------------------------------------------------

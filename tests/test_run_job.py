@@ -88,13 +88,13 @@ def test_run_scrape_job_end_to_end(spark, tmp_path):
     from datascrapexter_spark.frontier.state import StateStore
 
     store = StateStore(str(tmp_path / "state"))
-    req = request_metrics_from_log(store["crawl_log"].read(spark),
+    req = request_metrics_from_log(store.read(spark, "crawl_log"),
                                    CrawlConfig()).collect()
     assert sum(r["n"] for r in req) == sum(s["scheduled"] for s in stats)
     assert sum(r["n"] for r in req if r["status"] == "fetched") == len(rows)
     # ...and extraction_metrics counts errors per field over the results
     em = {r["field"]: r
-          for r in store["extraction_metrics"].read(spark).collect()}
+          for r in store.read(spark, "extraction_metrics").collect()}
     assert set(em) == {"title", "price", "status_raw", "items",
                       "upper_title"}
     n_res = len(rows)

@@ -110,20 +110,19 @@ def inject_dead_history(spark, engine, n_dead: int,
         host_col.alias("host"), host_col.alias("domain"),
         F.lit(5).alias("priority"), F.lit(0).alias("attempts"),
         F.lit(0).alias("round_added"), F.lit("done").alias("state"))
-    sids = dict(engine._snapshot_ids)
-    sids["url_seen"] = engine.store.url_seen.append_round(
+    snaps = dict(engine._snapshots)
+    snaps["url_seen"] = engine.store.url_seen.append_round(
         spark, dead.select("url_hash"), round_no=0, idempotent=False)
-    sids["frontier_archive"] = engine.store["frontier_archive"].append(
-        dead_rows)
+    snaps["frontier_archive"] = engine._append("frontier_archive", dead_rows)
     cfg = engine.cfg
     _, blobs = split_pass(probe_and_fold(
         dead.select("url_hash"), engine._read("bloom_shards"),
         cfg.bloom_n_shards, cfg.bloom_m_bits, cfg.bloom_k))
-    sids["bloom_shards"] = engine.store["bloom_shards"].overwrite(blobs)
+    snaps["bloom_shards"] = engine.store["bloom_shards"].overwrite(blobs)
     # dead rows are terminal: init's round stats still hold
-    engine.store.commit_round(0, sids,
+    engine.store.commit_round(0, snaps,
                               engine.store.last_committed_round()["stats"])
-    engine._snapshot_ids = sids
+    engine._snapshots = snaps
 
 
 def run_arm(spark, n_dead: int, rounds: int, heavy: bool = False) -> dict:
