@@ -9,12 +9,15 @@ same job runs three ways with identical semantics:
   3. pytest smoke tests.
 
 Workload (BASELINE.json headline metric — URLs scheduled+deduped/sec):
-one full crawl-scheduling round over a synthetic raw-URL stream derived
-from `lineitem`: canonicalize (one fused Arrow crossing) -> xxhash64 ->
-intra-batch dedup -> robots gate (broadcast rules-array join + codegen
-prefix match) -> anti-join vs a pre-materialized url_seen half-space ->
-per-registered-domain politeness budgets -> per-domain top-k (one
-window, map-side group limit at the page cap).
+one crawl-scheduling round over a synthetic raw-URL stream derived from
+`lineitem`, composed of the crawl engine's own steps (frontier/
+scheduler.py) so it times the engine's plan: candidates (one fused Arrow
+canonicalizing crossing -> dedup -> xxhash64) -> robots_gate (broadcast
+rules-array join + codegen prefix match) -> one Bloom pass
+(probe_and_fold) -> new_urls (the exact check of the maybe-seen rows
+against a bucketed url_seen holding half the canonical space) ->
+per-domain top-k under round_budgets (schedule_topk: one window,
+map-side group limit at the page cap).
 
 Reference anchor: this is the scheduling core of the crawl loop
 (engine.go:678-804 generalized per-host; dedup superseding the
@@ -89,113 +92,79 @@ def bench_robots() -> dict[str, str]:
 
 
 def frontier_bench(spark: SparkSession, sf_dir: str, mult: int = URL_MULT) -> dict:
-    """One full crawl-scheduling round over the synthetic frontier:
-    canonicalize -> hash -> intra-batch dedup -> robots gate (broadcast
-    rules-array join + codegen prefix match — zero Python) -> anti-join vs
-    url_seen -> per-domain politeness budgets (broadcast crawl-delay
-    table, no big-table pass) -> per-domain top-k (one window, map-side
-    group limit at the page cap).
-    Returns {n_urls, wall_s, urls_per_sec, ...}."""
+    """One scheduling round over the synthetic frontier, composed of the
+    crawl engine's own steps (frontier/scheduler.py). Prior-round state,
+    built untimed as CrawlEngine.init builds it: a bucketed url_seen
+    holding half the canonical space, the Bloom blobs folded from the same
+    hashes, the robots rules array and the fresh-domain budgets. The timed
+    round: candidates -> robots_gate -> probe_and_fold -> new_urls ->
+    schedule_topk. Frames it cached, its url_seen catalog table and its
+    temp dir are released however it ends; the session's other cached
+    frames are left as they are.
+    Returns {n_urls, wall_s, urls_per_sec, n_scheduled}."""
+    from datascrapexter_spark.frontier.bloom import probe_and_fold, split_pass
     from datascrapexter_spark.frontier.politeness import (
         PolitenessConfig,
         schedule_topk,
-        tokens_per_round,
     )
     from datascrapexter_spark.frontier.robots import (
         RobotsIndex,
-        allowed_rules_col,
+        domain_delays_df,
+        robots_gate,
         rules_array_df,
     )
-    from datascrapexter_spark.functions.urlnorm import (
-        canonicalize_arrow_df,
-        normalize_url_udf,
-        registered_domain,
+    from datascrapexter_spark.frontier.scheduler import (
+        DOMAIN_STATE_SCHEMA,
+        CrawlConfig,
+        candidates,
+        frontier_rows,
+        new_urls,
+        round_budgets,
     )
+    from datascrapexter_spark.frontier.state import BucketedSeenTable
 
-    # same cache hygiene as the query catalog (queries._fresh): drop any
-    # InMemoryRelation a previous invocation left behind so every round
-    # computes from its inputs (the rules cache below is rebuilt per call,
-    # pre-t0 by design)
-    spark.catalog.clearCache()
-
+    cfg = CrawlConfig(politeness=PolitenessConfig(
+        max_pages_per_round_per_domain=1000, round_seconds=500.0))
+    bloom = (cfg.bloom_n_shards, cfg.bloom_m_bits, cfg.bloom_k)
     raw = raw_urls(spark, sf_dir, mult)
     n_urls = raw.count()
-
-    # prior-round state (not timed): url_seen covers half the canonical
-    # space; robots rules parsed and broadcast
     tmp = tempfile.mkdtemp(prefix="bench_seen_")
-    seen_path = os.path.join(tmp, "url_seen")
-    (
-        raw.filter(F.xxhash64("url") % 2 == 0)
-        .withColumn("url_canon", normalize_url_udf("url"))
-        .select(F.xxhash64("url_canon").alias("url_hash"))
-        .dropDuplicates(["url_hash"])
-        .write.mode("overwrite").parquet(seen_path)
-    )
-    seen = spark.read.parquet(seen_path)
+    url_seen = BucketedSeenTable(tmp)
+    cached: list[DataFrame] = []
+    try:
+        url_seen.overwrite_all(spark, candidates(
+            raw.filter(F.xxhash64("url") % 2 == 0), cfg, None
+        ).select("url_hash"), cfg.seen_n_buckets)
+        seen = url_seen.read(spark)
+        robots = RobotsIndex.from_texts(bench_robots())
+        delays = domain_delays_df(spark, robots, cfg.user_agent)
+        prior = (
+            split_pass(probe_and_fold(seen, None, *bloom))[1],
+            rules_array_df(robots.rules_df(spark), cfg.user_agent),
+            round_budgets(delays.select("domain"), delays,
+                          spark.createDataFrame([], DOMAIN_STATE_SCHEMA),
+                          cfg, 0))
+        for df in prior:
+            cached.append(df.cache())
+            df.count()
+        blobs, rules, budgets = prior
 
-    robots = RobotsIndex.from_texts(bench_robots())
-    ua = "DataScrapexter"
-    cfg = PolitenessConfig(max_pages_per_round_per_domain=1000,
-                           round_seconds=500.0)
-    # crawl-delay -> per-domain budget rows (tiny, computed driver-side
-    # exactly like CrawlEngine._domain_delays_df: max delay per domain)
-    delays: dict[str, float] = {}
-    for host in bench_robots():
-        d = robots.by_host[host].get_crawl_delay(ua)
-        dom = registered_domain(host)
-        delays[dom] = max(delays.get(dom, 0.0), d)
-    delays_df = spark.createDataFrame(
-        sorted(delays.items()), "domain string, crawl_delay_s double"
-    )
-    budgets = delays_df.select(
-        "domain",
-        tokens_per_round(F.col("crawl_delay_s"), F.lit(None).cast("double"),
-                         F.lit(None).cast("int"), cfg).alias("tokens"),
-    )
-
-    # rules folded to one ordered-array row per host (prior-round state,
-    # not timed) — the timed gate is a broadcast join + pure expressions
-    rules = rules_array_df(robots.rules_df(spark), ua).cache()
-    rules.count()
-
-    t0 = time.monotonic()
-    # ONE fused Arrow crossing emits (url_canon, host, domain) as CONCRETE
-    # columns. Materializing host/domain in the batch matters beyond saving
-    # a pass: as native expressions (parse_url + public-suffix regexps)
-    # they would be re-inlined by CollapseProject into every downstream
-    # consumer — the pushed-down join null-filters, the window partitioning,
-    # the gate lambda — and re-evaluated per reference (measured 2.5x wall
-    # on this round; Catalyst does no cross-operator CSE for them).
-    # r06: Arrow-native crossing (no pandas layer) — same values as the
-    # canonicalize_struct_udf path, measurably cheaper per URL. (A fully
-    # JVM-codegen canonicalizer for gate-matching URLs was built and
-    # measured 3x SLOWER than this path — interpreted HOF query
-    # machinery; guide §4.2's point in reverse — and reverted.)
-    cand = (
-        canonicalize_arrow_df(raw, "url")
-        .withColumn("url_hash", F.xxhash64("url_canon"))
-        .dropDuplicates(["url_hash"])
-    )
-    path = F.coalesce(F.parse_url("url_canon", F.lit("PATH")), F.lit(""))
-    gated = (
-        cand.join(F.broadcast(rules), "host", "left")
-        .withColumn("p", path)
-        .filter(allowed_rules_col(F.col("p"), F.col("rules")))
-        .drop("rules", "p")
-    )
-    # url_seen is half the frontier — never broadcastable at 10^10 scale;
-    # force the shuffle hash join (broadcast would serialize through the
-    # driver and caps scaling)
-    new = (
-        gated.join(seen.hint("shuffle_hash"), "url_hash", "left_anti")
-        .withColumn("priority", F.lit(5))
-        .withColumn("round_added", F.lit(0))
-    )
-    sched = schedule_topk(new, budgets, cfg)
-    n_scheduled = sched.count()
-    wall = time.monotonic() - t0
-    shutil.rmtree(tmp, ignore_errors=True)
+        t0 = time.monotonic()
+        gated = robots_gate(candidates(raw, cfg, None), rules)
+        # cached as the engine caches it: new_urls reads it twice
+        bloom_pass = probe_and_fold(
+            gated.filter(F.col("allowed")).drop("allowed"), blobs, *bloom)
+        cached.append(bloom_pass.cache())
+        flagged, _ = split_pass(bloom_pass)
+        new = frontier_rows(new_urls(flagged, seen),
+                            F.lit(cfg.default_priority), 0)
+        n_scheduled = schedule_topk(new, budgets, cfg.politeness).count()
+        wall = time.monotonic() - t0
+    finally:
+        for df in reversed(cached):
+            df.unpersist()
+        spark.sql(f"DROP TABLE IF EXISTS {url_seen.table}")
+        shutil.rmtree(tmp, ignore_errors=True)
     return {
         "n_urls": n_urls,
         "wall_s": round(wall, 3),

@@ -15,8 +15,8 @@ oracle can re-derive it from the page-generation formula.
 Spark shape: one ``mapInPandas`` pass (one Arrow crossing per batch,
 the same pattern as extract/engine.py) — the HTML column is consumed
 inside the pass and never survives into a shuffle; everything after is
-plain columns.  Parsing uses the pluggable backend (html/backends.py:
-selectolax/lxml when importable, stdlib otherwise).
+plain columns.  Parsing is html/dom.py's parse_html, the tree every
+selector reads.
 """
 from __future__ import annotations
 

@@ -24,9 +24,10 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..functions.urlnorm import registered_domain
 
 
 @dataclass
@@ -90,13 +91,9 @@ def rules_rows(host: str, robots: RobotsRules) -> list[tuple]:
     return rows
 
 
-def delay_rows(host: str, robots: RobotsRules) -> list[tuple]:
-    return [(host, ua, d) for ua, d in robots.crawl_delays.items()]
-
-
 class RobotsIndex:
-    """host -> RobotsRules, broadcastable; built once per crawl from the
-    robots table, applied vectorized inside pandas UDFs."""
+    """host -> RobotsRules, parsed once per crawl on the driver: the engine
+    gates on its rules table (rules_df), the oracle on `allowed`."""
 
     def __init__(self, by_host: dict[str, RobotsRules]):
         self.by_host = by_host
@@ -110,17 +107,6 @@ class RobotsIndex:
         if robots is None:
             return True  # no robots.txt -> allowed
         return not robots.is_disallowed(user_agent, path)
-
-    def crawl_delay(self, user_agent: str, host: str) -> float:
-        robots = self.by_host.get(host)
-        return robots.get_crawl_delay(user_agent) if robots else 0.0
-
-    def allowed_series(self, user_agent: str, hosts: pd.Series,
-                       paths: pd.Series) -> pd.Series:
-        return pd.Series(
-            [self.allowed(user_agent, h, p) for h, p in zip(hosts, paths)],
-            dtype="bool",
-        )
 
     def all_sitemaps(self) -> list[str]:
         """Every Sitemap URL across hosts (GetSitemaps,
@@ -176,3 +162,32 @@ def allowed_rules_col(path_col: Column, rules_col: Column) -> Column:
                        lambda r: path_col.startswith(r["pattern"]))
     first = F.try_element_at(matched, F.lit(1))
     return F.coalesce(first["allow"], F.lit(True))
+
+
+def robots_gate(df: DataFrame, rules: DataFrame) -> DataFrame:
+    """`df` (url_canon, host, ...) with a boolean `allowed` column: the
+    URL path against its host's rules array (rules_array_df), broadcast-
+    joined on host and decided by allowed_rules_col — no Python crossing,
+    no rule dict pickled into a closure."""
+    path = F.coalesce(F.parse_url("url_canon", F.lit("PATH")), F.lit(""))
+    return (df.withColumn("path", path)
+            .join(F.broadcast(rules), "host", "left")
+            .withColumn("allowed",
+                        allowed_rules_col(F.col("path"), F.col("rules")))
+            .drop("path", "rules"))
+
+
+def domain_delays_df(spark: SparkSession, robots: RobotsIndex,
+                     user_agent: str) -> DataFrame:
+    """(domain, crawl_delay_s): the largest crawl delay any host of a
+    registered domain sets for `user_agent`; domains without one have no
+    row. Built once per crawl on the driver (one row per domain)."""
+    delays: dict[str, float] = {}
+    for host, rules in robots.by_host.items():
+        d = rules.get_crawl_delay(user_agent)
+        if d > 0:
+            dom = registered_domain(host)
+            delays[dom] = max(delays.get(dom, 0.0), d)
+    return spark.createDataFrame(
+        [(k, float(v)) for k, v in sorted(delays.items())],
+        "domain string, crawl_delay_s double")

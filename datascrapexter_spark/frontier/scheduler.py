@@ -3,35 +3,43 @@ checkpoint, generalized from the reference's strictly-sequential page loop
 (/root/reference/internal/scraper/engine.go:678-804) to a batch-incremental
 frontier at cluster scale (north_rule).
 
-Round r (all DataFrame ops; the only Python crossings are the Arrow-batched
-UDFs for URL canonicalization and HTML link extraction, and the round's one
-Bloom pass — the robots gate is a codegen prefix match):
+Round r is a composition of named steps, each a DataFrame function (the
+only Python crossings are the Arrow-batched URL canonicalization and HTML
+link extraction, and the round's one Bloom pass — the robots gate is a
+codegen prefix match):
 
- 1. pending frontier rows, robots-filtered (broadcast rules; denied ->
-    'blocked' — compliance_test.go:226-238 semantics);
- 2. per-domain budgets from the deterministic politeness recurrence
-    (round_budgets; ratelimiter.go semantics evaluated round-wise);
- 3. one per-domain window picks this round's fetch set with a
+ 1. robots gate: robots.robots_gate flags each pending row `allowed`
+    (broadcast rules array; denied -> 'blocked', compliance_test.go:
+    226-238 semantics), then eligible_rows applies the opt-in GDPR and
+    circuit-breaker gates;
+ 2. budgets: round_budgets, the deterministic politeness recurrence
+    (ratelimiter.go semantics evaluated round-wise);
+ 3. schedule: politeness.schedule_topk, one per-domain window with a
     deterministic total order (priority DESC, round_added, url_hash); a
     map-side group limit at the page cap bounds what a hot host ships
-    to its window (schedule_topk);
- 4. "fetch" = left equi-join against the canonical pages table (the
-    sandbox stand-in for the HTTP fetch — BASELINE.json input_hint);
-    misses re-enqueue with attempts+1 (client.go:311-322 retry semantics,
-    deterministic), up to max_attempts;
- 5. out-links -> canonicalize -> one Bloom pass (bloom.probe_and_fold:
-    one shard cogroup flags each candidate maybe-seen and emits each
-    shard's next blob; definitely-new skips the exact check) -> exact
-    check vs the bucketed-at-rest url_seen (confirm_new: seen ⋉ probe
-    shuffle-hash semi, then probe ▷ dupes anti — one plan for every
-    round size; the seen set is scanned, never exchanged, sorted or
-    hash-built) -> append frontier;
- 6. checkpoint to snapshot tables, then commit the round's one journal
-    record (every table's snapshot + stats observed on the crawl_log,
-    frontier and frontier_updates writes); a crash mid-round resumes from
-    the last one, and the commit deletes the data no snapshot references.
-    Nothing derivable is written: the request counters are served from
-    the crawl log (request_metrics_from_log).
+    to its window;
+ 4. fetch: a left equi-join against the canonical pages table (the
+    offline stand-in for the HTTP fetch — BASELINE.json input_hint);
+ 5. discover: CrawlEngine._links (out-links, or a pagination strategy's
+    next URLs) -> candidates (one canonicalizing crossing, dedup, the
+    seed-host / blocklist / trap gates, xxhash64);
+ 6. new-URL check: bloom.probe_and_fold (one shard cogroup flags each
+    candidate maybe-seen and emits each shard's next blob) -> new_urls
+    (definitely-new rows as they are; maybe-seen rows through
+    confirm_new: seen ⋉ probe shuffle-hash semi, then probe ▷ dupes
+    anti — one plan for every round size; the seen set is scanned, never
+    exchanged, sorted or hash-built) -> frontier_rows;
+ 7. transitions: transitions (frontier_updates deltas), next_domain_state,
+    crawl_log_rows and lineage_rows;
+ 8. writes + commit: checkpoint to snapshot tables, then commit the
+    round's one journal record (every table's snapshot + stats observed
+    on the crawl_log, frontier and frontier_updates writes); a crash
+    mid-round resumes from the last one, and the commit deletes the data
+    no snapshot references. Nothing derivable is written: the request
+    counters are served from the crawl log (request_metrics_from_log).
+
+benchjob.frontier_bench composes steps 5, 1, 6 and 3 over a synthetic URL
+stream, so the scheduling benchmark runs the engine's plan.
 
 Identity for dedup is xxhash64(url_canon) per north_rule; the sequential
 oracle simulator (tests/crawl_oracle.py) reproduces every step bit-for-bit,
@@ -70,11 +78,11 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.urlnorm import (
+    canonicalize_arrow_df,
     canonicalize_struct_udf,
+    host_col,
     normalize_url_udf,
-    registered_domain,
 )
-from ..functions.urlnorm import host_col
 from .bloom import probe_and_fold, split_pass
 from .links import extract_links_df
 from .pagination import PaginationSpec, extract_next_urls_df
@@ -86,7 +94,7 @@ from .politeness import (
     strategy_tokens_from_state,
     tokens_per_round,
 )
-from .robots import RobotsIndex, allowed_rules_col, rules_array_df
+from .robots import RobotsIndex, domain_delays_df, robots_gate, rules_array_df
 from .state import SnapshotTable, StateStore
 
 FRONTIER_SCHEMA = T.StructType([
@@ -165,6 +173,15 @@ def confirm_new(needs_check: DataFrame, url_seen: DataFrame) -> DataFrame:
     probe = needs_check.select("url_hash").hint("shuffle_hash")
     dupes = url_seen.join(probe, "url_hash", "left_semi")
     return needs_check.join(dupes, "url_hash", "left_anti")
+
+
+def new_urls(flagged: DataFrame, url_seen: DataFrame) -> DataFrame:
+    """The rows of a Bloom-flagged frame (split_pass) whose url_hash is not
+    in `url_seen`: the definitely-new ones as they are (a Bloom filter has
+    no false negatives), the maybe-seen ones after confirm_new."""
+    maybe = F.col("maybe_seen")
+    return (flagged.filter(~maybe).drop("maybe_seen").unionByName(
+        confirm_new(flagged.filter(maybe).drop("maybe_seen"), url_seen)))
 
 
 def request_metrics_from_log(crawl_log: DataFrame,
@@ -314,6 +331,179 @@ def round_budgets(domains: DataFrame, domain_delays: DataFrame,
             .select("domain", tokens.alias("tokens")))
 
 
+def candidates(urls: DataFrame, cfg: CrawlConfig,
+               allowed_hosts: set[str] | None) -> DataFrame:
+    """Raw URLs (a `url` column) -> distinct candidates (url_canon, host,
+    domain, url_hash): one canonicalizing crossing, a dedup on url_canon,
+    then the discovery gates — seed hosts (`allowed_hosts`; None = any),
+    the registered-domain blocklist and the spider-trap score — so a gated
+    URL never costs a hash, a Bloom probe or a url_seen row.
+
+    The Arrow crossing emits host and domain as CONCRETE columns. As
+    native expressions (parse_url + public-suffix regexps) CollapseProject
+    would re-inline them into every consumer — the join null-filters, the
+    window partitioning, the robots gate — and re-evaluate them per
+    reference (measured 2.5x the wall of a scheduling round; Catalyst does
+    no cross-operator CSE for them)."""
+    spark = urls.sparkSession
+    out = canonicalize_arrow_df(urls, "url").dropDuplicates(["url_canon"])
+    if allowed_hosts is not None:
+        hosts = spark.createDataFrame(
+            [(h,) for h in sorted(allowed_hosts)], "host string")
+        out = out.join(F.broadcast(hosts), "host", "semi")
+    if cfg.blocked_domains:
+        bl = spark.createDataFrame(
+            [(d,) for d in sorted(set(cfg.blocked_domains))], "domain string")
+        out = out.join(F.broadcast(bl), "domain", "left_anti")
+    if cfg.trap_filter:
+        from .traps import trap_cols
+
+        score = trap_cols(F.col("url_canon"), max_depth=cfg.trap_max_depth,
+                          max_params=cfg.trap_max_params)["trap_score"]
+        out = out.filter(score < cfg.trap_threshold)
+    return out.withColumn("url_hash", F.xxhash64("url_canon"))
+
+
+def frontier_rows(urls: DataFrame, priority: Column,
+                  round_no: int) -> DataFrame:
+    """(url_canon, url_hash, host, domain, ...) -> frontier rows added in
+    `round_no`: pending, no attempts, in FRONTIER_SCHEMA order."""
+    return urls.select(
+        "url_canon", "url_hash", "host", "domain",
+        priority.cast("int").alias("priority"), F.lit(0).alias("attempts"),
+        F.lit(round_no).alias("round_added"), F.lit("pending").alias("state"))
+
+
+def eligible_rows(allowed: DataFrame, prev_state: DataFrame, cfg: CrawlConfig,
+                  round_no: int) -> tuple[DataFrame, DataFrame | None]:
+    """Robots-allowed pending rows -> (this round's eligible rows, the
+    GDPR-blocked rows or None with the gate off). A domain whose breaker
+    is open (quarantined_until >= round_no) is skipped; its rows stay
+    pending."""
+    gdpr_blocked = None
+    if cfg.gdpr_mode == "block":
+        from .compliance import gdpr_required_col
+
+        gflag = gdpr_required_col(F.col("domain"))
+        gdpr_blocked = allowed.filter(gflag)
+        allowed = allowed.filter(~gflag)
+    if cfg.quarantine_max_failures > 0:
+        quarantined = prev_state.filter(
+            F.coalesce("quarantined_until", F.lit(-1)) >= round_no
+        ).select("domain")
+        allowed = allowed.join(F.broadcast(quarantined), "domain", "left_anti")
+    return allowed, gdpr_blocked
+
+
+def transitions(fetched: DataFrame, blocked: DataFrame,
+                gdpr_blocked: DataFrame | None, cfg: CrawlConfig,
+                round_no: int) -> DataFrame:
+    """The round's frontier_updates deltas — O(round work), never a
+    full-frontier rewrite. A terminal delta (done/failed/blocked*) masks
+    its row out of the pending view until the next compaction archives
+    it; a miss below max_attempts stays pending with attempts+1."""
+    found, missed = F.col("found"), F.col("attempts") + 1
+    updates = fetched.select(
+        "url_hash",
+        F.when(found, "done").when(missed >= cfg.max_attempts, "failed")
+        .otherwise("pending").alias("state"),
+        F.when(found, F.col("attempts")).otherwise(missed).alias("attempts"))
+    for df, st in ((blocked, "blocked"), (gdpr_blocked, "blocked_gdpr")):
+        if df is not None:
+            updates = updates.unionByName(
+                df.select("url_hash", F.lit(st).alias("state"), "attempts"))
+    return updates.withColumn("round", F.lit(round_no))
+
+
+def crawl_log_rows(fetched: DataFrame, round_no: int) -> DataFrame:
+    """The round's crawl log rows — the reproducible order fixture."""
+    return fetched.select(
+        F.lit(round_no).alias("round"), "domain", "seq", "url_canon",
+        "url_hash", "priority",
+        F.when(F.col("found"), "fetched").otherwise("miss").alias("status"))
+
+
+def lineage_rows(fetched: DataFrame, round_no: int) -> DataFrame:
+    """Per-partition lineage metrics of the fetch (north_rule)."""
+    return (
+        fetched.groupBy(F.spark_partition_id().alias("partition_id"))
+        .agg(F.count("*").alias("scheduled"),
+             F.sum(F.col("found").cast("long")).alias("fetched"),
+             F.sum((~F.col("found")).cast("long")).alias("errors"))
+        .withColumn("round", F.lit(round_no))
+        .select("round", "partition_id", "scheduled", "fetched", "errors"))
+
+
+def next_domain_state(fetched: DataFrame, prev_state: DataFrame,
+                      cfg: CrawlConfig, round_no: int) -> DataFrame:
+    """Domain adaptation and breaker state for the next round. A full-outer
+    merge, so UNSCHEDULED domains (e.g. quarantined) keep their state —
+    matching the oracle simulator's persistent dict."""
+    pol = cfg.politeness
+    round_err = (
+        fetched.groupBy("domain")
+        .agg(F.count("*").alias("att"),
+             F.sum((~F.col("found")).cast("long")).alias("errs"),
+             F.sum(F.col("found").cast("long")).alias("succ"))
+        .withColumn("r_err_rate", F.col("errs") / F.col("att"))
+    )
+    prev_s = prev_state.select(
+        "domain",
+        F.col("err_rate").alias("p_err_rate"),
+        F.col("consec_err").alias("p_consec"),
+        F.col("breaker_failures").alias("p_breaker"),
+        F.col("quarantined_until").alias("p_quar"),
+        F.col("rate_mult").alias("p_mult"),
+        F.col("n_fetch_total").alias("p_fetch_total"),
+        F.col("n_err_total").alias("p_err_total"),
+    )
+    merged = round_err.join(prev_s, "domain", "full")
+    attempted = F.col("att").isNotNull()
+    new_consec = F.when(
+        attempted,
+        next_consec_errors(F.col("r_err_rate"), F.col("p_consec"), pol),
+    ).otherwise(F.coalesce("p_consec", F.lit(0)))
+    # recordSuccess resets the failure count on ANY success
+    # (performance.go:503-510), rendered round-wise
+    new_breaker = (
+        F.when(~attempted, F.coalesce("p_breaker", F.lit(0)))
+        .when(F.col("succ") > 0, F.lit(0))
+        .otherwise(F.coalesce("p_breaker", F.lit(0)) + F.col("errs"))
+    ).cast("int")
+    if cfg.quarantine_max_failures > 0:
+        # (re-)open only on an attempted round's failures — an already
+        # open, unattempted domain keeps its expiry so it can half-open
+        new_quar = (
+            F.when(attempted & (new_breaker >= cfg.quarantine_max_failures),
+                   F.lit(round_no + cfg.quarantine_reset_rounds))
+            .otherwise(F.col("p_quar"))
+        ).cast("int")
+    else:
+        new_quar = F.lit(None).cast("int")
+    # interval multiplier for the strategy family: min-change-gated
+    # recurrence from this round's stats (updateAdaptiveRate,
+    # ratelimiter.go:363-409 evaluated round-wise; consumed next round
+    # by strategy_tokens_from_state)
+    new_mult = F.when(
+        attempted,
+        interval_multiplier(F.col("r_err_rate"), new_consec,
+                            F.col("p_mult"), pol),
+    ).otherwise(F.coalesce("p_mult", F.lit(1.0)))
+    return merged.select(
+        "domain",
+        F.when(attempted, F.col("r_err_rate"))
+        .otherwise(F.col("p_err_rate")).alias("err_rate"),
+        new_consec.cast("int").alias("consec_err"),
+        new_breaker.alias("breaker_failures"),
+        new_quar.alias("quarantined_until"),
+        new_mult.cast("double").alias("rate_mult"),
+        (F.coalesce("p_fetch_total", F.lit(0))
+         + F.coalesce("att", F.lit(0))).cast("long").alias("n_fetch_total"),
+        (F.coalesce("p_err_total", F.lit(0))
+         + F.coalesce("errs", F.lit(0))).cast("long").alias("n_err_total"),
+    )
+
+
 class CrawlEngine:
     def __init__(self, spark: SparkSession, store: StateStore,
                  pages: DataFrame, robots_texts: dict[str, str],
@@ -329,7 +519,8 @@ class CrawlEngine:
         # read at that scale; the gate is unchanged)
         self.robots_rules = rules_array_df(
             self.robots.rules_df(spark), self.cfg.user_agent).cache()
-        self.domain_delays = self._domain_delays_df()
+        self.domain_delays = domain_delays_df(spark, self.robots,
+                                              self.cfg.user_agent)
         self.pages = self._prepare_pages(pages).cache()
         self.allowed_hosts: set[str] | None = None
         self._snapshots: dict = {}  # the last commit's, per table
@@ -385,22 +576,6 @@ class CrawlEngine:
         return (uniq.select("url_canon", "html")
                 .unionByName(dedup.select("url_canon", "html")))
 
-    def _frontier_rows(self, urls: DataFrame, priority_col, round_no: int) -> DataFrame:
-        """url column -> full frontier-schema rows (one fused Arrow pass for
-        host/domain; canonicalization is idempotent on url_canon)."""
-        return (
-            urls.withColumn("url_hash", F.xxhash64("url_canon"))
-            .withColumn("c", canonicalize_struct_udf("url_canon"))
-            .withColumn("host", F.col("c.host"))
-            .withColumn("domain", F.col("c.domain"))
-            .drop("c")
-            .withColumn("priority", priority_col.cast("int"))
-            .withColumn("attempts", F.lit(0))
-            .withColumn("round_added", F.lit(round_no))
-            .withColumn("state", F.lit("pending"))
-            .select([f.name for f in FRONTIER_SCHEMA.fields])
-        )
-
     # ------------------------------------------------------------------
     # lifecycle
     # ------------------------------------------------------------------
@@ -416,15 +591,14 @@ class CrawlEngine:
                     [(u, self.cfg.default_priority) for u in sitemaps],
                     "url string, priority int")
                 seeds = seeds.select("url", "priority").unionByName(sm)
-        canon = (
-            seeds.withColumn("url_canon", normalize_url_udf("url"))
-            .select("url_canon", "priority")
-        )
+        canon = seeds.select(canonicalize_struct_udf("url").alias("c"),
+                             "priority").select("c.*", "priority")
         # one row per canonical URL; highest priority wins, deterministic
         w = Window.partitionBy("url_canon").orderBy(F.col("priority").desc())
         canon = (canon.withColumn("_rn", F.row_number().over(w))
-                 .filter(F.col("_rn") == 1).drop("_rn"))
-        frontier = self._frontier_rows(canon, F.col("priority"), 0)
+                 .filter(F.col("_rn") == 1)
+                 .withColumn("url_hash", F.xxhash64("url_canon")))
+        frontier = frontier_rows(canon, F.col("priority"), 0)
 
         # every other table starts empty: a snapshot with no data dirs
         snaps = {name: SnapshotTable.empty(schema) for name, schema in (
@@ -444,9 +618,8 @@ class CrawlEngine:
             hosts = [r["host"] for r in rows.select("host").distinct().collect()]
             self.allowed_hosts = set(hosts)
         seen = rows.select("url_hash")
-        self.store.url_seen.n_buckets = self.cfg.seen_n_buckets
         snaps["url_seen"] = self.store.url_seen.overwrite_all(
-            self.spark, seen, round_no=0)
+            self.spark, seen, self.cfg.seen_n_buckets)
         _, blobs = split_pass(probe_and_fold(
             seen, None, self.cfg.bloom_n_shards, self.cfg.bloom_m_bits,
             self.cfg.bloom_k))
@@ -535,229 +708,51 @@ class CrawlEngine:
 
     def _round(self, round_no: int) -> dict:
         t0 = time.monotonic()
-        cfg, pol = self.cfg, self.cfg.politeness
-        pending = self._pending_frontier()
-
-        # --- robots gate: broadcast rules-array join + codegen prefix
-        # match (no Python crossing, no driver-pickled rule dict) ---
-        with_path = pending.withColumn(
-            "path", F.coalesce(F.parse_url("url_canon", F.lit("PATH")), F.lit("")))
-        gated = self._cache(
-            with_path.join(F.broadcast(self.robots_rules), "host", "left")
-            .withColumn("allowed",
-                        allowed_rules_col(F.col("path"), F.col("rules")))
-            .drop("path", "rules"))
-        blocked = gated.filter(~F.col("allowed")).drop("allowed")
-        eligible = gated.filter(F.col("allowed")).drop("allowed")
-
-        # --- GDPR TLD gate (compliance.py; opt-in) ---
-        gdpr_blocked = None
-        if cfg.gdpr_mode == "block":
-            from .compliance import gdpr_required_col
-
-            gflag = gdpr_required_col(F.col("domain"))
-            gdpr_blocked = eligible.filter(gflag)
-            eligible = eligible.filter(~gflag)
-
-        # --- budgets (pure Column recurrence over previous-round state) ---
+        cfg = self.cfg
         prev_state = self._read("domain_state")
 
-        # --- circuit breaker gate: open domains are skipped entirely ---
-        if cfg.quarantine_max_failures > 0:
-            quarantined = prev_state.filter(
-                F.coalesce("quarantined_until", F.lit(-1)) >= round_no
-            ).select("domain")
-            eligible = eligible.join(
-                F.broadcast(quarantined), "domain", "left_anti")
+        # --- robots gate (denied -> 'blocked'), then the opt-in GDPR and
+        # breaker gates. Cached: blocked and eligible both read it ---
+        gated = self._cache(robots_gate(self._pending_frontier(),
+                                        self.robots_rules))
+        blocked = gated.filter(~F.col("allowed")).drop("allowed")
+        eligible, gdpr_blocked = eligible_rows(
+            gated.filter(F.col("allowed")).drop("allowed"), prev_state, cfg,
+            round_no)
 
+        # --- budgets -> schedule -> "fetch" (equi-join the pages table) ---
         budgets = round_budgets(eligible.select("domain").distinct(),
                                 self.domain_delays, prev_state, cfg, round_no)
-        scheduled = schedule_topk(eligible, budgets, pol)
-
-        # --- "fetch": equi-join the canonical pages table ---
+        scheduled = schedule_topk(eligible, budgets, cfg.politeness)
         fetched = self._cache(
             scheduled.join(self.pages, "url_canon", "left")
             .withColumn("found", F.col("html").isNotNull()))
 
-        # --- per-partition lineage metrics (north_rule) ---
-        metrics = (
-            fetched.groupBy(F.spark_partition_id().alias("partition_id"))
-            .agg(F.count("*").alias("scheduled"),
-                 F.sum(F.col("found").cast("long")).alias("fetched"),
-                 F.sum((~F.col("found")).cast("long")).alias("errors"))
-            .withColumn("round", F.lit(round_no))
-            .select("round", "partition_id", "scheduled", "fetched", "errors")
-        )
-
-        # --- out-links -> new frontier candidates ---
-        spec = cfg.pagination_spec
-        new_pag_state = new_chain_rows = None
-        if spec is not None and spec.type in ("cursor", "next_button"):
-            links, new_pag_state, new_chain_rows = self._pagination_links(
-                fetched.filter("found").select("url_canon", "html"),
-                spec, round_no)
-        else:
-            links = extract_links_df(
-                fetched.filter("found").select("url_canon", "html"),
-                selector=cfg.link_selector,
-            )
-        candidates = links.select(
-            F.col("out_url_canon").alias("url_canon")).distinct()
-        candidates = (
-            candidates.withColumn("c", canonicalize_struct_udf("url_canon"))
-            .withColumn("host", F.col("c.host"))
-            .withColumn("cand_domain", F.col("c.domain"))
-            .drop("c")
-        )
-        if self.allowed_hosts is not None:
-            hosts_df = self.spark.createDataFrame(
-                [(h,) for h in sorted(self.allowed_hosts)], "host string")
-            candidates = candidates.join(F.broadcast(hosts_df), "host", "semi")
-        if cfg.blocked_domains:
-            # domains-sized list -> broadcast anti-join on the registered
-            # domain already computed by the fused canonicalize crossing
-            bl = self.spark.createDataFrame(
-                [(d,) for d in sorted(set(cfg.blocked_domains))],
-                "cand_domain string")
-            candidates = candidates.join(
-                F.broadcast(bl), "cand_domain", "left_anti")
-        if cfg.trap_filter:
-            # one codegen Filter over the canonical URL — traps die before
-            # hashing/dedup, so they never cost a url_seen probe or row
-            from .traps import trap_cols
-
-            score = trap_cols(F.col("url_canon"),
-                              max_depth=cfg.trap_max_depth,
-                              max_params=cfg.trap_max_params)["trap_score"]
-            candidates = candidates.filter(score < cfg.trap_threshold)
-        candidates = candidates.withColumn("url_hash", F.xxhash64("url_canon"))
-
-        # --- dedup: one Bloom pass (no false negatives) flags the
-        # candidates and folds them into the next blobs, then the exact
-        # url_seen check for the maybe-seen candidates only. Cached: the
-        # frontier append and the bloom_shards write both read it, so the
-        # links -> canonicalize -> bloom Arrow chain runs once ---
+        # --- discover -> one Bloom pass -> new-URL check. The pass is
+        # cached: the frontier append and the bloom_shards write both read
+        # it, so the links -> canonicalize -> Bloom Arrow chain runs once;
+        # new_rows feeds three writes ---
+        links, new_pag_state, new_chain_rows = self._links(fetched, round_no)
         bloom_pass = self._cache(probe_and_fold(
-            candidates, self._read("bloom_shards"),
+            candidates(links, cfg, self.allowed_hosts),
+            self._read("bloom_shards"),
             cfg.bloom_n_shards, cfg.bloom_m_bits, cfg.bloom_k))
         flagged, next_blobs = split_pass(bloom_pass)
-        definite_new = flagged.filter(~F.col("maybe_seen")).drop("maybe_seen")
-        confirmed_new = confirm_new(
-            flagged.filter(F.col("maybe_seen")).drop("maybe_seen"),
-            self.store.url_seen.read(self.spark, self._snapshots["url_seen"]))
-        new_urls = definite_new.unionByName(confirmed_new)
-        # cached: new_rows feeds three writes — without the cache the whole
-        # links->bloom->anti-join chain re-executes per consumer
-        new_rows = self._cache(
-            new_urls.withColumnRenamed("cand_domain", "domain")
-            .withColumn("priority", F.lit(cfg.default_priority))
-            .withColumn("attempts", F.lit(0))
-            .withColumn("round_added", F.lit(round_no))
-            .withColumn("state", F.lit("pending"))
-            .select([f.name for f in FRONTIER_SCHEMA.fields]))
+        new_rows = self._cache(frontier_rows(
+            new_urls(flagged, self.seen_hashes()),
+            F.lit(cfg.default_priority), round_no))
 
-        # --- frontier state transitions: O(round work) DELTAS, never a
-        # full-frontier join/rewrite. A terminal delta (done/failed/
-        # blocked*) masks its row out of the pending view until the next
-        # compaction archives it; a miss below max_attempts stays pending
-        # with attempts+1 ---
-        found, missed = F.col("found"), F.col("attempts") + 1
-        updates_df = fetched.select(
-            "url_hash",
-            F.when(found, "done").when(missed >= cfg.max_attempts, "failed")
-            .otherwise("pending").alias("state"),
-            F.when(found, F.col("attempts")).otherwise(missed)
-            .alias("attempts"))
-        for df, st in ((blocked, "blocked"), (gdpr_blocked, "blocked_gdpr")):
-            if df is not None:
-                updates_df = updates_df.unionByName(
-                    df.select("url_hash", F.lit(st).alias("state"), "attempts"))
-        updates_df = updates_df.withColumn("round", F.lit(round_no))
-
-        # --- crawl log (the reproducible order fixture) ---
-        log = fetched.select(
-            F.lit(round_no).alias("round"), "domain", "seq", "url_canon",
-            "url_hash", "priority",
-            F.when(F.col("found"), "fetched").otherwise("miss").alias("status"),
-        )
-
-        # --- domain adaptation + breaker state for the next round ---
-        # full-outer merge so UNSCHEDULED domains (e.g. quarantined) keep
-        # their state — matching the oracle simulator's persistent dict
-        round_err = (
-            fetched.groupBy("domain")
-            .agg(F.count("*").alias("att"),
-                 F.sum((~F.col("found")).cast("long")).alias("errs"),
-                 F.sum(F.col("found").cast("long")).alias("succ"))
-            .withColumn("r_err_rate", F.col("errs") / F.col("att"))
-        )
-        prev_s = prev_state.select(
-            "domain",
-            F.col("err_rate").alias("p_err_rate"),
-            F.col("consec_err").alias("p_consec"),
-            F.col("breaker_failures").alias("p_breaker"),
-            F.col("quarantined_until").alias("p_quar"),
-            F.col("rate_mult").alias("p_mult"),
-            F.col("n_fetch_total").alias("p_fetch_total"),
-            F.col("n_err_total").alias("p_err_total"),
-        )
-        merged = round_err.join(prev_s, "domain", "full")
-        attempted = F.col("att").isNotNull()
-        new_consec = F.when(
-            attempted,
-            next_consec_errors(F.col("r_err_rate"), F.col("p_consec"), pol),
-        ).otherwise(F.coalesce("p_consec", F.lit(0)))
-        # recordSuccess resets the failure count on ANY success
-        # (performance.go:503-510), rendered round-wise
-        new_breaker = (
-            F.when(~attempted, F.coalesce("p_breaker", F.lit(0)))
-            .when(F.col("succ") > 0, F.lit(0))
-            .otherwise(F.coalesce("p_breaker", F.lit(0)) + F.col("errs"))
-        ).cast("int")
-        if cfg.quarantine_max_failures > 0:
-            # (re-)open only on an attempted round's failures — an already
-            # open, unattempted domain keeps its expiry so it can half-open
-            new_quar = (
-                F.when(attempted & (new_breaker >= cfg.quarantine_max_failures),
-                       F.lit(round_no + cfg.quarantine_reset_rounds))
-                .otherwise(F.col("p_quar"))
-            ).cast("int")
-        else:
-            new_quar = F.lit(None).cast("int")
-        # interval multiplier for the strategy family: min-change-gated
-        # recurrence from this round's stats (updateAdaptiveRate,
-        # ratelimiter.go:363-409 evaluated round-wise; consumed next round
-        # by strategy_tokens_from_state)
-        new_mult = F.when(
-            attempted,
-            interval_multiplier(F.col("r_err_rate"), new_consec,
-                                F.col("p_mult"), pol),
-        ).otherwise(F.coalesce("p_mult", F.lit(1.0)))
-        new_domain_state = merged.select(
-            "domain",
-            F.when(attempted, F.col("r_err_rate"))
-            .otherwise(F.col("p_err_rate")).alias("err_rate"),
-            new_consec.cast("int").alias("consec_err"),
-            new_breaker.alias("breaker_failures"),
-            new_quar.alias("quarantined_until"),
-            new_mult.cast("double").alias("rate_mult"),
-            (F.coalesce("p_fetch_total", F.lit(0))
-             + F.coalesce("att", F.lit(0))).cast("long")
-            .alias("n_fetch_total"),
-            (F.coalesce("p_err_total", F.lit(0))
-             + F.coalesce("errs", F.lit(0))).cast("long")
-            .alias("n_err_total"),
-        )
-
-        # --- checkpoint + round commit: appends extend the committed
-        # snapshots, so crashed rounds can't leak uncommitted data. Counts are observed on the writes: each delta is one
-        # pending-view row and no new row was seen, so pending moves by
-        # exactly new_urls - terminal transitions ---
+        # --- writes + round commit: appends extend the committed
+        # snapshots, so crashed rounds can't leak uncommitted data. Counts
+        # are observed on the writes: each delta is one pending-view row
+        # and no new row was seen, so pending moves by exactly
+        # new_urls - terminal transitions ---
         new_rows_w, new_obs = _observed(new_rows, new_urls=F.count(F.lit(1)))
         updates_w, upd_obs = _observed(
-            updates_df, terminal=F.count_if(F.col("state") != "pending"))
+            transitions(fetched, blocked, gdpr_blocked, cfg, round_no),
+            terminal=F.count_if(F.col("state") != "pending"))
         log_w, log_obs = _observed(
-            log, scheduled=F.count(F.lit(1)),
+            crawl_log_rows(fetched, round_no), scheduled=F.count(F.lit(1)),
             fetched=F.count_if(F.col("status") == "fetched"))
         snaps = dict(self._snapshots)
         if (cfg.frontier_compact_every > 0
@@ -784,7 +779,8 @@ class CrawlEngine:
             self.spark, new_rows.select("url_hash"), round_no, n_rows=n_new)
         # one blob per shard (bloom.py invariant), from the cached pass
         snaps["bloom_shards"] = self.store["bloom_shards"].overwrite(next_blobs)
-        snaps["domain_state"] = self.store["domain_state"].overwrite(new_domain_state)
+        snaps["domain_state"] = self.store["domain_state"].overwrite(
+            next_domain_state(fetched, prev_state, cfg, round_no))
         if new_pag_state is not None:
             snaps["pagination_state"] = self.store["pagination_state"].overwrite(
                 new_pag_state)
@@ -794,7 +790,8 @@ class CrawlEngine:
             snaps["pagination_chains"] = self._append(
                 "pagination_chains", new_chain_rows)
         snaps["crawl_log"] = self._append("crawl_log", log_w)
-        snaps["lineage_metrics"] = self._append("lineage_metrics", metrics)
+        snaps["lineage_metrics"] = self._append(
+            "lineage_metrics", lineage_rows(fetched, round_no))
 
         logged = log_obs.get
         stats = {
@@ -808,6 +805,18 @@ class CrawlEngine:
         self.store.commit_round(round_no, snaps, stats)
         self._snapshots, self._pending = snaps, stats["pending"]
         return stats
+
+    def _links(self, fetched: DataFrame, round_no: int
+               ) -> tuple[DataFrame, DataFrame | None, DataFrame | None]:
+        """The URLs the fetched pages lead to (a `url` column), plus the
+        pagination state and chain rows a cursor strategy advances (None
+        otherwise)."""
+        pages = fetched.filter("found").select("url_canon", "html")
+        spec = self.cfg.pagination_spec
+        if spec is not None and spec.type in ("cursor", "next_button"):
+            return self._pagination_links(pages, spec, round_no)
+        links = extract_links_df(pages, selector=self.cfg.link_selector)
+        return links.select(F.col("out_url_canon").alias("url")), None, None
 
     def _pagination_links(
             self, fetched_pages: DataFrame, spec: PaginationSpec,
@@ -827,9 +836,9 @@ class CrawlEngine:
         against ITS previous cursor. Both joins are broadcast (state is
         O(live chains), key-width).
 
-        Returns (links in (src_url_canon, out_url_canon) shape,
-        new pagination_state, new pagination_chains rows —
-        the latter two None for next_button)."""
+        Returns (the next URLs as a `url` column, new pagination_state,
+        new pagination_chains rows — the latter two None for
+        next_button)."""
         nxt = extract_next_urls_df(fetched_pages, spec, page_num=round_no)
         new_state = new_chains = None
         if spec.type == "cursor":
@@ -870,26 +879,9 @@ class CrawlEngine:
                     F.xxhash64(normalize_url_udf("next_url")).alias("url_hash"),
                     "chain_id")
             )
-        links = (
-            nxt.filter(F.col("next_url").isNotNull())
-            .select(
-                F.col("src_url").alias("src_url_canon"),
-                normalize_url_udf("next_url").alias("out_url_canon"),
-            )
-        )
+        links = (nxt.filter(F.col("next_url").isNotNull())
+                 .select(F.col("next_url").alias("url")))
         return links, new_state, new_chains
-
-    def _domain_delays_df(self) -> DataFrame:
-        """Max robots crawl-delay per registered domain (built once)."""
-        delays: dict[str, float] = {}
-        for host, rules in self.robots.by_host.items():
-            d = rules.get_crawl_delay(self.cfg.user_agent)
-            if d > 0:
-                dom = registered_domain(host)
-                delays[dom] = max(delays.get(dom, 0.0), d)
-        return self.spark.createDataFrame(
-            [(k, float(v)) for k, v in sorted(delays.items())],
-            "domain string, crawl_delay_s double")
 
     # ------------------------------------------------------------------
     # full crawl

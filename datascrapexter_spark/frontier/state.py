@@ -104,9 +104,9 @@ class BucketedSeenTable:
     Per-round write cost is O(new URLs this round): one task per
     SEEN_ROWS_PER_WRITE_TASK new hashes, each writing one file per bucket
     it holds (a quiet round: one task, at most n_buckets files). Long
-    crawls accumulate one thin partition per round — production Iceberg
-    bin-packs those in maintenance (`compact()` here); the round loop
-    itself never rewrites history.
+    crawls accumulate one thin partition per round (production Iceberg
+    bin-packs those in maintenance); the round loop itself never rewrites
+    history.
 
     Sizing: pick n_buckets so one bucket's hashes stream through one task
     comfortably — at 10^10 URLs and 4096 buckets a bucket is ~20 MB of
@@ -146,14 +146,14 @@ class BucketedSeenTable:
                     json.dump({"n_buckets": self.n_buckets}, fh)
 
     def overwrite_all(self, spark: SparkSession, df: DataFrame,
-                      round_no: int = 0) -> int:
-        """Fresh crawl: drop any previous layout and write round 0."""
-        import shutil
-
+                      n_buckets: int) -> int:
+        """Fresh crawl: drop any previous layout and write `df` as round 0
+        into `n_buckets` buckets."""
         if spark.catalog.tableExists(self.table):
             spark.sql(f"DROP TABLE IF EXISTS {self.table}")
         shutil.rmtree(self.dir, ignore_errors=True)
-        return self.append_round(spark, df, round_no, idempotent=False)
+        self.n_buckets = n_buckets
+        return self.append_round(spark, df, 0, idempotent=False)
 
     def append_round(self, spark: SparkSession, df: DataFrame,
                      round_no: int, idempotent: bool = True,
@@ -164,8 +164,6 @@ class BucketedSeenTable:
         uncommitted files can never double up. `n_rows`, the delta's
         observed row count, sizes the write (unknown: a task per bucket);
         a one-task write coalesces, so pass a cheap-to-read `df`."""
-        import shutil
-
         self._ensure(spark)
         part = os.path.join(self.dir, f"round={round_no}")
         if idempotent and os.path.exists(part):
@@ -193,17 +191,6 @@ class BucketedSeenTable:
         if max_round is not None:
             df = df.filter(F.col("round") <= F.lit(int(max_round)))
         return df.select("url_hash")
-
-    def compact(self, spark: SparkSession, committed_round: int) -> None:
-        """Maintenance only (NOT called from the round loop — it rewrites
-        O(seen)): fold all committed round partitions into round=0,
-        preserving bucketing. The Iceberg equivalent is rewrite_data_files
-        bin-packing."""
-        snap = self.read(spark, committed_round)
-        if snap is None:
-            return
-        rows = snap.localCheckpoint(eager=True)
-        self.overwrite_all(spark, rows, 0)
 
 
 class StateStore:

@@ -1,9 +1,10 @@
 """Lightweight HTML DOM on the stdlib.
 
-The sandbox has no lxml/selectolax/bs4, so this module supplies the DOM the
-extraction engine parses inside its Arrow-batch UDFs (one parser per batch
-loop iteration; construction cost is amortized by Arrow batching, and the
-tree is plain Python objects — cheap to build, no FFI).
+This module is the package's only HTML parser, so every selector reads one
+tree whatever else is installed. The extraction engine parses with it
+inside its Arrow-batch UDFs (one parser per batch loop iteration;
+construction cost is amortized by Arrow batching, and the tree is plain
+Python objects — cheap to build, no FFI).
 
 Behavior intentionally mirrors the parts of Go's x/net/html tree builder the
 reference relies on (via goquery — /root/reference/internal/scraper/
@@ -32,8 +33,8 @@ element's pre-order position and the position of its last descendant.
 A parsed document does not change after `parse_html` returns: nothing in
 the package appends to, removes from or re-parents a parsed tree. The
 selector engine relies on this: a parentless root keeps its `DocIndex`
-(built while parsing, or by one walk on first use for a tree from another
-backend) and never rebuilds it.
+(built while parsing, or by one walk on first use for a hand-built tree)
+and never rebuilds it.
 """
 
 from __future__ import annotations
@@ -387,8 +388,8 @@ def _build_one_pass(html: str) -> Node | None:
 
 
 def build_stdlib_tree(html: str) -> Node:
-    """The stdlib tree build — the always-available parity backend: the
-    one-pass builder, else html.parser for the whole document."""
+    """The tree build: the one-pass builder, else html.parser for the
+    whole document."""
     root = _build_one_pass(html)
     if root is None:
         builder = _TreeBuilder()
@@ -398,12 +399,10 @@ def build_stdlib_tree(html: str) -> Node:
     return root
 
 
-def parse_html(html: str | bytes, backend: str | None = None) -> Node:
-    """Parse HTML into a document Node via the active parser backend
-    (backends.py: selectolax/lxml when importable — the 100-TB hot path —
-    else this module's stdlib builder; same Node contract either way)."""
+def parse_html(html: str | bytes) -> Node:
+    """Parse HTML into a document Node (build_stdlib_tree). There is one
+    builder on purpose: every selector's byte-identical output rests on
+    the tree it reads."""
     if isinstance(html, (bytes, bytearray)):
         html = bytes(html).decode("utf-8", errors="replace")
-    from .backends import get_parser  # deferred: backends imports Node
-
-    return get_parser(backend)(html)
+    return build_stdlib_tree(html)

@@ -5,7 +5,7 @@ metadata struct; decode / feature-extract / resize / frame-sample run as
 Arrow-batched pandas functions over `mapInPandas` so one Python call
 handles a whole batch and the binary column never round-trips per row.
 
-The *codec* step is a pluggable seam (the html/backends.py pattern):
+The *codec* step is a pluggable seam:
 Pillow registers itself when importable, deployments can
 `register_codec()` their own (libvips/ffmpeg), and `DSX_IMAGE_CODEC`
 pins one explicitly (error if missing — never a silent fallback). This
@@ -66,7 +66,7 @@ def _fake_decode_meta(blob: bytes) -> tuple[int, int, int]:
     return width, height, n_frames
 
 
-# -- codec seam (the html/backends.py pattern applied to image decode) ----
+# -- codec seam (image decode) ----------------------------------------------
 #
 # Selection order: explicit `codec=` > env DSX_IMAGE_CODEC (error if the
 # named codec is unavailable — a silent fallback would hide a missing

@@ -127,10 +127,9 @@ class CrawlSimulator:
 
     def _domain_delay(self, domain: str) -> float:
         delay = 0.0
-        for host in self.robots.by_host:
+        for host, rules in self.robots.by_host.items():
             if registered_domain(host) == domain:
-                delay = max(delay,
-                            self.robots.crawl_delay(self.cfg.user_agent, host))
+                delay = max(delay, rules.get_crawl_delay(self.cfg.user_agent))
         return delay
 
     # ------------------------------------------------------------------

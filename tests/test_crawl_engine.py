@@ -277,7 +277,8 @@ def test_seen_probe_plan_never_moves_seen(spark, tmp_path):
 
     table = BucketedSeenTable(str(tmp_path), n_buckets=8)
     table.overwrite_all(
-        spark, spark.range(0, 20000).select(F.xxhash64("id").alias("url_hash")))
+        spark, spark.range(0, 20000).select(F.xxhash64("id").alias("url_hash")),
+        8)
     session = spark.newSession()  # the lowered threshold stays local
     session.conf.set("spark.sql.autoBroadcastJoinThreshold", "1k")
     for s, lo, hi in ((spark, 19980, 20020), (session, 10000, 30000)):

@@ -150,15 +150,18 @@ def test_manifest_commit_is_atomic(spark, tmp_path):
 
 
 def test_rules_array_gate_matches_python_twin(spark):
-    """allowed_rules_col over the broadcast rules table must agree with
-    RobotsIndex.allowed for every (ua, host, path) — including UA-override
-    replacement, first-match-wins ordering, hosts without robots, and empty
-    Allow patterns — and its plan must contain NO Python UDF."""
+    """allowed_rules_col over the broadcast rules table, and robots_gate
+    (the engine's gate, which parses the path from url_canon), must agree
+    with RobotsIndex.allowed for every (ua, host, path) — including
+    UA-override replacement, first-match-wins ordering, hosts without
+    robots, and empty Allow patterns — and neither plan may contain a
+    Python UDF."""
     from pyspark.sql import functions as F
 
     from datascrapexter_spark.frontier.robots import (
         RobotsIndex,
         allowed_rules_col,
+        robots_gate,
         rules_array_df,
     )
 
@@ -182,13 +185,21 @@ def test_rules_array_gate_matches_python_twin(spark):
                         allowed_rules_col(F.col("path"), F.col("rules")))
         )
         got = {(r["host"], r["path"]): r["allowed"] for r in df.collect()}
+        gate = robots_gate(spark.createDataFrame(
+            [(f"http://{h}{p}", h, p) for h, p in rows],
+            "url_canon string, host string, path_in string"), rules)
+        gated = {(r["host"], r["path_in"]): r["allowed"]
+                 for r in gate.collect()}
         for h in hosts:
             for p in paths:
-                assert got[(h, p)] == idx.allowed(ua, h, p), (ua, h, p)
+                want = idx.allowed(ua, h, p)
+                assert got[(h, p)] == want, (ua, h, p)
+                assert gated[(h, p)] == want, ("robots_gate", ua, h, p)
 
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "BroadcastExchange" in plan or "Broadcast" in plan
-        assert "Python" not in plan and "ArrowEval" not in plan
+        for d in (df, gate):
+            plan = d._jdf.queryExecution().executedPlan().toString()
+            assert "BroadcastExchange" in plan or "Broadcast" in plan
+            assert "Python" not in plan and "ArrowEval" not in plan
 
 
 # ---------------------------------------------------------------------------

@@ -72,6 +72,8 @@ def test_implied_tbody():
 def test_auto_close_li():
     doc = parse_html("<ul><li>a<li>b<li>c</ul>")
     assert [n.text() for n in select(doc, "li")] == ["a", "b", "c"]
+    ul = select(doc, "ul")[0]  # siblings, not nested
+    assert [c.tag for c in ul.element_children()] == ["li", "li", "li"]
 
 
 def test_void_elements():

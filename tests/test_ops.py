@@ -320,9 +320,9 @@ def test_multimodal_real_codec_refused_at_plan_build(spark):
 
 
 def test_multimodal_codec_seam_contract(spark, monkeypatch):
-    """Mirror of test_html_backends for the image-codec seam: env pin
-    errors on a missing codec; a registered codec is selected by
-    preference and runs inside the mapInPandas pass."""
+    """The image-codec seam: env pin errors on a missing codec; a
+    registered codec is selected by preference and runs inside the
+    mapInPandas pass."""
     df = spark.createDataFrame([(1, b"abcd")], "id long, payload binary")
     monkeypatch.setenv("DSX_IMAGE_CODEC", "libvips-not-installed")
     with pytest.raises(ValueError, match="not available"):

@@ -21,7 +21,7 @@ from datascrapexter_spark.frontier.state import BucketedSeenTable
 def seen(spark, tmp_path):
     t = BucketedSeenTable(str(tmp_path), n_buckets=8)
     base = spark.range(0, 20000).select(F.xxhash64("id").alias("url_hash"))
-    t.overwrite_all(spark, base, round_no=0)
+    t.overwrite_all(spark, base, 8)
     t.append_round(
         spark,
         spark.range(20000, 30000).select(F.xxhash64("id").alias("url_hash")),
